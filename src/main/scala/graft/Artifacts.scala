@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 /** Session-lifetime artifact registry with EXPLICIT release.
   *
@@ -15,15 +14,19 @@ import org.apache.spark.storage.StorageLevel
   * storage and driver broadcasts must also be RELEASABLE: a long-lived
   * session that has moved past a corpus should not accrete dead caches
   * forever. This registry is the one place all of those live, keyed by
-  * (session, artifact key), each with a release hook (unpersist /
-  * broadcast destroy) that [[release]] runs and forgets.
+  * (session, artifact key), each with a release hook (drop checkpoint
+  * blocks or files / destroy broadcast) that [[release]] runs and forgets.
+  * DataFrame artifacts are eager checkpointed leaves ([[checkpointedDf]],
+  * [[leafDf]]), never lazy `persist` caches: AQE's concurrent stage
+  * submission races a lazy persist and re-runs its build once per
+  * consuming stage.
   *
   * Assumptions (documented, test-pinned in ArtifactsSpec):
   *  - artifact inputs are immutable per (session, dir) — re-deriving after
   *    the underlying files changed requires a [[release]] first;
   *  - release is cooperative: callers stop using handed-out DataFrames
-  *    before releasing (Spark unpersist is safe mid-query — it degrades
-  *    to recompute — but a destroyed broadcast is not).
+  *    and broadcasts before releasing (a released leaf has no lineage to
+  *    recompute from, and a destroyed broadcast cannot be read).
   */
 object Artifacts {
 
@@ -66,13 +69,6 @@ object Artifacts {
     } finally buildLock.unlock()
   }
 
-  /** The common case: a persisted DataFrame whose release is unpersist. */
-  def cachedDf(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    cached[DataFrame](s, key) {
-      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-      (df, () => { df.unpersist(blocking = true); () })
-    }
-
   /** A materialized-LEAF artifact: eager `localCheckpoint` instead of
     * persist. The returned DataFrame's logical plan is a single
     * `LogicalRDD` over the checkpointed blocks — the derivation lineage
@@ -85,9 +81,9 @@ object Artifacts {
     * leaf makes every consumer's plan small, which is also the honest
     * 100 TB shape — a production index is read from storage, not
     * re-derived through live lineage. Release unpersists the checkpoint
-    * blocks (the leaf DataFrame is NOT usable afterwards — unlike
-    * [[cachedDf]] there is no lineage to recompute from; the next
-    * [[cached]] call rebuilds from scratch).
+    * blocks (the leaf DataFrame is NOT usable afterwards — there is no
+    * lineage to recompute from; the next [[cached]] call rebuilds from
+    * scratch).
     */
   def checkpointedDf(s: SparkSession, key: String)(
       build: => DataFrame): DataFrame =
@@ -124,10 +120,20 @@ object Artifacts {
   }
 
   /** A reliable (file-backed) checkpoint leaf + a release hook that
-    * deletes its files — [[leafDf]]'s cluster-safe arm and the body of
-    * [[reliableCheckpointDf]].
+    * deletes its files — [[leafDf]]'s cluster-safe arm. A
+    * `localCheckpoint` leaf trades lineage for blocks that are NOT
+    * recoverable if an executor dies — irrelevant on local[n], but on a
+    * real cluster a lost executor mid-session kills the artifact with no
+    * rebuild path short of release+retrain (ArtifactsSpec pins exactly
+    * that recovery path for the local variant). This arm pays one
+    * durable storage write and every read recomputes from the checkpoint
+    * FILES, so executor churn cannot lose it — the halfway point between
+    * an in-memory leaf and a full table write
+    * ([[graft.operators.Similarity.writeIvfIndex]], the production form).
+    * Sets a JVM-temp checkpoint dir if the session has none (local runs;
+    * a cluster deployment points spark.checkpoint.dir at shared storage).
     */
-  def reliableLeaf(df: DataFrame): (DataFrame, () => Unit) = {
+  private def reliableLeaf(df: DataFrame): (DataFrame, () => Unit) = {
     val s = df.sparkSession
     if (s.sparkContext.getCheckpointDir.isEmpty)
       s.sparkContext.setCheckpointDir(java.nio.file.Files
@@ -145,28 +151,8 @@ object Artifacts {
     (chk, release)
   }
 
-  /** Cluster-safe twin of [[checkpointedDf]]: a RELIABLE checkpoint
-    * (files under the session's checkpoint directory — HDFS/object store
-    * on a real cluster) instead of executor-local blocks. A
-    * `localCheckpoint` leaf trades lineage for blocks that are NOT
-    * recoverable if an executor dies — irrelevant on local[n], but on a
-    * real cluster a lost executor mid-session kills the artifact with no
-    * rebuild path short of release+retrain (ArtifactsSpec pins exactly
-    * that recovery path for the local variant). This variant pays one
-    * durable storage write and every read recomputes from the checkpoint
-    * FILES, so executor churn cannot lose it — the halfway point between
-    * an in-memory leaf and a full table write
-    * ([[graft.operators.Similarity.writeIvfIndex]], the production form).
-    * Sets a JVM-temp checkpoint dir if the session has none (local runs;
-    * a cluster deployment points spark.checkpoint.dir at shared storage).
-    * Release deletes the checkpoint files.
-    */
-  def reliableCheckpointDf(s: SparkSession, key: String)(
-      build: => DataFrame): DataFrame =
-    cached[DataFrame](s, key) { reliableLeaf(build) }
-
   /** Release every artifact registered for `s`: run each release hook
-    * (unpersist cached plans, destroy broadcasts) and forget the entries,
+    * (drop checkpoint blocks, destroy broadcasts) and forget the entries,
     * so the next query rebuilds from scratch. Call when a session is done
     * with a corpus (or before stopping it — entries keyed by a stopped
     * session would otherwise stay strongly referenced here).

@@ -1617,7 +1617,7 @@ object Relational {
     * Exactness discipline: the only float work is Σ m_c·c·ln(c) over the
     * count-of-counts table — ln on INTEGER args (engine-agreeing, the
     * q322 precedent) folded in c order via the order-pinned
-    * list/aggregate pattern (kmRecompute's), so the double is
+    * list/aggregate pattern (lloydCodebooks'), so the double is
     * bit-identical under any shuffle order; everything before it is
     * BIGINT counts.
     *

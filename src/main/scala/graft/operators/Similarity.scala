@@ -1033,7 +1033,7 @@ object Similarity {
     * oracle gates already pin for the frozen-codebook path.
     */
   private[operators] def kmAssign(e: DataFrame, cents: DataFrame): DataFrame = {
-    val (cellsLit, censLit) = collectedCodebook(cents, "kmAssign")
+    val (cellsLit, censLit) = codebookLits(collectedCodebooks(cents, "kmAssign")(0))
     // r18: the argmin is the codegen [[graft.functions.NearestCellKernel]]
     // over the codebook as two flat literals (ids + row-major centroid
     // matrix). The former `array_min(transform(typedLit(...), ...))` was
@@ -1067,13 +1067,16 @@ object Similarity {
   private[operators] def fanOut(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-  /** The (cells, flat-centroid-matrix) literal pair every
+  /** Driver-side codebooks of a trained `(m, cell, cen)` frame, per
+    * subspace `m` in ascending cell order (a frame without `m` is the
+    * single codebook m = 0) — the one collect behind every
     * literal-codebook kernel ([[kmAssign]]'s argmin, [[probeSelection]]'s
-    * top-p ring) rides — one definition of the collect, the
-    * cen-is-array<double> guard, and the 1024-cell router-metadata bound.
+    * top-p ring, the PQ code pass, the frozen append routers), with the
+    * cen-is-array<double> guard and the 1024-cell router-metadata bound
+    * per codebook.
     */
-  private[operators] def collectedCodebook(cents: DataFrame,
-      who: String): (Column, Column) = {
+  private[operators] def collectedCodebooks(cents: DataFrame,
+      who: String): Map[Int, Seq[(Int, Seq[Double])]] = {
     // Guard the literal-codebook contract loudly: the collected frame
     // rides the plan as a typedLit, which is only sane for router-sized
     // codebooks, and getSeq[Double] would otherwise fail opaquely at
@@ -1085,42 +1088,73 @@ object Similarity {
         s"$who requires cen: array<double> (got $other); " +
           "cast the centroid column before assignment")
     }
-    val rows = cents.select(col("cell"), col("cen")).collect()
-    require(rows.length <= 1024,
-      s"$who embeds the codebook as a plan literal; ${rows.length} " +
-        "centroids exceeds the 1024-cell router-metadata bound — use a " +
-        "broadcast join for codebooks this large")
-    val arr = rows
-      .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-    (typedLit(arr.map(_._1)), typedLit(arr.flatMap(_._2)))
+    val m = if (cents.columns.contains("m")) col("m") else lit(0)
+    val cbs = cents.select(m, col("cell"), col("cen")).collect()
+      .groupBy(_.getInt(0)).map { case (m, rs) =>
+        m -> rs.map(r => (r.getInt(1), r.getSeq[Double](2))).sortBy(_._1).toSeq
+      }
+    cbs.values.foreach { cb =>
+      require(cb.length <= 1024,
+        s"$who embeds the codebook as a plan literal; ${cb.length} " +
+          "centroids exceeds the 1024-cell router-metadata bound — use a " +
+          "broadcast join for codebooks this large")
+    }
+    cbs.withDefaultValue(Seq.empty)
   }
 
-  /** Centroid recompute with ORDER-PINNED sums: each cell collects its
-    * member rows sorted by vec_id and the codegen
-    * [[graft.functions.CellMeanKernel]] folds every dimension
-    * left-to-right in that order, so the mean is bit-identical to the
-    * oracle's `list(v ORDER BY vec_id)` fold — no dependence on shuffle
-    * order, hence no float divergence and no assignment flips at cell
-    * boundaries.
-    *
-    * r18: one groupBy at the (cell) grain replaces the r17 posexplode
-    * shape (n·d (cell, j, struct) rows through the exchange, an
-    * interpreted `aggregate()` HOF per (cell, j), and a second
-    * groupBy(cell) to re-assemble the array): members now shuffle as
-    * whole rows — d× fewer, same payload bytes — and the per-dimension
-    * fold order is IDENTICAL (ascending vec_id within each j), so every
-    * downstream hash survives. The `size(embedding) > 0` guard keeps the
-    * degenerate arms exact: posexplode emitted nothing for an empty or
-    * null embedding, so such rows must not surface a cell here either.
+  /** A collected codebook as the (cells, flat row-major centroid matrix)
+    * literal pair the codegen nearest-cell kernels read.
     */
-  private def kmRecompute(assigned: DataFrame): DataFrame = {
-    VectorFunctions.register(assigned.sparkSession)
-    assigned
+  private def codebookLits(cb: Seq[(Int, Seq[Double])]): (Column, Column) =
+    (typedLit(cb.map(_._1)), typedLit(cb.flatMap(_._2)))
+
+  /** ONE Lloyd stage of k-means for `mm` subspace codebooks at once — the
+    * trainer behind every index here: the IVF coarse quantizer (mm = 1,
+    * where the one slice is the whole vector), the PQ and residual
+    * codebooks, and the frozen base-shard and IMI-half codebooks. Seeds
+    * are the first k rows of `seedSrc` (vec_id < k), collected once and
+    * sliced per subspace on the driver (float→double widening is exact,
+    * and `Seq.slice` matches SQL `slice`). One corpus pass assigns every
+    * row's mm slices with the [[graft.functions.NearestCellKernel]]
+    * argmin over the seed literals, and one (m, cell)-grain aggregation
+    * folds each cell's members with ORDER-PINNED sums: members collected
+    * sorted by vec_id, every dimension folded left-to-right by the codegen
+    * [[graft.functions.CellMeanKernel]], so each mean is bit-identical to
+    * the oracle's `list(v ORDER BY vec_id)` fold — no dependence on
+    * shuffle order, hence no float divergence and no assignment flips at
+    * cell boundaries. Members shuffle as whole rows at the (m, cell)
+    * grain, and all mm codebooks train in the same corpus pass. The
+    * `size > 0` guard keeps the degenerate arms exact: an empty or null
+    * slice surfaces no cell. Returns `(m, cell, cen)`.
+    */
+  private def lloydCodebooks(seedSrc: DataFrame, corpus: DataFrame,
+      k: Int, mm: Int): DataFrame = {
+    val sd = pqSubDim(mm)
+    require(k <= 1024,
+      s"lloydCodebooks embeds the seed codebook as a plan literal; k=$k " +
+        "exceeds the 1024-cell router-metadata bound")
+    VectorFunctions.register(corpus.sparkSession)
+    val seeds = seedSrc.where(col("vec_id") < k)
+      .select(col("vec_id").cast("int"), col("embedding")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
+    val slices = (0 until mm).map { m =>
+      val (cellsLit, censLit) = codebookLits(seeds.map { case (cell, emb) =>
+        (cell, emb.slice(m * sd, m * sd + sd).map(_.toDouble))
+      })
+      val sub = slice(col("embedding"), m * sd + 1, sd)
+      struct(VectorFunctions.nearestCell(sub, cellsLit, censLit).as("cell"),
+        sub.as("embedding"))
+    }
+    fanOut(corpus)
+      .select(col("vec_id"), posexplode(array(slices: _*)))
+      .select(col("vec_id"), col("pos").as("m"),
+        col("col.cell").as("cell"), col("col.embedding").as("embedding"))
       .where(size(col("embedding")) > 0)
-      .groupBy(col("cell"))
+      .groupBy(col("m"), col("cell"))
       .agg(sort_array(collect_list(struct(col("vec_id"), col("embedding"))))
         .as("vals"))
-      .select(col("cell"), VectorFunctions.cellMean(col("vals")).as("cen"))
+      .select(col("m"), col("cell"),
+        VectorFunctions.cellMean(col("vals")).as("cen"))
   }
 
   private def kmOracleDist(emb: String, cen: String): String =
@@ -1155,12 +1189,13 @@ object Similarity {
     * k-means (k = [[kmKOf]](n) ~ √n) seeded with the first k vectors,
     * emitting every
     * vector's trained cell. This replaces q30/q41's "label stands in for
-    * a cell id" with the actual coarse quantizer: assignment is a
-    * broadcast-k cross join (linear scan, the at-scale path), recompute
-    * is a (cell, dim) aggregation. Production trains on a sample and
-    * assigns the full corpus; the fixed 2-iteration count keeps the whole
-    * computation one deterministic lazy plan — no driver convergence
-    * loop, no nondeterministic init.
+    * a cell id" with the actual coarse quantizer: assignment is the
+    * literal-codebook argmin ([[kmAssign]]), recompute one
+    * [[lloydCodebooks]] stage. Production trains on a sample and assigns
+    * the full corpus; the fixed 2-iteration count keeps training
+    * deterministic — no driver convergence loop, no nondeterministic
+    * init. The Spark side reads the final assignments straight from the
+    * shared trained index ([[kmTrained]]), which runs exactly this recipe.
     */
   private val q56 = GraftQuery(
     "q56_ivf_kmeans",
@@ -1171,16 +1206,7 @@ object Similarity {
        |), ${kmOracleAssign("c0", "a1")}, ${kmOracleRecompute("a1", "c1")},
        |${kmOracleAssign("c1", "a2")}
        |SELECT vec_id, cell FROM a2 ORDER BY vec_id""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
-    val e = fanOut(Tables.embeddings(s, d).select("vec_id", "embedding"))
-    val c0 = e.where(col("vec_id") < kmK(s, d))
-      .select(col("vec_id").cast("int").as("cell"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cen"))
-    val a1 = kmAssign(e, c0)
-    val c1 = kmRecompute(a1)
-    kmAssign(e, c1)
-      .select(col("vec_id"), col("cell"))
-      .orderBy("vec_id")
+    kmTrained(s, d)._2.select("vec_id", "cell").orderBy("vec_id")
   }
 
   /** q76: the dedup MANIFEST — the stage that makes q52's clusters
@@ -1239,10 +1265,11 @@ object Similarity {
   // ---- composed IVF search: train → assign → top-k (q71, q72) ----
 
   /** The trained coarse quantizer + assignments — the c0 → assign →
-    * recompute → assign pipeline q56 gates, reused by the composed search
+    * recompute → assign pipeline q56 gates (one [[lloydCodebooks]] stage
+    * at mm = 1, then [[kmAssign]]), reused by the composed search
     * queries. Returns (centroids, assignments).
     *
-    * Both outputs are PERSISTED: an index is a materialized artifact, not
+    * Both outputs are MATERIALIZED: an index is a stored artifact, not
     * a recomputed view — the search self-join references the assignments
     * on both sides, and without materialization each side re-runs the
     * whole training pipeline (the collect_list-backed recompute
@@ -1252,24 +1279,21 @@ object Similarity {
     * cache is the local[n] stand-in for what a 100 TB deployment does
     * explicitly: write the trained centroids + assignments to storage
     * once, then serve every probe from the materialized index.
-    */
-  /** One trained index per (session, dir): q71, q72, q83, q84, and
-    * [[writeIvfIndex]] all serve from the SAME cached artifact instead
-    * of each persisting a private copy — the artifact-reuse argument the
-    * docstring above makes, applied to the callers too. Registered in
-    * [[graft.Artifacts]], so `Artifacts.release(session)` unpersists both
-    * halves when the session is done with the corpus.
+    *
+    * One trained index per (session, dir): q56, q71, q72, q83, q84, and
+    * [[writeIvfIndex]] all serve from the SAME artifact instead of each
+    * materializing a private copy. Registered in [[graft.Artifacts]], so
+    * `Artifacts.release(session)` drops both halves when the session is
+    * done with the corpus.
     */
   private[operators] def kmTrained(s: SparkSession, d: String): (DataFrame, DataFrame) =
     graft.Artifacts.cached[(DataFrame, DataFrame)](s, s"ivf_trained:$d") {
-      val e = fanOut(Tables.embeddings(s, d).select("vec_id", "embedding"))
-      val c0 = e.where(col("vec_id") < kmK(s, d))
-        .select(col("vec_id").cast("int").as("cell"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cen"))
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
       // materialized LEAVES, not live lineage (Artifacts.leafDf scaladoc):
       // every IVF consumer's plan starts at the trained tables
-      val (c1, relC1) = graft.Artifacts.leafDf(kmRecompute(kmAssign(e, c0)))
-      val (a2, relA2) = graft.Artifacts.leafDf(kmAssign(e, c1))
+      val (c1, relC1) = graft.Artifacts.leafDf(
+        lloydCodebooks(e, e, kmK(s, d), 1).select("cell", "cen"))
+      val (a2, relA2) = graft.Artifacts.leafDf(kmAssign(fanOut(e), c1))
       ((c1, a2), () => { relC1(); relA2() })
     }
 
@@ -1428,6 +1452,40 @@ object Similarity {
       bruteForceTruth(Tables.embeddings(s, d).select("vec_id", "embedding"))
     }
 
+  /** Per-query recall@3 against an exact `truth` (vec_id, neighbor_id)
+    * top-3 — the one scorer behind the per-query recall audits (q79,
+    * q83, q92, q102, q107, q147, q155). Each
+    * tier is a (suffix, hits) pair, `hits` an approximate top-3 as
+    * (vec_id, neighbor_id); per query vector the result carries
+    * `n_hits<suffix>` and `recall<suffix>` = round(n_hits / 3, 6). One
+    * left join per tier and one groupBy(vec_id): the oracles'
+    * `LEFT JOIN ... GROUP BY 1` shape.
+    */
+  private def recallByQuery(truth: DataFrame,
+      tiers: (String, DataFrame)*): DataFrame = {
+    val joined = tiers.foldLeft(truth) { case (acc, (sfx, hits)) =>
+      acc.join(hits.select(col("vec_id"), col("neighbor_id"),
+        lit(1).as(s"hit$sfx")), Seq("vec_id", "neighbor_id"), "left")
+    }
+    val counts = tiers.map { case (sfx, _) =>
+      count(col(s"hit$sfx")).as(s"n_hits$sfx") }
+    val recalls = tiers.map { case (sfx, _) =>
+      round(col(s"n_hits$sfx").cast("double") / lit(3.0), 6).as(s"recall$sfx") }
+    joined.groupBy("vec_id").agg(counts.head, counts.tail: _*)
+      .select(col("vec_id") +: tiers.map { case (sfx, _) =>
+        col(s"n_hits$sfx") } ++: recalls: _*)
+      .orderBy("vec_id")
+  }
+
+  /** Mean recall@3 of an approximate top-3 (vec_id, neighbor_id) against
+    * an exact `truth` top-3 — the scalar the ScaleSpec recall curves pin.
+    */
+  private def meanRecall(truth: DataFrame, hits: DataFrame): Double =
+    truth.join(hits.select(col("vec_id"), col("neighbor_id"), lit(1).as("hit")),
+        Seq("vec_id", "neighbor_id"), "left")
+      .agg(avg(when(col("hit").isNotNull, 1.0).otherwise(0.0)).as("r"))
+      .head.getDouble(0)
+
   /** Oracle twin of [[bruteForceTruth]]: the tsim/truth CTE pair. */
   private def truthOracle: String =
     s"""tsim AS (
@@ -1451,7 +1509,7 @@ object Similarity {
     * r18: the selection is the codegen
     * [[graft.functions.NearestCellsKernel]] top-p ring over the
     * collected codebook riding the plan as flat literals ([[kmAssign]]'s
-    * recipe, same [[collectedCodebook]] guardrails). The r17 shape —
+    * recipe, same [[collectedCodebooks]] guardrails). The r17 shape —
     * `crossJoin(broadcast(centroids))` fanning every vector to k rows,
     * then a groupBy(vec_id) sorting k (pd, cell) structs per vector —
     * paid an n·k row blowup plus a full aggregation exchange PER PROBE
@@ -1464,7 +1522,8 @@ object Similarity {
       p: Int = ProbeP): DataFrame = {
     require(p >= 1, s"probe count must be >= 1, got $p")
     VectorFunctions.register(e.sparkSession)
-    val (cellsLit, censLit) = collectedCodebook(c1, "probeSelection")
+    val (cellsLit, censLit) =
+      codebookLits(collectedCodebooks(c1, "probeSelection")(0))
     e.select(col("vec_id"), col("embedding").as("emb_a"),
       explode(VectorFunctions.nearestCells(
         col("embedding"), cellsLit, censLit, p)).as("probe_cell"))
@@ -2070,13 +2129,7 @@ object Similarity {
       col("bucket").as("bucket_r"), col("embedding").as("emb_b"))
     val approx = rankTop3(l.join(r,
         col("bucket") === col("bucket_r") && col("vec_id") =!= col("neighbor_id")))
-      .select(col("vec_id"), col("neighbor_id"), lit(1).as("hit"))
-    truth.join(approx, Seq("vec_id", "neighbor_id"), "left")
-      .groupBy("vec_id")
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("vec_id"), col("n_hits"),
-        round(col("n_hits").cast("double") / lit(3.0), 6).as("recall_at_3"))
-      .orderBy("vec_id")
+    recallByQuery(truth, "" -> approx).withColumnRenamed("recall", "recall_at_3")
   }
 
   /** q82: quantized k-NN TRUTH TIER — neighbors ranked by cosine on the
@@ -2198,12 +2251,8 @@ object Similarity {
     val cand = a2.select(col("vec_id").as("neighbor_id"),
       col("cell").as("cell_b"), col("embedding").as("emb_b"))
     val probes = probeSelection(e.where(col("vec_id") < QueryBatch), c1, p)
-    val approx = rankTop3(probes.join(cand,
-        col("probe_cell") === col("cell_b") && col("vec_id") =!= col("neighbor_id")))
-      .select(col("vec_id"), col("neighbor_id"), lit(1).as("hit"))
-    truth.join(approx, Seq("vec_id", "neighbor_id"), "left")
-      .agg(avg(when(col("hit").isNotNull, 1.0).otherwise(0.0)).as("r"))
-      .head.getDouble(0)
+    meanRecall(truth, rankTop3(probes.join(cand,
+      col("probe_cell") === col("cell_b") && col("vec_id") =!= col("neighbor_id"))))
   }
 
   /** Mean recall@3 of searching ONLY each query's assigned cell (q71's
@@ -2219,12 +2268,8 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("embedding").as("emb_a"))
     val sb = a2.select(col("vec_id").as("neighbor_id"),
       col("cell").as("cell_b"), col("embedding").as("emb_b"))
-    val approx = rankTop3(sa.join(sb,
-        col("cell") === col("cell_b") && col("vec_id") =!= col("neighbor_id")))
-      .select(col("vec_id"), col("neighbor_id"), lit(1).as("hit"))
-    truth.join(approx, Seq("vec_id", "neighbor_id"), "left")
-      .agg(avg(when(col("hit").isNotNull, 1.0).otherwise(0.0)).as("r"))
-      .head.getDouble(0)
+    meanRecall(truth, rankTop3(sa.join(sb,
+      col("cell") === col("cell_b") && col("vec_id") =!= col("neighbor_id"))))
   }
 
   /** q84: quantized IVF k-NN served from the MATERIALIZED int8 index —
@@ -2517,22 +2562,11 @@ object Similarity {
       col("cell").as("cell_b"), col("embedding").as("emb_b"))
     val single = rankTop3(sa.join(sb,
         col("cell") === col("cell_b") && col("vec_id") =!= col("neighbor_id")))
-      .select(col("vec_id"), col("neighbor_id"), lit(1).as("hit_s"))
     // multi-probe: q72's probe selection, restricted to the batch
     val probes = probeSelection(e.where(col("vec_id") < QueryBatch), c1)
     val multi = rankTop3(probes.join(sb,
         col("probe_cell") === col("cell_b") && col("vec_id") =!= col("neighbor_id")))
-      .select(col("vec_id"), col("neighbor_id"), lit(1).as("hit_m"))
-    truth
-      .join(single, Seq("vec_id", "neighbor_id"), "left")
-      .join(multi, Seq("vec_id", "neighbor_id"), "left")
-      .groupBy("vec_id")
-      .agg(count(col("hit_s")).as("n_hits_single"),
-        count(col("hit_m")).as("n_hits_multi"))
-      .select(col("vec_id"), col("n_hits_single"), col("n_hits_multi"),
-        round(col("n_hits_single").cast("double") / lit(3.0), 6).as("recall_single"),
-        round(col("n_hits_multi").cast("double") / lit(3.0), 6).as("recall_multi"))
-      .orderBy("vec_id")
+    recallByQuery(truth, "_single" -> single, "_multi" -> multi)
   }
 
   // ---- product quantization: per-subspace codebooks + ADC search (q91) ----
@@ -2592,63 +2626,6 @@ object Similarity {
       pqTrainOn(Tables.embeddings(s, d).select("vec_id", "embedding"), k, mm)
     }
 
-  /** Driver-side seed codebooks for a fused multi-subspace train: ONE
-    * bounded collect of the first-k corpus rows (k ≤ the
-    * [[collectedCodebook]] router-metadata bound), sliced per subspace
-    * on the driver. Each slice's doubles are exactly the per-subspace
-    * `transform(slice(embedding, off+1, sd), x -> CAST(x AS DOUBLE))`
-    * collect they replace — float→double widening is exact and
-    * `Seq.slice` matches SQL `slice` on short arrays — minus the M−1
-    * redundant seed-scan jobs.
-    */
-  private def seedSlices(e: DataFrame, k: Int, mm: Int,
-      sd: Int): IndexedSeq[Seq[(Int, Seq[Double])]] = {
-    require(k <= 1024,
-      s"seedSlices embeds the seed codebook as a plan literal; k=$k " +
-        "exceeds the 1024-cell router-metadata bound")
-    val rows = e.where(col("vec_id") < k)
-      .select(col("vec_id").cast("int"), col("embedding")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
-    (0 until mm).map { m =>
-      rows.map { case (cell, emb) =>
-        (cell, emb.slice(m * sd, m * sd + sd).map(_.toDouble))
-      }.toSeq
-    }
-  }
-
-  /** ONE fused Lloyd stage for ALL `mm` subspaces: a single corpus pass
-    * assigns every row's `mm` slices against their literal codebooks
-    * (the [[kmAssign]] kernel per slice), and a single (m, cell)-grain
-    * aggregation folds each cell's members with the order-pinned
-    * [[kmRecompute]] recipe (ascending vec_id, codegen
-    * [[graft.functions.CellMeanKernel]]). Per (m, cell) the member set
-    * and fold order are IDENTICAL to the sequential per-subspace chains
-    * this replaces, so every codebook double is bit-identical — only
-    * the number of corpus passes changes (mm → 1).
-    */
-  private def fusedLloydCodebooks(corpusFan: DataFrame, mm: Int, sd: Int,
-      seeds: IndexedSeq[Seq[(Int, Seq[Double])]]): DataFrame = {
-    VectorFunctions.register(corpusFan.sparkSession)
-    val slices = (0 until mm).map { m =>
-      val sub = slice(col("embedding"), m * sd + 1, sd)
-      struct(
-        VectorFunctions.nearestCell(sub,
-          typedLit(seeds(m).map(_._1)),
-          typedLit(seeds(m).flatMap(_._2))).as("cell"),
-        sub.as("embedding"))
-    }
-    corpusFan
-      .select(col("vec_id"), posexplode(array(slices: _*)))
-      .select(col("vec_id"), col("pos").as("m"),
-        col("col.cell").as("cell"), col("col.embedding").as("embedding"))
-      .where(size(col("embedding")) > 0)
-      .groupBy(col("m"), col("cell"))
-      .agg(sort_array(collect_list(struct(col("vec_id"), col("embedding"))))
-        .as("vals"))
-      .select(col("m"), col("cell"),
-        VectorFunctions.cellMean(col("vals")).as("cen"))
-  }
-
   /** The per-subspace training body shared by the raw-vector index
     * ([[pqTrained]]), the residual index ([[pqResTrained]]) and the IMI
     * router halves: `e` is any (vec_id, embedding: array&lt;float&gt;)
@@ -2660,43 +2637,32 @@ object Similarity {
     * blocking on its own corpus-scan assign+recompute job at plan-build
     * time, then scanned the corpus once more PER SUBSPACE in the codes
     * leaf — ~3·mm driver-paced corpus jobs per index build (measured:
-    * the q145/q146 sf1 timelines were ~20 sequential `collectedCodebook`
-    * collects; thread-parallelizing the chains measured WORSE, 15.7 →
-    * 22.3 s on q106 — concurrent corpus shuffles just contend once each
-    * chain saturates the cores). Now: one seed collect + ONE corpus
-    * pass training all mm codebooks ([[fusedLloydCodebooks]]) + ONE
-    * corpus pass computing all mm final codes. Values are bit-identical
-    * (same members, same vec_id-ascending [[graft.functions.
-    * CellMeanKernel]] fold per (m, cell), same float→double seed
-    * widening), so every downstream hash survives; only pass count and
-    * job count change.
+    * the q145/q146 sf1 timelines were ~20 sequential codebook collects;
+    * thread-parallelizing the chains measured WORSE, 15.7 → 22.3 s on
+    * q106 — concurrent corpus shuffles just contend once each chain
+    * saturates the cores). Now: one seed collect + ONE corpus pass
+    * training all mm codebooks ([[lloydCodebooks]]) + ONE corpus pass
+    * computing all mm final codes. Values are bit-identical (same
+    * members, same vec_id-ascending [[graft.functions.CellMeanKernel]]
+    * fold per (m, cell), same float→double seed widening), so every
+    * downstream hash survives; only pass count and job count change.
     */
   private def pqTrainOn(e: DataFrame,
-      k: Int, mm: Int = PqM): ((DataFrame, DataFrame), () => Unit) = {
+      k: Int, mm: Int): ((DataFrame, DataFrame), () => Unit) = {
     val sd = pqSubDim(mm)
-    VectorFunctions.register(e.sparkSession)
-    val eFan = fanOut(e)
-    val seeds = seedSlices(e, k, mm, sd)
     // leaves (Artifacts.leafDf scaladoc); the eager checkpoint is the
     // artifact's one materialization
-    val (cents, relCents) =
-      graft.Artifacts.leafDf(fusedLloydCodebooks(eFan, mm, sd, seeds))
+    val (cents, relCents) = graft.Artifacts.leafDf(lloydCodebooks(e, e, k, mm))
     // trained literal codebooks: one driver read of the materialized
-    // leaf (mm·k rows — router metadata, the collectedCodebook bound),
-    // same per-m ascending-cell sort as collectedCodebook
-    val trained = cents.collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-      .groupBy(_._1).view.mapValues { rs =>
-        val cb = rs.map(t => (t._2, t._3)).sortBy(_._1)
-        (typedLit(cb.map(_._1).toSeq), typedLit(cb.flatMap(_._2).toSeq))
-      }.toMap
+    // leaf (mm·k rows — router metadata)
+    val trained = collectedCodebooks(cents, "pqTrainOn")
     val codeCols = (0 until mm).map { m =>
-      val (cellsLit, censLit) = trained(m)
+      val (cellsLit, censLit) = codebookLits(trained(m))
       VectorFunctions.nearestCell(
         slice(col("embedding"), m * sd + 1, sd), cellsLit, censLit)
     }
     val (codes, relCodes) = graft.Artifacts.leafDf(
-      eFan.select(col("vec_id"), posexplode(array(codeCols: _*)))
+      fanOut(e).select(col("vec_id"), posexplode(array(codeCols: _*)))
         .select(col("vec_id"), col("pos").as("m"), col("col").as("cell")))
     ((cents, codes), () => { relCents(); relCodes() })
   }
@@ -2882,11 +2848,11 @@ object Similarity {
     adcRankCells(codeCells(codes), lut)
 
   /** A session artifact: the ranked table is shared verbatim by the
-    * search query (q91) and its recall audit (q92, [[pqMeanRecall]]), so
+    * search query (q91) and its recall audit (q92), so
     * the ADC join + fold executes once per (session, dir, k) instead of
     * once per consumer. ~|batch|·3 rows; released via `Artifacts.release`.
     */
-  private def pqAdcTop3(s: SparkSession, d: String, k: Int = PqK,
+  private[operators] def pqAdcTop3(s: SparkSession, d: String, k: Int = PqK,
       mm: Int = PqM): DataFrame =
     graft.Artifacts.checkpointedDf(s, s"pq_adc_top3:$d:k=$k:m=$mm") {
       pqAdcTop3Plan(s, d, k, mm)
@@ -3010,6 +2976,7 @@ object Similarity {
     */
   private def l2Top3Truth(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.checkpointedDf(s, s"l2_truth:$d") {
+      VectorFunctions.register(s)
       val e = Tables.embeddings(s, d).select("vec_id", "embedding")
       val qb = broadcast(e.where(col("vec_id") < QueryBatch))
       val all = e.select(col("vec_id").as("neighbor_id"),
@@ -3021,20 +2988,6 @@ object Similarity {
         .where(col("rank") <= 3)
         .select(col("vec_id"), col("neighbor_id"))
     }
-
-  /** Mean recall@3 of the k-codebook ADC tier against exact-L2 truth —
-    * the measurement behind the ScaleSpec recall-vs-k pin and the
-    * number a production (M, k) choice is calibrated on.
-    */
-  private[operators] def pqMeanRecall(s: SparkSession, d: String, k: Int,
-      mm: Int = PqM): Double = {
-    VectorFunctions.register(s)
-    val truth = l2Top3Truth(s, d)
-    val hits = pqAdcTop3(s, d, k, mm)
-      .select(col("qid").as("vec_id"), col("neighbor_id"))
-    truth.join(hits, Seq("vec_id", "neighbor_id"), "left_semi").count().toDouble /
-      truth.count().toDouble
-  }
 
   /** The exact-L2-truth CTE + per-query hit-count tail shared by every
     * ADC recall-audit oracle (q92 fixture sizing, q107 production
@@ -3066,28 +3019,13 @@ object Similarity {
        |LEFT JOIN $ranked r ON t.vec_id = r.qid AND t.neighbor_id = r.neighbor_id
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** The engine-side recall audit shared by q92/q107: per-query hit
-    * count of `hits` (an ADC top-3 table) against [[l2Top3Truth]].
-    */
-  private def pqRecallAudit(s: SparkSession, d: String,
-      hits: DataFrame): DataFrame = {
-    VectorFunctions.register(s)
-    l2Top3Truth(s, d)
-      .join(hits.select(col("qid").as("vec_id"), col("neighbor_id"),
-        lit(1).as("hit")), Seq("vec_id", "neighbor_id"), "left")
-      .groupBy("vec_id")
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("vec_id"), col("n_hits"),
-        round(col("n_hits").cast("double") / lit(3.0), 6).as("recall"))
-      .orderBy("vec_id")
-  }
-
   private val q92 = GraftQuery(
     "q92_pq_recall",
     s"""WITH ${(0 until PqM).map(pqOracleTrain).mkString(",\n")},
        |${pqAdcOracleFor(PqM)},
        |$pqRecallOracleTail""".stripMargin) { (s, d) =>
-    pqRecallAudit(s, d, pqAdcTop3(s, d))
+    recallByQuery(l2Top3Truth(s, d),
+      "" -> pqAdcTop3(s, d).withColumnRenamed("qid", "vec_id"))
   }
 
   /** q106: PRODUCTION-sized PQ-ADC search — q91's serving shape at the
@@ -3128,7 +3066,8 @@ object Similarity {
           .mkString(",\n")},
        |${pqAdcOracleFor(PqMProd)},
        |$pqRecallOracleTail""".stripMargin) { (s, d) =>
-    pqRecallAudit(s, d, pqProdTop3(s, d))
+    recallByQuery(l2Top3Truth(s, d),
+      "" -> pqProdTop3(s, d).withColumnRenamed("qid", "vec_id"))
   }
 
   /** q93: IVF-PQ — the two index families composed into the standard
@@ -3168,31 +3107,7 @@ object Similarity {
        |    row_number() OVER (PARTITION BY qid ORDER BY adc, neighbor_id) AS rank
        |  FROM iadc) t
        |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
-    val (c1, a2) = kmTrained(s, d)
-    val (cents, codes) = pqTrained(s, d)
-    val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-    val probes = probeCells(e.where(col("vec_id") < QueryBatch), c1, ProbeP)
-    val cand = probes
-      .join(a2.select(col("vec_id").as("neighbor_id"), col("cell")),
-        col("probe_cell") === col("cell") && col("vec_id") =!= col("neighbor_id"))
-      .select(col("vec_id").as("qid"), col("neighbor_id"))
-    val lut = pqLut(e, cents)
-    val w = Window.partitionBy("qid").orderBy(col("adc").asc, col("neighbor_id"))
-    // r18: candidates meet the per-vector cell ARRAY (one row) and the
-    // per-query LUT arrays (broadcast), and the codegen adc_sum fold
-    // scores the pair in place — the former n·M code-row join +
-    // per-pair collect_list/sort_array/interpreted-aggregate chain
-    // collapses to one BHJ per side (same doubles, same m order)
-    cand
-      .join(codeCells(codes).withColumnRenamed("vec_id", "neighbor_id"),
-        Seq("neighbor_id"))
-      .join(broadcast(lutArrays(lut, Seq("qid"))), Seq("qid"))
-      .select(col("qid"), col("neighbor_id"),
-        VectorFunctions.adcSum(col("cells"), col("lkeys"), col("ldds"))
-          .as("adc"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 3)
+    rawIvfpqTop3(s, d)
       .select(col("qid").as("vec_id"), col("neighbor_id"), col("rank"),
         round(col("adc"), 6).as("adc_dist"))
       .orderBy("vec_id", "rank")
@@ -3208,34 +3123,6 @@ object Similarity {
     Pipeline.lcg(c, Pipeline.SplitA, Pipeline.SplitC) % 10
   private val shardBucketSql =
     s"(${Pipeline.lcgSql("vec_id", Pipeline.SplitA, Pipeline.SplitC)}) % 10"
-
-  /** Index trained ONLY on the base shard — the frozen artifact an append
-    * job loads: the coarse quantizer (one Lloyd pass over base) and the
-    * [[PqM]] PQ codebooks (same recipe per subspace). Seeds stay the
-    * global first-k vectors (init is an arbitrary constant; only the
-    * Lloyd averages must exclude the new shard).
-    */
-  private[operators] def frozenBaseIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    graft.Artifacts.cached[(DataFrame, DataFrame)](s, s"frozen_base_index:$d") {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val base = fanOut(e.where(shardBucket(col("vec_id")) < 8))
-      val c0 = e.where(col("vec_id") < kmK(s, d))
-        .select(col("vec_id").cast("int").as("cell"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cen"))
-      val c1b = kmRecompute(kmAssign(base, c0)).persist(lvl)
-      // r18: fused multi-subspace train over the base shard — one corpus
-      // pass instead of PqM sequential Lloyd chains (pqTrainOn's fusion;
-      // bit-identical codebooks). Seeds stay the GLOBAL first-k rows.
-      val seeds = seedSlices(e, PqK, PqM, PqSubDim)
-      val (cents, relCents) =
-        graft.Artifacts.leafDf(fusedLloydCodebooks(base, PqM, PqSubDim, seeds))
-      ((c1b, cents), () => {
-        c1b.unpersist(blocking = true)
-        relCents()
-        ()
-      })
-    }
 
   /** One subspace's base-restricted codebook training for the q94 oracle:
     * global seeds, Lloyd averages over `base` only.
@@ -3263,25 +3150,26 @@ object Similarity {
       .stripMargin
   }
 
-  /** The frozen codebooks COLLECTED to driver-side literals — the
-    * routing/codebook tables an append job ships to every task (coarse:
-    * k cells × dim doubles; PQ: M codebooks × k cells × subdim — a few
-    * hundred KB at production sizing, the metadata an index writer holds
-    * in memory). Collected once per (session, dir) and memoized, exactly
-    * like q105's probed-cell routing list.
+  /** The index trained ONLY on the base shard, COLLECTED to driver-side
+    * literals — the frozen artifact an append job loads and ships to
+    * every task: the coarse quantizer (one Lloyd pass over base) and the
+    * [[PqM]] PQ codebooks (coarse: k cells × dim doubles; PQ: M codebooks
+    * × k cells × subdim — a few hundred KB at production sizing, the
+    * metadata an index writer holds in memory). Seeds stay the global
+    * first-k vectors (init is an arbitrary constant; only the Lloyd
+    * averages must exclude the new shard). Collected once per (session,
+    * dir) and memoized, exactly like q105's probed-cell routing list.
     */
   private def frozenCollected(s: SparkSession, d: String)
       : (Seq[(Int, Seq[Double])], Seq[(Int, Seq[(Int, Seq[Double])])]) =
     graft.Artifacts.cached[(Seq[(Int, Seq[Double])],
         Seq[(Int, Seq[(Int, Seq[Double])])])](s, s"frozen_collected:$d") {
-      val (c1b, cents) = frozenBaseIndex(s, d)
-      val coarse = c1b.select(col("cell"), col("cen")).collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-      val cbs = cents.select(col("m"), col("cell"), col("cen")).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (m, rs) =>
-          (m, rs.map(t => (t._2, t._3)).sortBy(_._1).toSeq) }
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val base = e.where(shardBucket(col("vec_id")) < 8)
+      val coarse = collectedCodebooks(
+        lloydCodebooks(e, base, kmK(s, d), 1), "frozenCollected")(0)
+      val cbs = collectedCodebooks(
+        lloydCodebooks(e, base, PqK, PqM), "frozenCollected").toSeq.sortBy(_._1)
       ((coarse, cbs), () => ())
     }
 
@@ -3309,14 +3197,16 @@ object Similarity {
     // still a stateless per-row map, so the streaming twin (q109) runs
     // it under append mode unmodified.
     val codes = array(cbArr.map { case (m, cb) =>
+      val (cellsLit, censLit) = codebookLits(cb)
       struct(lit(m).as("m"),
         VectorFunctions.nearestCell(
           slice(col("embedding"), m * PqSubDim + 1, PqSubDim),
-          typedLit(cb.map(_._1)), typedLit(cb.flatMap(_._2))).as("pq_code"))
+          cellsLit, censLit).as("pq_code"))
     }: _*)
+    val (coarseCells, coarseCens) = codebookLits(coarseArr)
     rows
-      .withColumn("coarse_cell", VectorFunctions.nearestCell(col("embedding"),
-        typedLit(coarseArr.map(_._1)), typedLit(coarseArr.flatMap(_._2))))
+      .withColumn("coarse_cell",
+        VectorFunctions.nearestCell(col("embedding"), coarseCells, coarseCens))
       .select(col("vec_id"), col("coarse_cell"), explode(codes).as("c"))
       .select(col("vec_id"), col("coarse_cell"),
         col("c.m").as("m"), col("c.pq_code").as("pq_code"))
@@ -3518,22 +3408,17 @@ object Similarity {
   }
 
   /** Mean recall@3 vs exact-L2 truth for any (qid, neighbor_id) top-3 —
-    * the shared measurement behind the residual-vs-raw ScaleSpec audit.
+    * the shared measurement behind the ScaleSpec recall-vs-(M, k) and
+    * residual-vs-raw audits.
     */
   private[operators] def adcMeanRecall(s: SparkSession, d: String,
-      hits: DataFrame): Double = {
-    VectorFunctions.register(s)
-    val truth = l2Top3Truth(s, d)
-    truth.join(hits.select(col("qid").as("vec_id"), col("neighbor_id")),
-        Seq("vec_id", "neighbor_id"), "left_semi").count().toDouble /
-      truth.count().toDouble
-  }
+      hits: DataFrame): Double =
+    meanRecall(l2Top3Truth(s, d), hits.withColumnRenamed("qid", "vec_id"))
 
   private[operators] def rawIvfpqTop3(s: SparkSession, d: String,
       k: Int = PqK, mm: Int = PqM): DataFrame = {
-    // q93's core (probed candidates, RAW-vector ADC) re-expressed for the
-    // recall comparison; (k, mm) select the sizing for the production
-    // residual-vs-raw audit
+    // q93's tier (probed candidates, RAW-vector ADC); (k, mm) select the
+    // sizing for the production residual-vs-raw audit
     VectorFunctions.register(s)
     val (c1, a2) = kmTrained(s, d)
     val (cents, codes) = pqTrained(s, d, k, mm)
@@ -3583,17 +3468,8 @@ object Similarity {
        |FROM l2truth t
        |LEFT JOIN rranked r ON t.vec_id = r.qid AND t.neighbor_id = r.neighbor_id
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
-    val truth = l2Top3Truth(s, d)
-    val hits = residualAdcTop3(s, d)
-      .select(col("qid").as("vec_id"), col("neighbor_id"), lit(1).as("hit"))
-    truth
-      .join(hits, Seq("vec_id", "neighbor_id"), "left")
-      .groupBy("vec_id")
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("vec_id"), col("n_hits"),
-        round(col("n_hits").cast("double") / lit(3.0), 6).as("recall"))
-      .orderBy("vec_id")
+    recallByQuery(l2Top3Truth(s, d),
+      "" -> residualAdcTop3(s, d).withColumnRenamed("qid", "vec_id"))
   }
 
   /** The production-sized residual serving artifact behind q146/q147 —
@@ -3636,7 +3512,8 @@ object Similarity {
     s"""WITH $kmOracleTrain, ${probesOracle(s"\n    WHERE e.vec_id < $QueryBatch")},
        |${residualOracleChainFor(PqMProd, PqKProd)},
        |${pqRecallOracleTailOn("rranked")}""".stripMargin) { (s, d) =>
-    pqRecallAudit(s, d, residualProdTop3(s, d))
+    recallByQuery(l2Top3Truth(s, d),
+      "" -> residualProdTop3(s, d).withColumnRenamed("qid", "vec_id"))
   }
 
   /** q103: FILTERED ANN — vector search under a metadata predicate (the
@@ -3836,9 +3713,7 @@ object Similarity {
       : Seq[(Int, Seq[Double])] =
     graft.Artifacts.cached[Seq[(Int, Seq[Double])]](
         s, s"ivf_centroids_collected:$d") {
-      val (c1, _) = kmTrained(s, d)
-      (c1.select(col("cell"), col("cen")).collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq,
+      (collectedCodebooks(kmTrained(s, d)._1, "trainedCentroidsCollected")(0),
         () => ())
     }
 
@@ -3866,9 +3741,7 @@ object Similarity {
     // interpreted CodegenFallback HOF on every arriving query vector.
     // Identical (d, cell) lexicographic order, so the served rows and
     // the stream==batch==oracle gate are untouched.
-    val cents = trainedCentroidsCollected(s, d)
-    val cellsLit = typedLit(cents.map(_._1))
-    val censLit = typedLit(cents.flatMap(_._2))
+    val (cellsLit, censLit) = codebookLits(trainedCentroidsCollected(s, d))
     val probed = queries
       .withColumn("code_a", VectorFunctions.int8Encode(col("embedding")))
       .withColumn("nq_a", VectorFunctions.int8CodeDot(col("code_a"), col("code_a")))
@@ -4498,15 +4371,7 @@ object Similarity {
        |LEFT JOIN ranked r ON t.vec_id = r.vec_id AND t.neighbor_id = r.neighbor_id
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     VectorFunctions.register(s)
-    val truth = cosTruth(s, d)
-    val hits = q154.fn(s, d)
-      .select(col("vec_id"), col("neighbor_id"), lit(1).as("hit"))
-    truth.join(hits, Seq("vec_id", "neighbor_id"), "left")
-      .groupBy("vec_id")
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("vec_id"), col("n_hits"),
-        round(col("n_hits").cast("double") / lit(3.0), 6).as("recall"))
-      .orderBy("vec_id")
+    recallByQuery(cosTruth(s, d), "" -> q154.fn(s, d))
   }
 
   // ---- maximum-inner-product search (q136) ----
@@ -7933,29 +7798,20 @@ object Similarity {
   }
 
   /** Frozen IMI half-codebooks trained on the BASE shard only (buckets
-    * 0-7) — [[frozenBaseIndex]]'s recipe at the router's (k', M=2)
-    * sizing: global first-k' seeds, one Lloyd average over base — then
-    * COLLECTED to plan literals (2·k' cells × 32 doubles — router
+    * 0-7) — [[frozenCollected]]'s recipe at the router's (k', M=2)
+    * sizing: global first-k' seeds, one fused Lloyd average over base —
+    * then COLLECTED to plan literals (2·k' cells × 32 doubles — router
     * metadata, the [[kmAssign]] contract). The artifact an IMI index
     * append job ships to every task.
     */
   private def frozenImiCollected(s: SparkSession,
-      d: String): Seq[(Int, Seq[(Int, Seq[Double])])] =
-    graft.Artifacts.cached[Seq[(Int, Seq[(Int, Seq[Double])])]](
+      d: String): Map[Int, Seq[(Int, Seq[Double])]] =
+    graft.Artifacts.cached[Map[Int, Seq[(Int, Seq[Double])]]](
         s, s"frozen_imi_collected:$d") {
       val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val base = fanOut(e.where(shardBucket(col("vec_id")) < 8))
-      val sd = KmDim / 2
-      // r18: fused two-half train — ONE corpus pass + ONE collect instead
-      // of two sequential Lloyd chains (pqTrainOn's fusion; bit-identical
-      // codebooks). Seeds stay the GLOBAL first-k' rows.
-      val seeds = seedSlices(e, kImi(s, d), 2, sd)
-      val rows = fusedLloydCodebooks(base, 2, sd, seeds).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-      val out = (0 until 2).map { m =>
-        (m, rows.filter(_._1 == m).map(t => (t._2, t._3)).sortBy(_._1).toSeq)
-      }
-      (out, () => ())
+      val base = e.where(shardBucket(col("vec_id")) < 8)
+      (collectedCodebooks(lloydCodebooks(e, base, kImi(s, d), 2),
+        "frozenImiCollected"), () => ())
     }
 
   /** The frozen-half-codebook PRODUCT-CELL routing as a stateless map
@@ -7970,12 +7826,15 @@ object Similarity {
   private[graft] def frozenImiRoute(s: SparkSession, d: String,
       rows: DataFrame): DataFrame = {
     VectorFunctions.register(s)
-    val cbs = frozenImiCollected(s, d).toMap
+    val cbs = frozenImiCollected(s, d)
     // r18: codegen NearestCellKernel argmin per half (was an interpreted
     // array_min/transform HOF per row); same distances, same tie-break
-    def half(m: Int) = VectorFunctions.nearestCell(
-      slice(col("embedding"), m * (KmDim / 2) + 1, KmDim / 2),
-      typedLit(cbs(m).map(_._1)), typedLit(cbs(m).flatMap(_._2)))
+    def half(m: Int) = {
+      val (cellsLit, censLit) = codebookLits(cbs(m))
+      VectorFunctions.nearestCell(
+        slice(col("embedding"), m * (KmDim / 2) + 1, KmDim / 2),
+        cellsLit, censLit)
+    }
     rows.select(col("vec_id"),
       half(0).cast("long").as("cell_a"), half(1).cast("long").as("cell_b"))
   }

@@ -419,12 +419,12 @@ object StreamingQueries {
        |GROUP BY 1, 2
        |ORDER BY window_start_ms, event_type""".stripMargin) { (s, d) =>
     graft.functions.BloomFilterFunctions.register(s)
-    // registry persist: the stream-static join re-executes the static
-    // side every micro-batch — uncached, each batch would re-aggregate
-    // the events table to rebuild a 9-row denylist (plus the count +
-    // bloom-build passes before the stream starts). Released via
+    // registry leaf: the stream-static join re-executes the static
+    // side every micro-batch — unmaterialized, each batch would
+    // re-aggregate the events table to rebuild a 9-row denylist (plus the
+    // count + bloom-build passes before the stream starts). Released via
     // Artifacts.release(session).
-    val deny = graft.Artifacts.cachedDf(s, s"q80_denylist:$d") {
+    val deny = graft.Artifacts.checkpointedDf(s, s"q80_denylist:$d") {
       graft.Tables.events(s, d)
         .groupBy("user_id").agg(count(lit(1)).as("n"))
         .where(col("n") > DenyThreshold)

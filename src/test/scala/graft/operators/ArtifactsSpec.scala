@@ -81,9 +81,13 @@ class ArtifactsSpec extends SparkSuite {
     assert(Artifacts.checkpointedDf(spark, "loss_local")(build()).count() == 100)
     assert(builds == 2, "release must trigger a fresh build, not a cache hit")
 
-    // the cluster-safe variant reads from checkpoint FILES: dropping
-    // cached blocks cannot lose it (this is what reliable buys)
-    val rel = Artifacts.reliableCheckpointDf(spark, "loss_reliable")(build())
+    // the cluster-safe mode (Artifacts.ReliableArtifactsConf) reads from
+    // checkpoint FILES: dropping cached blocks cannot lose the leaf (this
+    // is what reliable buys)
+    spark.conf.set(Artifacts.ReliableArtifactsConf, "true")
+    val rel =
+      try Artifacts.checkpointedDf(spark, "loss_reliable")(build())
+      finally spark.conf.set(Artifacts.ReliableArtifactsConf, "false")
     assert(rel.count() == 100)
     rel.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
@@ -104,7 +108,7 @@ class ArtifactsSpec extends SparkSuite {
   }
 
   test("reliable mode: the TRAINED INDEX FAMILY survives block loss without retrain") {
-    // the round-10 gap: reliableCheckpointDf existed but kmTrained/
+    // the round-10 gap: a reliable leaf existed but kmTrained/
     // pqTrained built on local leaves. With the one-conf flip
     // (Artifacts.ReliableArtifactsConf) every leafDf artifact — the
     // whole index family — becomes a file checkpoint: simulate executor
@@ -132,6 +136,23 @@ class ArtifactsSpec extends SparkSuite {
       spark.conf.set(Artifacts.ReliableArtifactsConf, "false")
       Artifacts.release(spark)
     }
+  }
+
+  test("no artifact is a lazy Dataset persist: q80 and q94 leave the cache manager empty") {
+    // A lazy `persist` artifact is raced by AQE's concurrent stage
+    // submission (its build re-runs once per consuming stage) and keeps
+    // its whole build tree in every consumer's plan; every DataFrame
+    // artifact is an eager checkpointed leaf instead, so running the
+    // queries that own the streaming denylist (q80) and the frozen
+    // base-shard index (q94) must register nothing with the cache manager.
+    Artifacts.release(spark)
+    spark.catalog.clearCache()
+    graft.SparkEntry.queries("q80_stream_bloom_filter")(spark, dir).collect()
+    graft.SparkEntry.queries("q94_index_append")(spark, dir).collect()
+    assert(Artifacts.registered(spark) > 0, "the queries built no artifacts")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "an artifact registered a lazy Dataset persist with the cache manager")
+    Artifacts.release(spark)
   }
 
   test("artifact builds may nest (regression: 'Recursive update' in q52)") {

@@ -237,7 +237,7 @@ class KernelParitySpec extends SparkSuite {
   test("cell_mean kernel == interpreted posexplode/aggregate recompute on live assignments") {
     graft.functions.VectorFunctions.register(spark)
     // live embeddings under an arbitrary 7-cell assignment — the exact
-    // r17 kmRecompute pipeline (posexplode, per-(cell, j) sorted fold,
+    // r17 centroid-recompute pipeline (posexplode, per-(cell, j) sorted fold,
     // re-assembly) against the one-pass per-cell kernel
     val assigned = graft.Tables.embeddings(spark, dir)
       .select(pmod(col("vec_id"), lit(7)).cast("int").as("cell"),

@@ -364,17 +364,20 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("PQ recall@3 improves with codebook size; k is the fidelity lever") {
-    val r4 = Similarity.pqMeanRecall(spark, dir, k = 4)
-    val r8 = Similarity.pqMeanRecall(spark, dir, k = 8)
-    val r16 = Similarity.pqMeanRecall(spark, dir, k = 16)
+    // mean recall@3 of the k-codebook ADC tier against exact-L2 truth
+    def pqRecall(top3: org.apache.spark.sql.DataFrame) =
+      Similarity.adcMeanRecall(spark, dir, top3)
+    val r4 = pqRecall(Similarity.pqAdcTop3(spark, dir, k = 4))
+    val r8 = pqRecall(Similarity.pqAdcTop3(spark, dir, k = 8))
+    val r16 = pqRecall(Similarity.pqAdcTop3(spark, dir, k = 16))
     assert(r4 <= r8 && r8 <= r16, s"recall not monotone in k: $r4, $r8, $r16")
     assert(r16 > r4, s"growing the codebooks 4x must improve recall: $r4 -> $r16")
     // the production point (M=8, k=256 — q106's sizing, one byte per
     // subspace) completes the recall-vs-(M, k) curve: a byte of code per
     // subspace must beat every fixture-sized point, or the production
     // sizing buys nothing
-    val prod = Similarity.pqMeanRecall(spark, dir,
-      k = Similarity.PqKProd, mm = Similarity.PqMProd)
+    val prod = pqRecall(Similarity.pqAdcTop3(spark, dir,
+      k = Similarity.PqKProd, mm = Similarity.PqMProd))
     info(s"PQ recall@3 curve: k=4 $r4, k=8 $r8, k=16 $r16, prod(M=8,k=256) $prod")
     assert(prod >= r16,
       s"production sizing must top the fixture curve: $prod < $r16")
