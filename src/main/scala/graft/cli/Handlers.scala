@@ -18,8 +18,7 @@ import graft.schema.AllocRegistry
   *    reference/Sources/Handlers/DetectHandler.swift:24-36)
   *
   * Resolution and report formatting are driver-side (registry logic over
-  * a bounded prefix); decode and export are lazy DataFrame plans that
-  * execute distributed.
+  * a bounded prefix); decode and export execute distributed.
   */
 object Handlers {
 
@@ -28,11 +27,22 @@ object Handlers {
       schema: String,
       /** reference-parity export bytes (header + rows, driver-side) */
       output: String,
-      /** typed good rows (lazy plan, for at-scale sinks) */
+      /** typed good rows (a projection of the decoded leaf, for at-scale sinks) */
       good: DataFrame,
       /** reject channel: raw columns + first-failing-field reason */
-      rejects: DataFrame)
+      rejects: DataFrame,
+      /** frees the decoded leaf behind `good` and `rejects` */
+      release: () => Unit)
 
+  /** Sniff, resolve, then decode the input ONCE: [[Decoder.decode]]
+    * parses it over ordered size-aware splits into one leaf, eagerly, in
+    * this call. `output` is rendered from that leaf, and `good`/`rejects`
+    * are returned as projections of it, so further sinks read the same
+    * parse without rescanning the file. Every call parses its input anew;
+    * nothing is shared across calls. The caller frees the leaf with
+    * `release` when done with both frames (Spark's ContextCleaner frees it
+    * once they are dropped otherwise).
+    */
   @throws[FinError]
   def handleTransform(spark: SparkSession,
       inputPath: String,
@@ -54,7 +64,8 @@ object Handlers {
       case AllocFormat.JSON => DelimitedWriter.jsonArrayString(decoded.good)
       case f => DelimitedWriter.delimitedBytes(decoded.good, f.delimiter.getOrElse(","))
     }
-    TransformResult(importer.id, schema, output, decoded.good, decoded.rejects)
+    TransformResult(importer.id, schema, output, decoded.good, decoded.rejects,
+      decoded.release)
   }
 
   /** Detection report: one "schema: fmt,fmt" line per detected schema,

@@ -41,6 +41,7 @@ object Main {
             defTimeOfDay = f.timeOfDay,
             timeZone = f.zone,
             exportFormat = f.format)
+          res.release()
           res.output
         }
         case "detect" :: input :: Nil =>

@@ -1,8 +1,18 @@
 package graft.decode
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapreduce.{InputSplit, Job, JobContext, MRJobConfig}
+import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit, TextInputFormat}
+import org.apache.spark.rdd.NewHadoopRDD
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.schema.{EntitySpec, FieldKind, FieldSpec}
 
 /** Typed decode with reject routing — the reference's core semantic
@@ -11,33 +21,84 @@ import graft.schema.{EntitySpec, FieldKind, FieldSpec}
   * string rows become typed rows, and rows that fail any field decode are
   * routed to a reject channel instead of failing the batch.
   *
-  * Spark-first shape: ONE narrow pass — the raw DataFrame gains a `__reason`
-  * column (a coalesce of per-field checks in declared field order, so the
-  * first failing field wins, mirroring the reference's first-error-per-row
-  * behavior), then splits by `__reason IS NULL`. Both sides stay inside the
-  * same WholeStageCodegen scan; nothing is collected, nothing is thrown.
+  * Spark-first shape: each input is parsed ONCE per [[decode]] call.
+  *  - [[readRaw]] cuts the input into ordered byte-range splits, as many
+  *    as its size and the cores call for; partition i holds range i, so
+  *    row order is file order.
+  *  - [[decode]] tags every raw row with `__reason` (a coalesce of
+  *    per-field checks in declared field order, so the first failing field
+  *    wins, mirroring the reference's first-error-per-row behavior) and
+  *    materializes that tagged frame EAGERLY, at call time, as one
+  *    checkpointed leaf ([[graft.Artifacts.leafDf]]). `good` and `rejects`
+  *    are narrow projections of the leaf, so the CSV, JSONL and reject
+  *    sinks all read the one parse instead of rescanning the file.
+  *  - The leaf belongs to its call: it is never registered in
+  *    [[graft.Artifacts]] or keyed by path, and a second call on the same
+  *    path reads and parses the input again. The caller frees it with
+  *    [[DecodeResult.release]] once done with both frames; Spark's
+  *    ContextCleaner frees the blocks of a leaf whose frames were dropped
+  *    without it.
+  * Nothing is collected and nothing is thrown for bad rows.
   * Date-only sources are enriched with a default time-of-day and zone into
   * UTC timestamps (defTimeOfDay/timeZone decode params,
   * reference/Sources/Core/FINporter.swift:45-47).
   *
   * The same [[EntitySpec]] also generates the DuckDB oracle SQL (see
-  * [[Decoder.oracleSelect]]) so engine and oracle share one source of truth.
+  * [[Decoder.oracleReasonSql]] and
+  * [[Decoder.oracleDecodedSql]]) so engine and oracle share one source of truth.
   */
 object Decoder {
 
-  final case class DecodeResult(good: DataFrame, rejects: DataFrame)
+  /** Typed good rows and raw rejects (+ `reason`), both projections of one
+    * materialized leaf; `release` drops that leaf's blocks or files (the
+    * frames are unusable afterwards).
+    */
+  final case class DecodeResult(good: DataFrame, rejects: DataFrame,
+      release: () => Unit)
 
   /** PERMISSIVE all-string CSV/TSV read under the entity's raw schema
-    * (A2: reference tokenizes via SwiftCSV, Package.swift:28).
+    * (A2: reference tokenizes via SwiftCSV, Package.swift:28), over
+    * size-aware ordered splits.
+    *
+    * `path` is a file, a directory of files or a glob; files are read in
+    * path order. The input is cut into
+    * `max(defaultParallelism, ceil(bytes / spark.sql.files.maxPartitionBytes))`
+    * byte ranges ([[OrderedTextInputFormat]]) and read with Hadoop's
+    * `LineRecordReader`, the line reader of Spark's CSV file source. As in
+    * the file source, the header (the first non-blank line) is dropped
+    * only in a split that starts at byte 0 of its file, so a data line
+    * that repeats the header text elsewhere is kept. The lines are then
+    * parsed by Spark's CSV parser with the same separator and PERMISSIVE
+    * mode, header-less.
     */
   def readRaw(spark: SparkSession, path: String, spec: EntitySpec,
-      delimiter: String = ","): DataFrame =
+      delimiter: String = ","): DataFrame = {
+    val sc = spark.sparkContext
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    FileInputFormat.setInputPaths(job, new Path(path))
+    FileInputFormat.setMaxInputSplitSize(job,
+      spark.sessionState.conf.filesMaxPartitionBytes)
+    job.getConfiguration.setInt(MRJobConfig.NUM_MAPS, sc.defaultParallelism)
+    val lines = new NewHadoopRDD(sc, classOf[OrderedTextInputFormat],
+        classOf[LongWritable], classOf[Text], job.getConfiguration)
+      .setName(path)
+      .mapPartitionsWithInputSplit { (split, records) =>
+        val text = records.map { case (_, t) =>
+          new String(t.getBytes, 0, t.getLength, UTF_8)
+        }
+        if (split.asInstanceOf[FileSplit].getStart != 0) text
+        else {
+          val body = text.dropWhile(_.trim.isEmpty)
+          if (body.hasNext) body.next()
+          body
+        }
+      }
     spark.read
-      .option("header", "true")
       .option("sep", delimiter)
       .option("mode", "PERMISSIVE")
       .schema(spec.rawSchema)
-      .csv(path)
+      .csv(spark.createDataset(lines)(Encoders.STRING))
+  }
 
   private def splitTod(defTimeOfDay: String): (Int, Int) =
     defTimeOfDay.split(":", -1) match {
@@ -92,16 +153,21 @@ object Decoder {
     }
   }
 
-  /** Split a raw DataFrame into (typed good rows, raw rejects + reason). */
+  /** Split a raw DataFrame into (typed good rows, raw rejects + reason):
+    * tags and materializes `raw` once, now, as the result's leaf. The leaf
+    * carries no size estimate, so a join that must broadcast a decoded
+    * side says so with a hint.
+    */
   def decode(raw: DataFrame, spec: EntitySpec,
       defTimeOfDay: String = "13:00",
       zone: String = "America/New_York"): DecodeResult = {
-    val tagged = raw.withColumn("__reason", reasonCol(spec))
-    val good = tagged.where(col("__reason").isNull)
-      .select(decodedCols(spec, defTimeOfDay, zone): _*)
+    val typed = decodedCols(spec, defTimeOfDay, zone)
+    val (tagged, release) =
+      Artifacts.leafDf(raw.withColumn("__reason", reasonCol(spec)))
+    val good = tagged.where(col("__reason").isNull).select(typed: _*)
     val rejects = tagged.where(col("__reason").isNotNull)
       .select(spec.fields.map(f => col(f.name)) :+ col("__reason").as("reason"): _*)
-    DecodeResult(good, rejects)
+    DecodeResult(good, rejects, release)
   }
 
   // ---- DuckDB oracle generation (same spec, same semantics) ----
@@ -146,4 +212,35 @@ object Decoder {
   def oracleRawCsv(spec: EntitySpec, csvPath: String): String =
     s"read_csv('$csvPath', header=true, all_varchar=true, " +
       s"columns={${spec.fields.map(f => s"'${f.name}': 'VARCHAR'").mkString(", ")}})"
+}
+
+/** `TextInputFormat` whose splits follow data size and keep file order:
+  * files sorted by path, empty files skipped, and the input cut into
+  * `max(mapreduce.job.maps, ceil(bytes / split.maxsize))` near-equal byte
+  * ranges, each file into `ceil(len / (bytes / ranges))` of them. A file
+  * whose codec cannot split stays one range. Records come from the
+  * inherited `LineRecordReader`.
+  */
+class OrderedTextInputFormat extends TextInputFormat {
+
+  private def ceilDiv(a: Long, b: Long): Long = if (a == 0) 0 else (a - 1) / b + 1
+
+  override def getSplits(job: JobContext): java.util.List[InputSplit] = {
+    val files = listStatus(job).asScala.toSeq
+      .filter(f => f.isFile && f.getLen > 0).sortBy(_.getPath.toString)
+    val bytes = files.map(_.getLen).sum
+    val ranges = math.max(
+      job.getConfiguration.getInt(MRJobConfig.NUM_MAPS, 1).toLong,
+      ceilDiv(bytes, FileInputFormat.getMaxSplitSize(job)))
+    val target = math.max(1L, ceilDiv(bytes, ranges))
+    files.flatMap { f =>
+      val len = f.getLen
+      val pieces = if (isSplitable(job, f.getPath)) ceilDiv(len, target) else 1L
+      (0L until pieces).map { i =>
+        val start = len * i / pieces
+        new FileSplit(f.getPath, start, len * (i + 1) / pieces - start,
+          Array.empty[String]): InputSplit
+      }
+    }.asJava
+  }
 }

@@ -9,12 +9,17 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Row-serialization kernel pieces needing exact reference parity
   * (reference/Sources/Helpers/DelimitedEncoder.swift:122-142).
   *
-  * Doubles render as shortest-round-trip digits WITHOUT scientific
-  * notation — the reference golden pins `-0.00033` (not `-3.3E-4`,
+  * Doubles render WITHOUT scientific notation — the reference golden pins
+  * `-0.00033` (not `-3.3E-4`,
   * reference/Tests/Helpers/DelimitedEncoderTests.swift:80-89), while
-  * Java's `Double.toString` goes scientific below 1e-3 and above 1e7.
-  * `plainString` re-expands the shortest form via BigDecimal, so digits
-  * are identical to the shortest repr, just never scientific.
+  * Java's `Double.toString` goes scientific below 1e-3 and from 1e7 up.
+  * `plainString` sends every finite value through
+  * `new BigDecimal(Double.toString(d)).toPlainString`, which keeps the
+  * digits AND the scale of `Double.toString`, so the bytes are not always
+  * the shortest form: `1.0E-4` renders `0.00010` (trailing zero),
+  * `1.0E7` renders `10000000` while `9999999.0` renders `9999999.0`, and
+  * `-0.0` renders `0.0`. NaN and the infinities keep `Double.toString`.
+  * DelimitedWriterSpec pins these bytes.
   */
 object RenderKernel {
   def plainString(d: Double): UTF8String = {
@@ -26,7 +31,8 @@ object RenderKernel {
 }
 
 /** Codegen'd double→plain-string expression (stays inside whole-stage
-  * codegen; the BigDecimal path only triggers outside [1e-3, 1e7)).
+  * codegen; every finite value takes the BigDecimal path of
+  * [[RenderKernel.plainString]]).
   */
 case class DoublePlainString(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType

@@ -102,9 +102,11 @@ object Extraction {
        |ORDER BY assetID""".stripMargin) { (s, _) =>
     val assets = Decoder.decode(Decoder.readRaw(s, FixturePath, spec), spec).good
       .select(col("assetID"), col("parentAssetID"))
-    // parent edge exists only when the parent names a good row
+    // parent edge exists only when the parent names a good row; the
+    // decoded leaf carries no size estimate, so the dimension-sized side
+    // is broadcast by hint
     val resolvable = assets.as("c")
-      .join(assets.as("p"),
+      .join(broadcast(assets.as("p")),
         col("c.parentAssetID") === col("p.assetID"))
       .select(col("c.assetID").as("child"), col("p.assetID").as("parent"))
     val walk = (1 to 4).foldLeft(

@@ -1,8 +1,17 @@
 package graft.decode
 
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkSuite
+import graft.io.DelimitedWriter
 import graft.schema.{AllocRegistry, MAccount, MAllocation, MSecurity, MStrategy, MTransaction}
 
 /** Decode + reject-routing contract over the committed fixture
@@ -135,5 +144,163 @@ class DecoderSpec extends SparkSuite {
       .where(col("txnAccountID") === "ACC-1" && col("txnAction") === "buy")
       .select(unix_millis(col("txnTransactedAt"))).collect().head.getLong(0)
     assert(ms == java.time.Instant.parse("2021-03-01T18:00:00Z").toEpochMilli)
+  }
+
+  // ---- the ordered split read against Spark's CSV file source ----
+
+  private val header = spec.fields.map(_.name).mkString(",")
+  private val txnRows = Seq(
+    "buy,2021-03-01,ACC-1,BND,,100,85.62,,",
+    "sell,2021-03-02,ACC-1,\"VTI,X\",L1,-10,201.5,1.25,",
+    "buy,2021-13-45,ACC-2,SPY,,5,400,,",
+    ",2021-03-04,ACC-2,SPY,,5,401,,")
+
+  private def write(path: Path, body: String): String = {
+    Files.writeString(path, body)
+    path.toString
+  }
+
+  private def tmpCsv(body: String): String =
+    write(Files.createTempFile("graft_decode", ".csv"), body)
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Oracle: Spark's CSV file source with its own header handling, rows
+    * put in file order (path, then split start — rows within one split
+    * already are).
+    */
+  private def fileSourceRows(path: String): Seq[Row] = {
+    val n = spec.fields.size
+    spark.read.option("header", "true").option("mode", "PERMISSIVE")
+      .schema(spec.rawSchema).csv(path)
+      .select(col("*"), col("_metadata.file_path"), col("_metadata.file_block_start"))
+      .collect().toSeq
+      .sortBy(r => (r.getString(n), r.getLong(n + 1)))
+      .map(r => Row.fromSeq(r.toSeq.take(n)))
+  }
+
+  /** Same rows in the same order as the file source, at the default split
+    * size and with a split every 7 bytes (splits then start mid-line, at
+    * line starts and between CR and LF).
+    */
+  private def assertReadsLikeFileSource(path: String): Seq[Row] = {
+    val expected = fileSourceRows(path)
+    assert(Decoder.readRaw(spark, path, spec).collect().toSeq == expected)
+    withConf("spark.sql.files.maxPartitionBytes", "7") {
+      assert(Decoder.readRaw(spark, path, spec).collect().toSeq == expected)
+    }
+    expected
+  }
+
+  test("readRaw equals the file-source read on a multi-split 4 MB input") {
+    val sb = new StringBuilder(header).append('\n')
+    var i = 0
+    while (sb.length < (4 << 20) + 4096) {
+      sb.append(txnRows(i % txnRows.size).replace("ACC-", s"ACC-$i-")).append('\n')
+      i += 1
+    }
+    val path = tmpCsv(sb.toString)
+    val expected = fileSourceRows(path)
+    assert(expected.size == i)
+    withConf("spark.sql.files.maxPartitionBytes", (1 << 20).toString) {
+      val raw = Decoder.readRaw(spark, path, spec)
+      assert(raw.rdd.getNumPartitions >= 4)
+      assert(raw.collect().toSeq == expected)
+    }
+  }
+
+  test("readRaw on a two-file directory drops each file's header once") {
+    val dir = Files.createTempDirectory("graft_decode_dir")
+    write(dir.resolve("a.csv"), (header +: txnRows.take(2)).mkString("", "\n", "\n"))
+    write(dir.resolve("b.csv"), (header +: txnRows.drop(2)).mkString("", "\n", "\n"))
+    write(dir.resolve("_SUCCESS"), "")
+    val rows = assertReadsLikeFileSource(dir.toString)
+    assert(rows.size == txnRows.size)
+    assert(rows.map(_.getString(2)) == Seq("ACC-1", "ACC-1", "ACC-2", "ACC-2"))
+  }
+
+  test("a data line equal to the header is kept and rejected as bad_date") {
+    val path = tmpCsv(Seq(header, txnRows(0), header, txnRows(1)).mkString("", "\n", "\n"))
+    assert(assertReadsLikeFileSource(path).size == 3)
+    withConf("spark.sql.files.maxPartitionBytes", "7") {
+      val res = Decoder.decode(Decoder.readRaw(spark, path, spec), spec)
+      assert(res.good.count() == 2)
+      assert(res.rejects.select("reason").collect().map(_.getString(0)).toSeq
+        == Seq("bad_date:txnTransactedAt"))
+      res.release()
+    }
+  }
+
+  test("readRaw handles CRLF line endings like the file source") {
+    val path = tmpCsv((header +: txnRows).mkString("", "\r\n", "\r\n"))
+    assert(assertReadsLikeFileSource(path).size == txnRows.size)
+  }
+
+  test("readRaw skips blank lines like the file source") {
+    val path = tmpCsv(Seq("", header, txnRows(0), "", "   ", txnRows(1), txnRows(2), "", "")
+      .mkString("\n"))
+    assert(assertReadsLikeFileSource(path).size == 3)
+  }
+
+  test("readRaw of an empty file is empty, and so is its decode") {
+    val path = tmpCsv("")
+    assert(assertReadsLikeFileSource(path).isEmpty)
+    val res = Decoder.decode(Decoder.readRaw(spark, path, spec), spec)
+    assert(res.good.count() == 0 && res.rejects.count() == 0)
+    res.release()
+  }
+
+  // ---- one parse per decode call ----
+
+  // relative to the project root, the forked test JVM's working directory
+  private val txnFixture = "fixtures/mtransaction.csv"
+
+  test("good and rejects are projections of one checkpointed leaf, with no CSV scan") {
+    val res = Decoder.decode(Decoder.readRaw(spark, txnFixture, spec), spec)
+    val leaves = Seq(res.good, res.rejects).map { df =>
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect { case r: LogicalRelation => r }.isEmpty, plan.toString)
+      val rdds = plan.collect { case l: LogicalRDD => l.rdd }
+      assert(rdds.size == 1, plan.toString)
+      assert(rdds.head.isCheckpointed)
+      rdds.head.id
+    }
+    assert(leaves.distinct.size == 1)
+    res.release()
+  }
+
+  /** Input bytes of the completed stages that scan `path` (its read RDD
+    * is named after it); cached leaf reads are reported under other RDDs.
+    */
+  private final class InputScans(path: String) extends SparkListener {
+    @volatile var scans: Vector[Long] = Vector.empty
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (e.stageInfo.rddInfos.exists(_.name == path)) synchronized {
+        scans :+= e.stageInfo.taskMetrics.inputMetrics.bytesRead
+      }
+  }
+
+  test("writing good and rejects reads the input once; a second decode reads it again") {
+    val path = txnFixture
+    val fileBytes = Files.size(java.nio.file.Paths.get(path))
+    val out = Files.createTempDirectory("graft_decode_once").toString
+    val scans = new InputScans(path)
+    spark.sparkContext.addSparkListener(scans)
+    try {
+      val res = Decoder.decode(Decoder.readRaw(spark, path, spec), spec)
+      DelimitedWriter.writeDelimited(res.good, s"$out/csv")
+      DelimitedWriter.writeJson(res.good, s"$out/jsonl")
+      DelimitedWriter.writeJson(res.rejects, s"$out/rejects")
+      eventually(timeout(10.seconds)) { assert(scans.scans.size == 1) }
+      assert(scans.scans.head >= fileBytes)
+      res.release()
+      Decoder.decode(Decoder.readRaw(spark, path, spec), spec).release()
+      eventually(timeout(10.seconds)) { assert(scans.scans.size == 2) }
+      assert(scans.scans(1) >= fileBytes)
+    } finally spark.sparkContext.removeSparkListener(scans)
   }
 }

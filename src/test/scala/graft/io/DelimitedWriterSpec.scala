@@ -53,6 +53,15 @@ class DelimitedWriterSpec extends SparkSuite {
     assert(renderOne(s, Row(0.01, 0.01, -0.00033)) == "0.01,0.01,-0.00033")
   }
 
+  test("doubles render as BigDecimal plain strings of Double.toString") {
+    // pins today's bytes, which are not always the shortest form
+    val s = StructType(Seq(StructField("a", DoubleType)))
+    val cases = Seq(1.0e-4 -> "0.00010", 1.0e7 -> "10000000",
+      9999999.0 -> "9999999.0", -0.0 -> "0.0", -3.3e-4 -> "-0.00033",
+      Double.NaN -> "NaN")
+    for ((d, want) <- cases) assert(renderOne(s, Row(d)) == want, s"for $d")
+  }
+
   test("cell containing the delimiter is quote-wrapped") {
     val (s, r) = strings2("bl,ah", "bleep")
     assert(renderOne(s, r) == "\"bl,ah\",bleep")
