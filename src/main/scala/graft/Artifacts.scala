@@ -50,7 +50,8 @@ object Artifacts {
   /** Memoize an artifact with an explicit release hook. `build` runs at
     * most once per (session, key); the returned value is shared by every
     * caller until [[release]]. Reentrant: `build` may itself request
-    * other artifacts.
+    * other artifacts. Jobs started by `build` carry the job description
+    * `artifact:<key>`; the caller's is restored afterwards (builds nest).
     */
   def cached[T <: AnyRef](s: SparkSession, key: String)(
       build: => (T, () => Unit)): T = {
@@ -62,7 +63,10 @@ object Artifacts {
       val e1 = entries.get(k)
       if (e1 != null) e1.value.asInstanceOf[T]
       else {
-        val (v, rel) = build
+        val sc = s.sparkContext
+        val caller = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(s"artifact:$key")
+        val (v, rel) = try build finally sc.setJobDescription(caller)
         entries.put(k, Entry(v, rel))
         v
       }

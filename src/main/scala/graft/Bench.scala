@@ -239,8 +239,8 @@ object Bench {
       // the timed pass can reuse (artifacts are keyed by (session,
       // dir)). Left in place they sit as dead executor storage and
       // broadcast handles under the whole timed suite — measured as
-      // part of the r14 suite-crowding overhead. Release them; the JIT/
-      // codegen warmup survives (compiled classes are not artifacts).
+      // part of the r14 suite-crowding overhead. Release them; the JIT warmup
+      // survives, the codegen one only within Spark's 100-class LRU cache.
       try Artifacts.release(spark) catch { case _: Throwable => () }
     }
     // retried query names surface in the JSON (usually empty): a retried

@@ -1,6 +1,8 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** A named query over the driver's parquet tables, with an optional ANSI-SQL
   * oracle (runnable by DuckDB over the same tables). Queries without an
@@ -20,10 +22,38 @@ object GraftQuery {
     GraftQuery(name, fn, None)
 }
 
-/** Loaders for the driver-provided parquet tables (TESTDATA.md). */
+/** Loaders for the parquet tables described in TESTDATA.md.
+  *
+  * Schema contract: [[schemaOf]] infers a table's schema (a one-task
+  * footer job) once per session (held weakly), path, listing (each leaf
+  * file's path, length and mtime, from a Hadoop `listFiles`, no job)
+  * and set `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` confs,
+  * so a table rewritten in place or a reader conf flipped (as [[events]]
+  * does) is re-inferred; reads pass it to `spark.read.schema` and start
+  * no job. Each read is a fresh relation with fresh attribute ids
+  * (self-joins work). Not an [[Artifacts]] entry: release keeps it.
+  */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, TrieMap[Any, StructType]]())
+
+  /** The parquet schema at `path`, cached per the object doc's contract. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(p, true)
+    val listing = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    schemas.synchronized(schemas.computeIfAbsent(spark, _ => TrieMap.empty))
+      .getOrElseUpdate((path, listing, confs), spark.read.parquet(path).schema)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -33,14 +63,13 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = table(s, d, "lineitem")
   /** Normalize the events `ts` column to a UTC TimestampType (µs) across
-    * Spark's two readings of parquet TIMESTAMP(NANOS): builds that honor
-    * `spark.sql.legacy.parquet.nanosAsLong=true` surface raw nano longs
+    * the encodings the reader surfaces: TIMESTAMP(NANOS) under
+    * `spark.sql.legacy.parquet.nanosAsLong=true` is raw nano longs
     * (→ `timestamp_micros(ts div 1000)`, the same ns→µs floor DuckDB
-    * applies), while Spark 4.1.2 ignores that conf and reads NANOS as
-    * TIMESTAMP_NTZ already floor-truncated to µs (verified value-equal to
-    * DuckDB's `epoch_ns // 1000` on the fixture), which in a UTC session
-    * casts 1:1 to TimestampType. Dispatching on the OBSERVED type keeps
-    * both engine generations correct with one code path.
+    * applies; Spark 4.1.2 rejects NANOS without the conf), and the
+    * fixture tables' TIMESTAMP(MICROS, not UTC-adjusted) is
+    * TIMESTAMP_NTZ, which in a UTC session casts 1:1 to TimestampType.
+    * Dispatching on the OBSERVED type keeps both correct with one path.
     */
   def normalizeEventTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
@@ -54,9 +83,8 @@ object Tables {
     }
   }
 
-  /** events.parquet stores `ts` as TIMESTAMP(NANOS); see
-    * [[normalizeEventTs]] for the reader-version dispatch. The legacy
-    * conf is still set first so older builds take the long-nanos path.
+  /** events.parquet's `ts` through [[normalizeEventTs]]. The legacy conf
+    * is set first so a TIMESTAMP(NANOS) `ts` reads as nano longs.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1518,7 +1518,7 @@ object Similarity {
     * streaming. emb_a is the vector's own embedding (the old min_by over
     * k copies of the same array was just the carry trick).
     */
-  private def probeSelection(e: DataFrame, c1: DataFrame,
+  private[operators] def probeSelection(e: DataFrame, c1: DataFrame,
       p: Int = ProbeP): DataFrame = {
     require(p >= 1, s"probe count must be >= 1, got $p")
     VectorFunctions.register(e.sparkSession)
@@ -2751,49 +2751,36 @@ object Similarity {
        |    FROM $src e CROSS JOIN ${p}c1_$m c) t WHERE rn = 1)""".stripMargin
   }
 
-  /** q91: PQ-ADC top-3 search — asymmetric distance computation over the
-    * stored PQ codes. Per query vector, the distance to each subspace
-    * codebook centroid is computed ONCE into a [[PqM]]·[[PqK]]-entry
-    * lookup table; every database vector's approximate distance is then
-    * the order-pinned sum of [[PqM]] LUT entries selected by its stored
-    * code — the float embeddings of the database side never participate.
-    *
-    * Scale shape: the LUT is (queries × M·k) rows — broadcast-sized by
-    * construction (k and M are index constants; a 1000-query batch at
-    * production M=16, k=256 is 4M tiny rows). The candidate join is an
-    * equi-join of the code table (n·M narrow int rows, the 16-32×
-    * compressed artifact) against that broadcast on (m, cell); the
-    * per-pair fold then collapses map-side (partial collect_list), so the
-    * exchange carries ~one row per (query, vector) pair of 8 ints. This
-    * is the PQ serving model: a linear scan of in-memory codes with LUT
-    * adds — here expressed as join + partial agg so Spark distributes the
-    * scan. Composes with IVF (q84's probe pruning) into IVF-PQ: restrict
-    * the code scan to probed cells before the LUT join.
-    *
-    * Determinism: LUT distances are the same left-to-right slice kernel
-    * both engines fold (q56's argument per subspace); the ADC sum is an
-    * ORDER-PINNED fold over m, never a shuffle-order float sum; ranking
-    * ties break on neighbor_id.
+  /** The ADC lookup table of every PQ search tier: (keys…, m, cell, dd),
+    * one slice distance per (query, subspace, codebook centroid). ADC
+    * scores a database vector as the order-pinned sum of the M entries
+    * its stored code selects, so the database side's floats never
+    * participate. `queries` is the key columns plus `qvec`: the query
+    * batch keyed by `qid` ([[batchQueries]]) or the residual tier's
+    * per-probe residuals keyed by (`qid`, `probe_cell`)
+    * ([[probeResiduals]]); `cents` an `mm`-subspace (m, cell, cen)
+    * codebook. The plan is m-keyed: ONE broadcast of the whole codebook,
+    * `qvec` sliced at `m·sd + 1` with `m` a column, so one plan serves
+    * every M (a per-subspace union inlines each `m` as a literal and
+    * compiles and broadcasts once per subspace). |queries|·M·k rows,
+    * broadcast-sized. `dd` is the left-to-right slice kernel both engines
+    * fold; [[lutArrays]] sorts by (m, cell), so row order does not matter.
     */
-  /** The ADC search core shared by q91 (the search) and q92 (its recall
-    * audit): (qid, neighbor_id, rank, adc) for the query batch, rank ≤ 3
-    * by order-pinned ADC sum with neighbor_id tie-break.
-    */
-  /** The query batch's ADC lookup table: (qid, m, cell, dd) — one slice
-    * distance per (query, subspace, codebook centroid). Broadcast-sized
-    * by construction (|batch| · M · k rows).
-    */
-  private def pqLut(e: DataFrame, cents: DataFrame, mm: Int = PqM): DataFrame = {
+  private[operators] def pqLut(queries: DataFrame, cents: DataFrame,
+      mm: Int): DataFrame = {
     val sd = pqSubDim(mm)
-    (0 until mm).map { m =>
-      e.where(col("vec_id") < QueryBatch)
-        .select(col("vec_id").as("qid"),
-          slice(col("embedding"), m * sd + 1, sd).as("qsub"))
-        .crossJoin(broadcast(cents.where(col("m") === m).select(col("cell"), col("cen"))))
-        .select(col("qid"), lit(m).as("m"), col("cell"),
-          VectorFunctions.l2DistSq(col("qsub"), col("cen")).as("dd"))
-    }.reduce(_.union(_))
+    val keys = queries.columns.filter(_ != "qvec").map(col).toSeq
+    queries
+      .crossJoin(broadcast(cents.select("m", "cell", "cen")))
+      .select(keys ++ Seq(col("m"), col("cell"),
+        VectorFunctions.l2DistSq(
+          slice(col("qvec"), col("m") * sd + 1, lit(sd)), col("cen")).as("dd")): _*)
   }
+
+  /** The query batch in [[pqLut]]'s input shape: (qid, qvec). */
+  private[operators] def batchQueries(e: DataFrame): DataFrame =
+    e.where(col("vec_id") < QueryBatch)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
 
   /** Long-form (vec_id, m, cell) codes regrouped to ONE row per vector
     * with the m-ascending cell array — the shape [[AdcSum]] folds over.
@@ -2867,7 +2854,7 @@ object Similarity {
       VectorFunctions.register(s)
       val (cents, codes) = pqTrained(s, d, k, mm)
       val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      adcRank(codes, pqLut(e, cents, mm))
+      adcRank(codes, pqLut(batchQueries(e), cents, mm))
   }
 
   /** The PACKED production code table: one row per vector, the whole
@@ -2883,10 +2870,8 @@ object Similarity {
     graft.Artifacts.checkpointedDf(s, s"pq_prod_packed:$d") {
       VectorFunctions.register(s)
       val (_, codes) = pqTrained(s, d, PqKProd, PqMProd)
-      codes.groupBy("vec_id")
-        .agg(sort_array(collect_list(struct(col("m"), col("cell")))).as("mc"))
-        .select(col("vec_id"),
-          VectorFunctions.packCodes(expr("transform(mc, s -> s.cell)")).as("pqb"))
+      codeCells(codes)
+        .select(col("vec_id"), VectorFunctions.packCodes(col("cells")).as("pqb"))
     }
 
   /** The production-sized ADC plan behind q106: [[pqLut]] at (M=8,
@@ -2905,7 +2890,7 @@ object Similarity {
     val cells = pqProdPacked(s, d)
       .select(col("vec_id"),
         VectorFunctions.unpackCodes(col("pqb")).as("cells"))
-    adcRankCells(cells, pqLut(e, cents, PqMProd))
+    adcRankCells(cells, pqLut(batchQueries(e), cents, PqMProd))
   }
 
   /** Session artifact over [[pqProdAdcPlan]], shared by q106 and the
@@ -2947,6 +2932,7 @@ object Similarity {
        |  WHERE rank <= 3)""".stripMargin
   }
 
+  /** q91: PQ-ADC top-3 search over the stored codes ([[pqAdcTop3]]). */
   private val q91 = GraftQuery(
     "q91_pq_adc_search",
     s"""WITH ${(0 until PqM).map(pqOracleTrain).mkString(",\n")},
@@ -3334,6 +3320,18 @@ object Similarity {
       residualAdcTop3Plan(s, d, k, mm)
     }
 
+  /** The residual tier's [[pqLut]] input, keyed by (qid, probe_cell):
+    * the query's residual PER PROBED CELL (each probe subtracts that
+    * cell's centroid), narrowed to float like the stored residuals.
+    */
+  private[operators] def probeResiduals(probes: DataFrame,
+      c1: DataFrame): DataFrame =
+    probes
+      .join(broadcast(c1.withColumnRenamed("cell", "probe_cell")), "probe_cell")
+      .select(col("vec_id").as("qid"), col("probe_cell"),
+        expr("CAST(zip_with(emb_a, cen, (x, c) -> CAST(x AS DOUBLE) - c)" +
+          " AS array<float>)").as("qvec"))
+
   /** The un-cached plan behind [[residualAdcTop3]] — q101 and q102 both
     * consume the identical ~|batch|·3-row ranked table, so it is a
     * session artifact (measured: the serving chain alone re-executes in
@@ -3343,27 +3341,11 @@ object Similarity {
   private[operators] def residualAdcTop3Plan(s: SparkSession, d: String,
       k: Int = PqK, mm: Int = PqM): DataFrame = {
     VectorFunctions.register(s)
-    val sd = pqSubDim(mm)
     val (c1, a2) = kmTrained(s, d)
     val (rcents, rcodes) = pqResTrained(s, d, k, mm)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val probes = probeSelection(e.where(col("vec_id") < QueryBatch), c1, ProbeP)
-    // query residual PER PROBED CELL (each probe subtracts that cell's
-    // centroid), narrowed to float like the stored residuals
-    val qres = probes
-      .join(broadcast(c1.withColumnRenamed("cell", "probe_cell")), "probe_cell")
-      .select(col("vec_id").as("qid"), col("probe_cell"),
-        expr("CAST(zip_with(emb_a, cen, (x, c) -> CAST(x AS DOUBLE) - c)" +
-          " AS array<float>)").as("qres"))
-    val rlut = (0 until mm).map { m =>
-      qres
-        .select(col("qid"), col("probe_cell"),
-          slice(col("qres"), m * sd + 1, sd).as("qsub"))
-        .crossJoin(broadcast(
-          rcents.where(col("m") === m).select(col("cell"), col("cen"))))
-        .select(col("qid"), col("probe_cell"), lit(m).as("m"), col("cell"),
-          VectorFunctions.l2DistSq(col("qsub"), col("cen")).as("dd"))
-    }.reduce(_.union(_))
+    val rlut = pqLut(probeResiduals(probes, c1), rcents, mm)
     val cand = probes.select(col("vec_id"), col("probe_cell"))
       .join(a2.select(col("vec_id").as("neighbor_id"), col("cell")),
         col("probe_cell") === col("cell") && col("vec_id") =!= col("neighbor_id"))
@@ -3428,7 +3410,7 @@ object Similarity {
       .join(a2.select(col("vec_id").as("neighbor_id"), col("cell")),
         col("probe_cell") === col("cell") && col("vec_id") =!= col("neighbor_id"))
       .select(col("vec_id").as("qid"), col("neighbor_id"))
-    val lut = pqLut(e, cents, mm)
+    val lut = pqLut(batchQueries(e), cents, mm)
     val w = Window.partitionBy("qid").orderBy(col("adc").asc, col("neighbor_id"))
     cand
       .join(codeCells(codes).withColumnRenamed("vec_id", "neighbor_id"),

@@ -22,15 +22,6 @@ final case class UserTotals(user_id: Long, n_events: Long, sum_value: Double)
 
 object EventStreams {
 
-  /** Streaming read of the events table (schema pinned from the batch
-    * read; file streams require an explicit schema).
-    *
-    * File-stream sources must point at a DIRECTORY (Spark's
-    * FileStreamSource injects a basePath for bare files and then rejects
-    * it). At scale `events` is a directory of parquet files already; the
-    * local testdata ships a single file, so that case is staged behind a
-    * symlink directory once per path.
-    */
   /** Stage a single parquet FILE as a directory a file-stream source will
     * accept (shared by every table's streaming reader; at scale tables
     * are directories already and this is a no-op).
@@ -71,13 +62,22 @@ object EventStreams {
       staged.getPath
     }
 
+  /** Streaming read of table `name` with its batch schema
+    * ([[graft.Tables.schemaOf]]; file streams require one). File-stream
+    * sources must point at a DIRECTORY (FileStreamSource injects a
+    * basePath for bare files, then rejects it), so a single-file table,
+    * as in the local testdata, is staged behind a symlink directory.
+    */
+  private def readTable(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.readStream.schema(graft.Tables.schemaOf(spark, path))
+      .parquet(stageAsDir(new java.io.File(path), s"graft_$name"))
+  }
+
+  /** Streaming read of events, `ts` normalized as in [[graft.Tables.events]]. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = new java.io.File(s"$dir/events.parquet")
-    val streamPath = stageAsDir(src, "graft_events")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    graft.Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(streamPath))
+    graft.Tables.normalizeEventTs(readTable(spark, dir, "events"))
   }
 
   /** Streaming read of the documents table — the corpus-INGESTION stream
@@ -85,24 +85,16 @@ object EventStreams {
     * temporal stream: no timestamps, no watermark; consumers are
     * stateless map/anti-join ingest transforms (q98).
     */
-  def readDocuments(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val streamPath = stageAsDir(src, "graft_documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    spark.readStream.schema(schema).parquet(streamPath)
-  }
+  def readDocuments(spark: SparkSession, dir: String): DataFrame =
+    readTable(spark, dir, "documents")
 
   /** Streaming read of the orders table — the trade-LEDGER stream
     * (arriving order files), [[readDocuments]]' finance-side twin: no
     * timestamps beyond the order date, no watermark; consumers are
     * per-account complete-mode aggregations (q394).
     */
-  def readOrders(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/orders.parquet")
-    val streamPath = stageAsDir(src, "graft_orders")
-    val schema = spark.read.parquet(s"$dir/orders.parquet").schema
-    spark.readStream.schema(schema).parquet(streamPath)
-  }
+  def readOrders(spark: SparkSession, dir: String): DataFrame =
+    readTable(spark, dir, "orders")
 
   /** Streaming read of the lineitem table — the trade-line LEDGER stream
     * ([[readOrders]]' line-grain sibling): arriving fill/return lines for
@@ -112,24 +104,16 @@ object EventStreams {
     * order), which is the in-order ingest contract [[ledgerPnlRows]]
     * states.
     */
-  def readLineitem(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/lineitem.parquet")
-    val streamPath = stageAsDir(src, "graft_lineitem")
-    val schema = spark.read.parquet(s"$dir/lineitem.parquet").schema
-    spark.readStream.schema(schema).parquet(streamPath)
-  }
+  def readLineitem(spark: SparkSession, dir: String): DataFrame =
+    readTable(spark, dir, "lineitem")
 
   /** Streaming read of the embeddings table — the index-MAINTENANCE
     * stream (newly embedded shards arriving as files); consumers are the
     * stateless frozen-codebook assign+encode (q109), [[readDocuments]]'
     * vector-side twin.
     */
-  def readEmbeddings(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/embeddings.parquet")
-    val streamPath = stageAsDir(src, "graft_embeddings")
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    spark.readStream.schema(schema).parquet(streamPath)
-  }
+  def readEmbeddings(spark: SparkSession, dir: String): DataFrame =
+    readTable(spark, dir, "embeddings")
 
   /** Tumbling 1-hour windows per event type (streaming q18). */
   def tumblingCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =

@@ -142,11 +142,9 @@ object StreamingQueries {
   /** File-source stream over the staged dir with the same ns→µs timestamp
     * semantics as the batch reads ([[graft.Tables.events]]).
     */
-  private def readStaged(spark: SparkSession, dir: String, stagedDir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    graft.Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(stagedDir))
-  }
+  private def readStaged(spark: SparkSession, dir: String, stagedDir: String): DataFrame =
+    graft.Tables.normalizeEventTs(spark.readStream
+      .schema(graft.Tables.schemaOf(spark, s"$dir/events.parquet")).parquet(stagedDir))
 
   /** Drain a flush-gated streaming transform and return the emitted table. */
   private def runGated(spark: SparkSession, dir: String)(
@@ -1416,7 +1414,7 @@ object StreamingQueries {
     "q284_stream_compaction_plan",
     graft.operators.Pipeline.compactionPlanOracleSql) { (s, d) =>
     val staged = stagedDocsWithFlush(s, d)
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
+    val schema = graft.Tables.schemaOf(s, s"$d/documents.parquet")
     // +1s so the first file (sequence 0) sits strictly ABOVE the initial
     // watermark — the stateful late-row filter drops rows at/below it
     val files = s.readStream.schema(schema).parquet(staged)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,4 +21,33 @@ object SparkTestBase {
 
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** Runs `body` and returns its value with the descriptions of the jobs
+    * that started meanwhile ("null" for an unlabelled job). A fence job
+    * run after `body` is awaited on the listener bus, which delivers
+    * events in order, so every earlier job start has been recorded.
+    */
+  def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    val fence = s"fence-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var fenced = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = String.valueOf(e.properties.getProperty("spark.job.description"))
+        if (d == fence) fenced = true else if (!fenced) seen.add(d)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val v = body
+      val caller = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(fence)
+      try spark.range(1).count() finally sc.setJobDescription(caller)
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!fenced && System.nanoTime < deadline) Thread.sleep(10)
+      assert(fenced, "the fence job never reached the listener")
+      (v, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }

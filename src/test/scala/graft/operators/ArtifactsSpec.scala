@@ -177,4 +177,27 @@ class ArtifactsSpec extends SparkSuite {
     assert(v == (1 to 256).sum)
     Artifacts.release(spark)
   }
+
+  test("artifact builds label their jobs artifact:<key> and restore the caller's label") {
+    // q106's cold pass: the pq_prod_top3 leaf's own jobs carry its key,
+    // the nested index and packed-code builds carry theirs, and the
+    // caller's description survives the nesting
+    Artifacts.release(spark)
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("caller")
+    try {
+      val (_, labels) = jobsDuring {
+        graft.SparkEntry.queries("q106_pq_prod_search")(spark, dir).collect()
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+      }
+      val keys = Seq(s"pq_prod_top3:$dir",
+        s"pq_index:$dir:k=${Similarity.PqKProd}:m=${Similarity.PqMProd}",
+        s"pq_prod_packed:$dir")
+      for (key <- keys)
+        assert(labels.contains(s"artifact:$key"), s"no job labelled artifact:$key in $labels")
+      assert(labels.contains("caller"), s"the serving jobs lost the caller's label: $labels")
+    } finally sc.setLocalProperty("spark.job.description", caller)
+    Artifacts.release(spark)
+  }
 }

@@ -1,8 +1,11 @@
 package graft.operators
 
+import scala.math.Ordering.Implicits._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSuite
+import graft.{SparkSuite, Tables}
+import graft.functions.VectorFunctions
 
 /** Live-data parity for the round-18 kernel promotions (VERDICT r17
   * item 4): each promoted codegen kernel must be BIT-IDENTICAL to the
@@ -279,5 +282,66 @@ class KernelParitySpec extends SparkSuite {
     assert(rows(0).getSeq[Long](2) == Seq(4L, 6L, 10L, 9L, 15L, 25L))
     assert(rows(1).isNullAt(2), "a null element must null the whole result")
     assert(rows(2).getSeq[Long](2).isEmpty, "empty input -> empty triangle")
+  }
+
+  // ---- PQ lookup table: the m-keyed plan vs the per-subspace union ----
+  // The union it replaced is kept here as the oracle: the same rows with
+  // bit-identical `dd` for the raw query batch and for the residual tier's
+  // per-probe queries, at the fixture (M=4, k=16) and production
+  // (M=8, k=256) sizings.
+
+  /** One cross join per subspace against that subspace's filtered
+    * codebook broadcast, with `m` and the slice offset as literals.
+    */
+  private def unionLut(queries: DataFrame, cents: DataFrame, mm: Int): DataFrame = {
+    val sd = queries.select(size(col("qvec"))).head().getInt(0) / mm
+    val keys = queries.columns.filter(_ != "qvec").map(col).toSeq
+    (0 until mm).map { m =>
+      queries
+        .select(keys :+ slice(col("qvec"), m * sd + 1, sd).as("qsub"): _*)
+        .crossJoin(broadcast(
+          cents.where(col("m") === m).select(col("cell"), col("cen"))))
+        .select(keys ++ Seq(lit(m).as("m"), col("cell"),
+          VectorFunctions.l2DistSq(col("qsub"), col("cen")).as("dd")): _*)
+    }.reduce(_.union(_))
+  }
+
+  /** Rows as ((keys…, m, cell), raw dd bits), sorted. */
+  private def rows(lut: DataFrame): Seq[(Seq[Long], Long)] =
+    lut.collect().toSeq.map { r =>
+      val n = r.length
+      ((0 until n - 1).map(i => r.getAs[Number](i).longValue),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(n - 1)))
+    }.sortBy(_._1)
+
+  private def assertParity(label: String, queries: DataFrame,
+      cents: DataFrame, mm: Int): Unit = {
+    val got = rows(Similarity.pqLut(queries, cents, mm))
+    val want = rows(unionLut(queries, cents, mm))
+    assert(want.size == queries.count() * cents.count(),
+      s"$label: oracle size ${want.size}")
+    assert(got.size == want.size, s"$label: ${got.size} rows vs ${want.size}")
+    val diff = got.zip(want).filter { case (g, w) => g != w }
+    assert(diff.isEmpty, s"$label: ${diff.size} rows differ, first ${diff.headOption}")
+  }
+
+  for ((mm, k) <- Seq((4, 16), (Similarity.PqMProd, Similarity.PqKProd))) {
+    test(s"raw query-batch LUT matches the per-subspace union (M=$mm, k=$k)") {
+      VectorFunctions.register(spark)
+      val (cents, _) = Similarity.pqTrained(spark, dir, k, mm)
+      val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+      assertParity("raw", Similarity.batchQueries(e), cents, mm)
+    }
+
+    test(s"residual per-probe LUT matches the per-subspace union (M=$mm, k=$k)") {
+      VectorFunctions.register(spark)
+      val (c1, _) = Similarity.kmTrained(spark, dir)
+      val (rcents, _) = Similarity.pqResTrained(spark, dir, k, mm)
+      val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+      val probes = Similarity.probeSelection(
+        e.where(col("vec_id") < Similarity.QueryBatch), c1, 2)
+      val queries = Similarity.probeResiduals(probes, c1)
+      assertParity("residual", queries, rcents, mm)
+    }
   }
 }
