@@ -1,67 +1,169 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.ArrayData
 
-/** Library entry point for `spark.sql.extensions` — registers the whole
-  * graft codegen-function surface on every session of the cluster:
+import graft.functions._
+
+/** The catalog of graft SQL functions: every custom Catalyst expression is
+  * declared here once, as a (name, usage, builder) [[GraftExtensions.Fn]].
+  * The function modules keep only their `Expression` classes and the typed
+  * Column helpers that call these names.
   *
-  * {{{
-  *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  *   // or
-  *   SparkSession.builder().withExtensions(new GraftExtensions()(_))
-  * }}}
+  * A session gets the catalog one of two ways, with the same metadata:
   *
-  * This is the deployment-grade alternative to the per-module
-  * `register(spark)` calls the query registry uses internally (those
-  * remain so each query is self-contained against a vanilla session):
-  * extension-injected functions live in the session's catalog from
-  * construction, so SQL users get `cosine_sim` & co. without any Scala.
+  *  - as the `spark.sql.extensions` entry point, which injects it into
+  *    every session of a cluster, so SQL users get `cosine_sim` & co.
+  *    without any Scala:
+  *    {{{
+  *      spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
+  *      // or
+  *      SparkSession.builder().withExtensions(new GraftExtensions()(_))
+  *    }}}
+  *  - through [[GraftExtensions.install]], which registers what a session
+  *    lacks. It runs where a vanilla session reaches graft code: in every
+  *    [[GraftQuery]]'s `fn`, before the plan is built, and in
+  *    [[graft.io.DelimitedWriter.renderLines]] on the export path.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
-    GraftExtensions.functions.foreach { case (name, usage, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft", null, name, usage, ""), builder))
-    }
+    GraftExtensions.functions.foreach(f => ext.injectFunction((f.id, f.info, f.builder)))
 }
 
 object GraftExtensions {
-  /** (name, usage doc, builder) for every custom Catalyst expression. */
-  private[graft] val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float vectors",
-      graft.functions.VectorFunctions.cosineBuilder),
-    ("l2_dist_sq", "l2_dist_sq(v, c) - squared L2 distance of a float vector to a double centroid",
-      graft.functions.VectorFunctions.l2Builder),
-    ("poly_hash", "poly_hash(s) - order-sensitive polynomial rolling hash mod 1e9+7",
-      graft.functions.PolyHash.builder),
-    ("simhash64", "simhash64(tokens) - 64-bit simhash of a token array",
-      graft.functions.SimHash64.builder),
-    ("double_plain", "double_plain(x) - reference-parity plain (non-scientific) double rendering",
-      graft.functions.DoublePlainString.builder),
-    ("byte_pool", "byte_pool(payload, n) - average-pool a string payload's bytes into n windows",
-      graft.functions.BytePool.builder),
-    ("int8_quant_stats",
-      "int8_quant_stats(v) - [qscale, rmse, max_abs_err, rel_err] of symmetric int8 quantization",
-      graft.functions.VectorFunctions.int8QuantBuilder),
-    ("int8_quant_cosine",
-      "int8_quant_cosine(a, b) - cosine similarity on the vectors' symmetric int8 codes",
-      graft.functions.VectorFunctions.int8CosineBuilder),
-    ("int8_encode",
-      "int8_encode(v) - materialized symmetric int8 codes of a float vector (array<tinyint>)",
-      graft.functions.VectorFunctions.int8EncodeBuilder),
-    ("int8_code_dot",
-      "int8_code_dot(a, b) - exact integer dot product of two stored int8 code arrays",
-      graft.functions.VectorFunctions.int8CodeDotBuilder),
-    ("pack_codes",
-      "pack_codes(codes) - pack an array of [0,255] subspace codes into one byte each (binary)",
-      graft.functions.VectorFunctions.packCodesBuilder),
-    ("unpack_codes",
-      "unpack_codes(b) - unsigned unpack of a pack_codes byte string back to array<int>",
-      graft.functions.VectorFunctions.unpackCodesBuilder),
-    ("graft_bloom_might_contain",
-      "graft_bloom_might_contain(filter, key) - probe a long key against a serialized bloom filter literal",
-      graft.functions.BloomFilterFunctions.builder),
+  /** One SQL function; `usage` is `"<call form> - <description>"`. */
+  final case class Fn(name: String, usage: String, builder: Seq[Expression] => Expression) {
+    val id: FunctionIdentifier = FunctionIdentifier(name)
+    val info: ExpressionInfo = new ExpressionInfo("graft", null, name, usage, "")
+  }
+
+  /** Registers every catalog function `spark` lacks. A present name is left
+    * alone: re-registering would log Spark's "replaced a previously
+    * registered function" warning on every query construction.
+    */
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { f =>
+      if (!registry.functionExists(f.id)) registry.registerFunction(f.id, f.info, f.builder)
+    }
+  }
+
+  /** A literal integer argument: foldable, and an Int or a Long in Int range. */
+  private def foldableInt(e: Expression, what: String): Int = {
+    require(e.foldable, s"$what must be a literal integer")
+    e.eval() match {
+      case i: Int => i
+      case l: Long =>
+        require(l == l.toInt.toLong, s"$what out of int range: $l")
+        l.toInt
+      case o => throw new IllegalArgumentException(
+        s"$what must be an integer literal, got $o")
+    }
+  }
+
+  /** A literal bigint array argument. */
+  private def foldableLongs(e: Expression, what: String): Seq[Long] = {
+    require(e.foldable, s"$what must be a literal bigint array")
+    e.eval() match {
+      case a: ArrayData => a.toLongArray().toSeq
+      case o => throw new IllegalArgumentException(
+        s"$what must be a bigint array literal, got $o")
+    }
+  }
+
+  /** An entry whose call form `sig` (e.g. `cosine_sim(a, b)`) names the
+    * function and takes exactly `arity` arguments.
+    */
+  private def fn(sig: String, doc: String, arity: Int)(
+      build: Seq[Expression] => Expression): Fn =
+    Fn(sig.takeWhile(_ != '('), s"$sig - $doc", exprs => {
+      require(exprs.length == arity,
+        s"$sig takes exactly $arity argument${if (arity == 1) "" else "s"}")
+      build(exprs)
+    })
+
+  val functions: Seq[Fn] = Seq(
+    // vector kernels
+    fn("cosine_sim(a, b)", "cosine similarity of two float vectors", 2)(
+      e => CosineSimilarity(e(0), e(1))),
+    fn("cosine_sim_d(a, b)", "cosine similarity of two double vectors", 2)(
+      e => CosineSimilarityD(e(0), e(1))),
+    Fn("prefix_cosines",
+      "prefix_cosines(a, b, m1, ...) - cosines of the nested prefixes cut at each literal m",
+      e => {
+        require(e.length >= 3,
+          "prefix_cosines(a, b, m1, ...) takes 2 arrays + >=1 cut literal")
+        PrefixCosines(e(0), e(1), e.drop(2).map(foldableInt(_, "prefix_cosines cut point")))
+      }),
+    fn("l2_dist_sq(v, c)", "squared L2 distance of a float vector to a double centroid", 2)(
+      e => L2DistanceSq(e(0), e(1))),
+    fn("tri_products(xs)", "flattened upper-triangle self outer product", 1)(
+      e => TriProducts(e(0))),
+    fn("srp_bucket(embedding, bits)", "packed sign bits of a literal-width random projection", 2)(
+      e => SrpBucket(e(0), foldableInt(e(1), "srp_bucket bits"))),
+    fn("jl_project(embedding, kOut, dim)", "JL sign projection to kOut floats", 3)(
+      e => JlProject(e(0), foldableInt(e(1), "jl_project kOut"),
+        foldableInt(e(2), "jl_project dim"))),
+    fn("nearest_cell(x, cells, cens_flat)", "k-means argmin over a literal codebook", 3)(
+      e => NearestCell(e(0), e(1), e(2))),
+    fn("nearest_cells(x, cells, cens_flat, p)",
+      "the p nearest cells of a literal codebook in (d, cell) order", 4)(
+      e => NearestCells(e(0), e(1), e(2), foldableInt(e(3), "nearest_cells p"))),
+    fn("cell_mean(vals)", "per-dimension mean of a sorted member list", 1)(
+      e => CellMean(e(0))),
+    fn("adc_sum(cells, lut_keys, lut_dds)", "order-pinned ADC fold over a LUT pair", 3)(
+      e => AdcSum(e(0), e(1), e(2))),
+    fn("sorted_overlap(a, b)", "overlap count of two sorted-distinct bigint arrays", 2)(
+      e => SortedOverlapCount(e(0), e(1))),
+    fn("sorted_overlap_str(a, b)", "overlap count of two sorted-distinct string arrays", 2)(
+      e => SortedOverlapStrCount(e(0), e(1))),
+    fn("int8_quant_stats(v)",
+      "[qscale, rmse, max_abs_err, rel_err] of symmetric int8 quantization", 1)(
+      e => Int8QuantStats(e(0))),
+    fn("int8_quant_cosine(a, b)", "cosine similarity on the vectors' symmetric int8 codes", 2)(
+      e => Int8QuantCosine(e(0), e(1))),
+    fn("int8_encode(v)",
+      "materialized symmetric int8 codes of a float vector (array<tinyint>)", 1)(
+      e => Int8Encode(e(0))),
+    fn("int8_code_dot(a, b)", "exact integer dot product of two stored int8 code arrays", 2)(
+      e => Int8CodeDot(e(0), e(1))),
+    fn("pack_codes(codes)",
+      "pack an array of [0,255] subspace codes into one byte each (binary)", 1)(
+      e => PackCodes(e(0))),
+    fn("unpack_codes(b)", "unsigned unpack of a pack_codes byte string back to array<int>", 1)(
+      e => UnpackCodes(e(0))),
+    // string and token hashes
+    fn("poly_hash(s)", "order-sensitive polynomial rolling hash mod 1e9+7", 1)(
+      e => PolyHash(e(0))),
+    fn("poly_hash_all(arr)", "poly_hash of every element", 1)(
+      e => PolyHashAll(e(0))),
+    fn("shingles3(ts)", "distinct word 3-grams of a token array", 1)(
+      e => Shingles3(e(0))),
+    fn("gram_hashes(ts, n)", "positional n-gram poly-hashes", 2)(
+      e => GramHashes(e(0), foldableInt(e(1), "gram_hashes n"))),
+    fn("distinct_gram_hashes(ts, n)",
+      "string-distinct n-gram poly-hashes in first-occurrence order", 2)(
+      e => DistinctGramHashes(e(0), foldableInt(e(1), "distinct_gram_hashes n"))),
+    fn("min_hash_sig(hv, as, bs, p)", "all-component minhash signature of a hash array", 4)(
+      e => MinHashSig(e(0), foldableLongs(e(1), "min_hash_sig as"),
+        foldableLongs(e(2), "min_hash_sig bs"), foldableInt(e(3), "min_hash_sig p").toLong)),
+    fn("simhash64(tokens)", "64-bit simhash of a token array", 1)(
+      e => SimHash64(e(0))),
+    fn("byte_pool(payload, n)", "average-pool a string payload's bytes into n windows", 2)(
+      e => BytePool(e(0), foldableInt(e(1), "byte_pool n"))),
+    fn("pool_thresh_hash(p, bits)", "average-threshold hash of a pooled window array", 2)(
+      e => PoolThreshHash(e(0), foldableInt(e(1), "pool_thresh_hash bits"))),
+    // rendering and probes
+    fn("double_plain(x)", "reference-parity plain (non-scientific) double rendering", 1)(
+      e => DoublePlainString(e(0))),
+    fn("graft_bloom_might_contain(filter, key)",
+      "probe a long key against a serialized bloom filter literal", 2)(
+      e => BloomMightContain(e(0), e(1))),
+    fn("graft_bloom_probe(handleId, key)",
+      "probe a long key against the broadcast bloom filter behind a handle", 2)(
+      e => BloomMightContainBc(
+        BloomFilterFunctions.handle(foldableInt(e(0), "graft_bloom_probe handle id")), e(1))),
   )
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.StructType
 /** A named query over the driver's parquet tables, with an optional ANSI-SQL
   * oracle (runnable by DuckDB over the same tables). Queries without an
   * oracle get the driver's weaker rows-only check.
+  * The companion's constructors wrap `fn` so that it installs the
+  * [[GraftExtensions]] catalog on its session before it builds the plan.
   */
 final case class GraftQuery(
     name: String,
@@ -16,10 +18,16 @@ final case class GraftQuery(
 object GraftQuery {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, fn, Some(oracle))
+    GraftQuery(name, installing(fn), Some(oracle))
   def noOracle(name: String)(
       fn: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, fn, None)
+    GraftQuery(name, installing(fn), None)
+
+  private def installing(fn: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = { (s, d) =>
+    GraftExtensions.install(s)
+    fn(s, d)
+  }
 }
 
 /** Loaders for the parquet tables described in TESTDATA.md.

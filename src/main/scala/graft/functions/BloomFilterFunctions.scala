@@ -119,13 +119,6 @@ case class BloomMightContainBc(
 }
 
 object BloomFilterFunctions {
-  private[graft] val builder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2,
-        "graft_bloom_might_contain(filter, key) takes exactly 2 arguments")
-      BloomMightContain(exprs.head, exprs(1))
-    }
-
   /** Live broadcast handles, keyed by the id embedded in the plan.
     *
     * Lifecycle: an entry (and the driver+executor memory its broadcast
@@ -153,25 +146,11 @@ object BloomFilterFunctions {
   /** Live handle count (test/observability hook). */
   private[graft] def liveHandles: Int = handles.size
 
-  private[graft] val bcBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2,
-        "graft_bloom_probe(handleId, key) takes exactly 2 arguments")
-      val id = exprs.head.eval(null) match {
-        case i: Int => i
-        case other => throw new IllegalArgumentException(
-          s"graft_bloom_probe handle id must be an int literal, got $other")
-      }
-      val bc = handles.get(id)
-      require(bc != null, s"graft_bloom_probe: no broadcast filter with handle $id")
-      BloomMightContainBc(bc, exprs(1))
-    }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain", builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_probe", bcBuilder, "built-in")
+  /** The live filter behind a `graft_bloom_probe` handle id. */
+  private[graft] def handle(id: Int): org.apache.spark.broadcast.Broadcast[BloomFilter] = {
+    val bc = handles.get(id)
+    require(bc != null, s"graft_bloom_probe: no broadcast filter with handle $id")
+    bc
   }
 
   /** Column-API probe via binary literal — fine for small filters and

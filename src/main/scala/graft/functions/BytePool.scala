@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -133,43 +133,17 @@ case class PoolThreshHash(child: Expression, bits: Int)
     copy(child = newChild)
 }
 
+/** Typed Column helpers over `byte_pool` and `pool_thresh_hash` of the
+  * [[graft.GraftExtensions]] catalog (the int argument is a literal in
+  * both).
+  */
 object BytePool {
-  private[graft] val builder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2 && exprs(1).foldable,
-        "byte_pool(s, n) requires a foldable integer window count")
-      val n = exprs(1).eval(null)
-      require(n != null && n.isInstanceOf[Number],
-        "byte_pool(s, n) requires a non-null integer window count")
-      BytePool(exprs.head, n.asInstanceOf[Number].intValue())
-    }
-
-  private[graft] val threshHashBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2 && exprs(1).foldable,
-        "pool_thresh_hash(p, bits) requires a foldable integer bit count")
-      val n = exprs(1).eval(null)
-      require(n != null && n.isInstanceOf[Number],
-        "pool_thresh_hash(p, bits) requires a non-null integer bit count")
-      PoolThreshHash(exprs.head, n.asInstanceOf[Number].intValue())
-    }
-
-  /** Register `byte_pool(s, n)` and `pool_thresh_hash(p, bits)` (the int
-    * argument must be a foldable literal in both).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "byte_pool", builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pool_thresh_hash", threshHashBuilder, "built-in")
-  }
-
   def pool(c: Column, n: Int): Column = {
     import org.apache.spark.sql.functions.{call_function, lit}
     call_function("byte_pool", c, lit(n))
   }
 
-  /** Average-threshold hash of a pooled window array, post-[[register]]. */
+  /** Average-threshold hash of a pooled window array. */
   def threshHash(c: Column, bits: Int): Column = {
     import org.apache.spark.sql.functions.{call_function, lit}
     call_function("pool_thresh_hash", c, lit(bits))

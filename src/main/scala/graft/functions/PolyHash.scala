@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -445,126 +445,40 @@ case class MinHashSig(child: Expression, as: Seq[Long], bs: Seq[Long],
     copy(child = newChild)
 }
 
+/** Typed Column helpers over the poly-hash and minhash functions of the
+  * [[graft.GraftExtensions]] catalog.
+  */
 object PolyHash {
-  /** Register `poly_hash(s)` for SQL/expr use (usable inside higher-order
-    * function lambdas, where the Column API can't reach).
-    */
-  private[graft] val builder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 1, "poly_hash(s) takes exactly 1 argument")
-      PolyHash(exprs.head)
-    }
-
-  private[graft] val shingles3Builder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 1, "shingles3(ts) takes exactly 1 argument")
-      Shingles3(exprs.head)
-    }
-
-  private[graft] val polyHashAllBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 1,
-        "poly_hash_all(arr) takes exactly 1 argument")
-      PolyHashAll(exprs.head)
-    }
-
-  private def foldableLongs(e: Expression, what: String): Seq[Long] = {
-    require(e.foldable, s"$what must be a literal bigint array")
-    e.eval() match {
-      case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-        a.toLongArray().toSeq
-      case o => throw new IllegalArgumentException(
-        s"$what must be a bigint array literal, got $o")
-    }
-  }
-
-  private def foldableInt(e: Expression, what: String): Int = {
-    require(e.foldable, s"$what must be a literal integer")
-    e.eval() match {
-      case i: Int => i
-      case l: Long =>
-        require(l == l.toInt.toLong, s"$what out of int range: $l")
-        l.toInt
-      case o => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $o")
-    }
-  }
-
-  private[graft] val gramHashesBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2,
-        "gram_hashes(ts, n) takes exactly 2 arguments")
-      GramHashes(exprs.head, foldableInt(exprs(1), "gram_hashes n"))
-    }
-
-  private[graft] val distinctGramHashesBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2,
-        "distinct_gram_hashes(ts, n) takes exactly 2 arguments")
-      DistinctGramHashes(exprs.head,
-        foldableInt(exprs(1), "distinct_gram_hashes n"))
-    }
-
-  private[graft] val minHashSigBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 4,
-        "min_hash_sig(hv, as, bs, p) takes exactly 4 arguments")
-      val p = exprs(3).eval() match {
-        case l: Long => l
-        case i: Int => i.toLong
-        case o => throw new IllegalArgumentException(
-          s"min_hash_sig p must be an integer literal, got $o")
-      }
-      MinHashSig(exprs.head,
-        foldableLongs(exprs(1), "min_hash_sig as"),
-        foldableLongs(exprs(2), "min_hash_sig bs"), p)
-    }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles3", shingles3Builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash_all", polyHashAllBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "min_hash_sig", minHashSigBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_hashes", gramHashesBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "distinct_gram_hashes", distinctGramHashesBuilder, "built-in")
-  }
-
   def hash(c: Column): Column = {
     import org.apache.spark.sql.functions.call_function
     call_function("poly_hash", c)
   }
 
-  /** One-pass distinct word-3-grams of a token array, post-[[register]]. */
+  /** One-pass distinct word-3-grams of a token array. */
   def shingles3(ts: Column): Column = {
     import org.apache.spark.sql.functions.call_function
     call_function("shingles3", ts)
   }
 
-  /** One-pass [[PolyHashKernel.hash]] over every element, post-[[register]]. */
+  /** One-pass [[PolyHashKernel.hash]] over every element. */
   def hashAll(arr: Column): Column = {
     import org.apache.spark.sql.functions.call_function
     call_function("poly_hash_all", arr)
   }
 
-  /** One-pass all-component minhash signature, post-[[register]]. */
+  /** One-pass all-component minhash signature. */
   def minHashSig(hv: Column, as: Seq[Long], bs: Seq[Long], p: Long): Column = {
     import org.apache.spark.sql.functions.{call_function, lit, typedLit}
     call_function("min_hash_sig", hv, typedLit(as), typedLit(bs), lit(p))
   }
 
-  /** Positional n-gram poly-hashes (index i ↦ gram at i+1), post-[[register]]. */
+  /** Positional n-gram poly-hashes (index i ↦ gram at i+1). */
   def gramHashes(ts: Column, n: Int): Column = {
     import org.apache.spark.sql.functions.{call_function, lit}
     call_function("gram_hashes", ts, lit(n))
   }
 
-  /** String-distinct n-gram poly-hashes in first-occurrence order, post-[[register]]. */
+  /** String-distinct n-gram poly-hashes in first-occurrence order. */
   def distinctGramHashes(ts: Column, n: Int): Column = {
     import org.apache.spark.sql.functions.{call_function, lit}
     call_function("distinct_gram_hashes", ts, lit(n))

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
@@ -54,20 +54,10 @@ case class DoublePlainString(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** Column form of the catalog's `double_plain(x)` (Spark 4 exposes no
+  * public Expression→Column constructor).
+  */
 object DoublePlainString {
-  /** Register `double_plain(x)`; Column form via call_function (Spark 4
-    * exposes no public Expression→Column constructor).
-    */
-  private[graft] val builder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 1, "double_plain(x) takes exactly 1 argument")
-      DoublePlainString(exprs.head)
-    }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "double_plain", builder, "built-in")
-
   def plain(c: Column): Column = {
     import org.apache.spark.sql.functions.call_function
     call_function("double_plain", c)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -68,16 +68,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 }
 
 object SimHash64 {
-  private[graft] val builder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 1, "simhash64(features) takes exactly 1 argument")
-      SimHash64(exprs.head)
-    }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", builder, "built-in")
-
   def of(c: Column): Column = {
     import org.apache.spark.sql.functions.call_function
     call_function("simhash64", c)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -1497,295 +1497,113 @@ case class JlProject(child: Expression, kOut: Int, dim: Int)
     copy(child = newChild)
 }
 
+/** Typed Column helpers over the vector functions of the
+  * [[graft.GraftExtensions]] catalog.
+  */
 object VectorFunctions {
-  /** Register `cosine_sim(a, b)` for SQL/expr use on a session. Idempotent;
-    * queries that need the expression call this first, then refer to it via
-    * `expr("cosine_sim(...)")` (Spark 4's Column API no longer exposes a
-    * public Expression→Column constructor).
-    */
-  private[graft] val cosineBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2, "cosine_sim(a, b) takes exactly 2 arguments")
-      CosineSimilarity(exprs(0), exprs(1))
-    }
-  private[graft] val l2Builder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2, "l2_dist_sq(v, c) takes exactly 2 arguments")
-      L2DistanceSq(exprs(0), exprs(1))
-    }
-  private[graft] val int8QuantBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 1, "int8_quant_stats(v) takes exactly 1 argument")
-      Int8QuantStats(exprs.head)
-    }
-  private[graft] val int8CosineBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2, "int8_quant_cosine(a, b) takes exactly 2 arguments")
-      Int8QuantCosine(exprs(0), exprs(1))
-    }
-  private[graft] val int8EncodeBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 1, "int8_encode(v) takes exactly 1 argument")
-      Int8Encode(exprs.head)
-    }
-  private[graft] val int8CodeDotBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2, "int8_code_dot(a, b) takes exactly 2 arguments")
-      Int8CodeDot(exprs(0), exprs(1))
-    }
-  private[graft] val packCodesBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 1, "pack_codes(codes) takes exactly 1 argument")
-      PackCodes(exprs.head)
-    }
-  private[graft] val unpackCodesBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 1, "unpack_codes(b) takes exactly 1 argument")
-      UnpackCodes(exprs.head)
-    }
-  private[graft] val cosineDBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2, "cosine_sim_d(a, b) takes exactly 2 arguments")
-      CosineSimilarityD(exprs(0), exprs(1))
-    }
-  private[graft] val triProductsBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 1, "tri_products(xs) takes exactly 1 argument")
-      TriProducts(exprs.head)
-    }
-  private[graft] val prefixCosinesBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length >= 3,
-        "prefix_cosines(a, b, m1, ...) takes 2 arrays + >=1 cut literal")
-      val cuts = exprs.drop(2).map { e =>
-        require(e.foldable,
-          "prefix_cosines cut points must be literal integers")
-        e.eval() match {
-          case i: Int => i
-          case l: Long =>
-            require(l == l.toInt.toLong,
-              s"prefix_cosines cut point out of int range: $l")
-            l.toInt
-          case o => throw new IllegalArgumentException(
-            s"prefix_cosines cut point must be an integer literal, got $o")
-        }
-      }
-      PrefixCosines(exprs(0), exprs(1), cuts)
-    }
-
-  private def foldableInt(e: Expression, what: String): Int = {
-    require(e.foldable, s"$what must be a literal integer")
-    e.eval() match {
-      case i: Int => i
-      case l: Long =>
-        require(l == l.toInt.toLong, s"$what out of int range: $l")
-        l.toInt
-      case o => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $o")
-    }
-  }
-
-  private[graft] val srpBucketBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2,
-        "srp_bucket(embedding, bits) takes exactly 2 arguments")
-      SrpBucket(exprs.head, foldableInt(exprs(1), "srp_bucket bits"))
-    }
-  private[graft] val nearestCellBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 3,
-        "nearest_cell(x, cells, cens_flat) takes exactly 3 arguments")
-      NearestCell(exprs(0), exprs(1), exprs(2))
-    }
-  private[graft] val nearestCellsBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 4,
-        "nearest_cells(x, cells, cens_flat, p) takes exactly 4 arguments")
-      NearestCells(exprs(0), exprs(1), exprs(2),
-        foldableInt(exprs(3), "nearest_cells p"))
-    }
-  private[graft] val cellMeanBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 1,
-        "cell_mean(vals) takes exactly 1 argument")
-      CellMean(exprs.head)
-    }
-  private[graft] val adcSumBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 3,
-        "adc_sum(cells, lut_keys, lut_dds) takes exactly 3 arguments")
-      AdcSum(exprs(0), exprs(1), exprs(2))
-    }
-  private[graft] val sortedOverlapBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2,
-        "sorted_overlap(a, b) takes exactly 2 arguments")
-      SortedOverlapCount(exprs(0), exprs(1))
-    }
-  private[graft] val sortedOverlapStrBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 2,
-        "sorted_overlap_str(a, b) takes exactly 2 arguments")
-      SortedOverlapStrCount(exprs(0), exprs(1))
-    }
-  private[graft] val jlProjectBuilder: Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == 3,
-        "jl_project(embedding, kOut, dim) takes exactly 3 arguments")
-      JlProject(exprs.head, foldableInt(exprs(1), "jl_project kOut"),
-        foldableInt(exprs(2), "jl_project dim"))
-    }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "srp_bucket", srpBucketBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jl_project", jlProjectBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", cosineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2_dist_sq", l2Builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_quant_stats", int8QuantBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_quant_cosine", int8CosineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_encode", int8EncodeBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_code_dot", int8CodeDotBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pack_codes", packCodesBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unpack_codes", unpackCodesBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "prefix_cosines", prefixCosinesBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim_d", cosineDBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tri_products", triProductsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_overlap", sortedOverlapBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_overlap_str", sortedOverlapStrBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "adc_sum", adcSumBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cell", nearestCellBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cells", nearestCellsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cell_mean", cellMeanBuilder, "built-in")
-  }
-
-  /** Column-API form, valid on any session where [[register]] has run. */
+  /** Cosine similarity of two float vectors. */
   def cosineSim(a: Column, b: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("cosine_sim", a, b)
   }
 
-  /** Squared L2 (float vector vs double centroid), post-[[register]]. */
+  /** Squared L2 (float vector vs double centroid). */
   def l2DistSq(a: Column, b: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("l2_dist_sq", a, b)
   }
 
-  /** Int8 quantization audit vector, post-[[register]]. */
+  /** Int8 quantization audit vector. */
   def int8QuantStats(v: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("int8_quant_stats", v)
   }
 
-  /** Cosine on int8 codes, post-[[register]]. */
-  def int8QuantCosine(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.{call_function}
-    call_function("int8_quant_cosine", a, b)
-  }
-
-  /** Materialized int8 codes for an embedding column, post-[[register]]. */
+  /** Materialized int8 codes for an embedding column. */
   def int8Encode(v: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("int8_encode", v)
   }
 
-  /** Exact integer dot over stored code arrays, post-[[register]]. */
+  /** Exact integer dot over stored code arrays. */
   def int8CodeDot(a: Column, b: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("int8_code_dot", a, b)
   }
 
-  /** One-byte-per-subspace PQ code packing (k ≤ 256), post-[[register]]. */
+  /** One-byte-per-subspace PQ code packing (k ≤ 256). */
   def packCodes(codes: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("pack_codes", codes)
   }
 
-  /** Unsigned unpack of a [[packCodes]] byte string, post-[[register]]. */
+  /** Unsigned unpack of a [[packCodes]] byte string. */
   def unpackCodes(b: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("unpack_codes", b)
   }
 
-  /** Cosine over array<double> inputs, post-[[register]]. */
+  /** Cosine over array<double> inputs. */
   def cosineSimD(a: Column, b: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("cosine_sim_d", a, b)
   }
 
-  /** Flattened upper-triangle self outer product, post-[[register]]. */
+  /** Flattened upper-triangle self outer product. */
   def triProducts(xs: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("tri_products", xs)
   }
 
-  /** All nested-prefix cosines in one codegen pass, post-[[register]]. */
+  /** All nested-prefix cosines in one codegen pass. */
   def prefixCosines(a: Column, b: Column, cuts: Seq[Int]): Column = {
     import org.apache.spark.sql.functions.{call_function, lit}
     call_function("prefix_cosines", (Seq(a, b) ++ cuts.map(lit(_))): _*)
   }
 
-  /** K-means argmin over a literal (cells, flat-centroid) codebook, post-[[register]]. */
+  /** K-means argmin over a literal (cells, flat-centroid) codebook. */
   def nearestCell(x: Column, cells: Column, censFlat: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("nearest_cell", x, cells, censFlat)
   }
 
-  /** Top-p cells of a literal codebook in (d, cell) order, post-[[register]]. */
+  /** Top-p cells of a literal codebook in (d, cell) order. */
   def nearestCells(x: Column, cells: Column, censFlat: Column, p: Int): Column = {
     import org.apache.spark.sql.functions.{call_function, lit}
     call_function("nearest_cells", x, cells, censFlat, lit(p))
   }
 
-  /** Per-dimension mean of a sorted member list, post-[[register]]. */
+  /** Per-dimension mean of a sorted member list. */
   def cellMean(vals: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("cell_mean", vals)
   }
 
-  /** Order-pinned ADC fold over a (keys, dds) LUT pair, post-[[register]]. */
+  /** Order-pinned ADC fold over a (keys, dds) LUT pair. */
   def adcSum(cells: Column, lutKeys: Column, lutDds: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("adc_sum", cells, lutKeys, lutDds)
   }
 
-  /** Merge-count overlap of two sorted-distinct long arrays, post-[[register]]. */
+  /** Merge-count overlap of two sorted-distinct long arrays. */
   def sortedOverlap(a: Column, b: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("sorted_overlap", a, b)
   }
 
-  /** Merge-count overlap of two sorted-distinct string arrays, post-[[register]]. */
+  /** Merge-count overlap of two sorted-distinct string arrays. */
   def sortedOverlapStr(a: Column, b: Column): Column = {
     import org.apache.spark.sql.functions.{call_function}
     call_function("sorted_overlap_str", a, b)
   }
 
-  /** SRP bucket id in one codegen pass, post-[[register]]. */
+  /** SRP bucket id in one codegen pass. */
   def srpBucket(emb: Column, bits: Int): Column = {
     import org.apache.spark.sql.functions.{call_function, lit}
     call_function("srp_bucket", emb, lit(bits))
   }
 
-  /** JL sign projection in one codegen pass, post-[[register]]. */
+  /** JL sign projection in one codegen pass. */
   def jlProject(emb: Column, kOut: Int, dim: Int): Column = {
     import org.apache.spark.sql.functions.{call_function, lit}
     call_function("jl_project", emb, lit(kOut), lit(dim))

@@ -14,8 +14,10 @@ import graft.functions.DoublePlainString
   *  - Date/Timestamp → ISO8601 `yyyy-MM-ddTHH:mm:ssZ` (:130-131)
   *  - `"` → `\"` ALWAYS (backslash escape, not quote doubling — :135)
   *  - wrap in quotes IFF the raw cell contains the delimiter (:134-136)
-  *  - doubles in shortest digits, never scientific
-  *    (DelimitedEncoderTests.swift:80-89)
+  *  - doubles as `BigDecimal(Double.toString(d)).toPlainString`
+  *    ([[graft.functions.RenderKernel.plainString]]): never scientific
+  *    (DelimitedEncoderTests.swift:80-89), but not always the shortest
+  *    digits (`1.0E-4` renders `0.00010`)
   *
   * The kernel is pure codegen'd column expressions — cells render inside
   * the scan stage and the writer just emits pre-rendered strings (Spark's
@@ -41,16 +43,12 @@ object DelimitedWriter {
     coalesce(rendered, lit(""))
   }
 
-  /** One string column per input column, rendered; names preserved. */
-  def renderCells(df: DataFrame, delimiter: String = ","): DataFrame = {
-    DoublePlainString.register(df.sparkSession)
-    df.select(df.schema.fields.map(f =>
-      renderCell(col(f.name), f.dataType, delimiter).as(f.name)): _*)
-  }
-
-  /** Whole rows rendered to single delimited lines (column `line`). */
+  /** Whole rows rendered to single delimited lines (column `line`).
+    * Installs the [[graft.GraftExtensions]] catalog (for `double_plain`)
+    * on the frame's session.
+    */
   def renderLines(df: DataFrame, delimiter: String = ","): DataFrame = {
-    DoublePlainString.register(df.sparkSession)
+    graft.GraftExtensions.install(df.sparkSession)
     val cells = df.schema.fields.map(f =>
       renderCell(col(f.name), f.dataType, delimiter))
     df.select(concat_ws(delimiter, cells: _*).as("line"))

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,27 +18,6 @@ import org.apache.spark.sql.types._
   * function.
   */
 object Multimodal {
-
-  /** Typed media-asset schema: payload + metadata travel together. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("content", BinaryType, nullable = true),
-    StructField("media_type", StringType, nullable = true),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("duration_ms", LongType, nullable = true)))
-
-  /** Wrap a text corpus as stand-in media blobs (UTF-8 bytes), the local
-    * test surrogate for real image/audio payloads.
-    */
-  def documentsAsMedia(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id").as("media_id"),
-      col("text").cast(BinaryType).as("content"),
-      lit("text/plain").as("media_type"),
-      lit(null).cast(IntegerType).as("width"),
-      lit(null).cast(IntegerType).as("height"),
-      lit(null).cast(LongType).as("duration_ms"))
 
   /** STUB decode: deterministic fake features from raw bytes (payload
     * size, content digest, k byte values sampled at stride len/k — the

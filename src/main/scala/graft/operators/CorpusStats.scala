@@ -55,7 +55,6 @@ object CorpusStats {
     */
   private def docGrams(s: org.apache.spark.sql.SparkSession, d: String,
       n: Int): org.apache.spark.sql.DataFrame = {
-    PolyHash.register(s)
     // r18 (2nd pass): fan the raw documents out before the gram-hash
     // kernel + explode — the corpus table is one scan task at test scale
     // (single row group), so the per-document kernel pass otherwise runs
@@ -137,7 +136,6 @@ object CorpusStats {
        |FROM hashed te JOIN hashed tr ON te.h = tr.h
        |WHERE te.sb >= $TestBucketFloor AND tr.sb < $TrainBucketCeil
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val hashed = docGrams(s, d, GramN)
       .select(col("doc_id"), col("sb"), col("h"))
     contaminationPairs(hashed)
@@ -292,7 +290,6 @@ object CorpusStats {
   private def bloomBlocklist(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     graft.Artifacts.checkpointedDf(s, s"q77_blocklist:$d") {
-      PolyHash.register(s)
       docGrams(s, d, GramN)
         .select(col("sb"), col("h"))
         .where(col("sb") >= TestBucketFloor)
@@ -306,8 +303,6 @@ object CorpusStats {
   private[operators] def bloomContaminated(
       s: org.apache.spark.sql.SparkSession, d: String,
       fpp: Double): org.apache.spark.sql.DataFrame = {
-    PolyHash.register(s)
-    graft.functions.BloomFilterFunctions.register(s)
     val hashed = docGrams(s, d, GramN)
       .select(col("doc_id"), col("sb"), col("h"))
     val blocklist = bloomBlocklist(s, d)
@@ -438,7 +433,6 @@ object CorpusStats {
        |    // CAST(count(*) AS BIGINT) AS dup_ppm
        |FROM hashed JOIN dfreq d ON hashed.h = d.h
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val hashed = docGrams(s, d, GramN)
       .select(col("doc_id"), col("h"))
     val dfreq = hashed.groupBy("h").agg(count(lit(1)).as("gdf"))
@@ -1186,7 +1180,6 @@ object CorpusStats {
        |  FROM hashed t CROSS JOIN seeds s)
        |SELECT r, cell, CAST(sum(f) AS BIGINT) AS n
        |FROM cells GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val seeds = s.createDataFrame(CmRows).toDF("r", "a", "c")
     val tf = Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("w"))
@@ -1242,7 +1235,6 @@ object CorpusStats {
        |  e.est - CAST(coalesce(t.f, 0) AS BIGINT) AS overestimate
        |FROM est e LEFT JOIN tf t ON t.w = e.w
        |ORDER BY token""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val seeds = s.createDataFrame(CmRows).toDF("r", "a", "c")
     val tf = Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("w"))
@@ -1350,7 +1342,6 @@ object CorpusStats {
        |  CAST(e.exact_distinct AS BIGINT) AS exact_distinct
        |FROM agg a JOIN ex e ON e.source = a.source
        |ORDER BY source""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val dw = Tables.documents(s, d)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
       .where(col("w") =!= "").distinct()
@@ -1423,7 +1414,6 @@ object CorpusStats {
        |    / (a.denom_hit + ($HllM - a.regs_hit) * ${1L << 25}), 4) AS est,
        |  g.exact_global, x.sum_source_distinct
        |FROM agg a CROSS JOIN exg g CROSS JOIN exs x""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val dw = Tables.documents(s, d)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
       .where(col("w") =!= "").distinct()
@@ -1521,7 +1511,6 @@ object CorpusStats {
        |JOIN est eb ON eb.source = ex.sb
        |JOIN estu eu ON eu.sa = ex.sa AND eu.sb = ex.sb
        |ORDER BY source_a, source_b""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val dw = Tables.documents(s, d)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
       .where(col("w") =!= "").distinct()
@@ -1758,7 +1747,6 @@ object CorpusStats {
 
   private val q246 = GraftQuery(
     "q246_repetition_audit", repetitionOracleSql) { (s, d) =>
-    PolyHash.register(s)
     val bg = Tables.documents(s, d)
       .select(col("doc_id"), split(lower(col("text")), "\\s+").as("ts"))
       .select(col("doc_id"), explode(when(size(col("ts")) >= 2,
@@ -1812,7 +1800,6 @@ object CorpusStats {
        |  coalesce(n.n_novel, 0) * 1000000 // t.n_grams AS novelty_ppm
        |FROM tot t LEFT JOIN nov n ON n.source = t.source
        |ORDER BY t.source""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
     // src is corpus-row-count-sized (one row per document — billions at
     // 100 TB): never broadcast it; a plain shuffled equi-join on doc_id
@@ -1862,7 +1849,6 @@ object CorpusStats {
     }
 
   private def dupSpansBuild(sp: SparkSession, d: String): DataFrame = {
-    PolyHash.register(sp)
     val toks = Tables.documents(sp, d)
       .select(col("doc_id"), split(lower(col("text")), "\\s+").as("ts"))
     // r18: positions and hashes come from ONE chain-folded codegen pass
@@ -2538,7 +2524,6 @@ object CorpusStats {
        |  JOIN fill f ON f.cfg = pv.cfg
        |GROUP BY c.cfg, c.m, c.k, f.bits_set
        |ORDER BY cfg""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val seeds = s.createDataFrame(CmRows).toDF("r", "aa", "cc")
     val cfgs = s.createDataFrame(BloomCfgs).toDF("cfg", "m", "k")
     val blk = bloomBlocklist(s, d)
@@ -2645,7 +2630,6 @@ object CorpusStats {
        |  CAST(covered_grams * 1000000 // tot.total AS BIGINT)
        |    AS coverage_ppm
        |FROM cum CROSS JOIN tot ORDER BY round""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val pairs = graft.Artifacts.checkpointedDf(s, s"q289_pairs:$d") {
       docGrams(s, d, GramN)
         .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
@@ -2719,7 +2703,6 @@ object CorpusStats {
        |FROM docs LEFT JOIN perd ON perd.decile = docs.decile
        |  LEFT JOIN newd ON newd.decile = docs.decile
        |ORDER BY decile""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val ids = Tables.documents(s, d).select(col("doc_id"))
     val n = ids.agg(count(lit(1)).as("n"))
     val dd = Banded.cumSums(ids, Nil, Seq(col("doc_id")),
@@ -2911,7 +2894,6 @@ object CorpusStats {
        |      * 1000000) // ex.hash_d) END AS BIGINT) AS err_ppm
        |FROM kv JOIN ex ON ex.source = kv.source
        |ORDER BY kv.source""".stripMargin) { (s, d) =>
-    graft.functions.PolyHash.register(s)
     val hashed = Tables.documents(s, d)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
       .where(col("w") =!= "")

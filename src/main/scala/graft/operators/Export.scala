@@ -5,7 +5,6 @@ import org.apache.spark.sql.types._
 
 import graft.{GraftQuery, Tables}
 import graft.io.DelimitedWriter
-import graft.functions.DoublePlainString
 
 /** Export serialization kernel (A11) as an oracle-checked query: rows of
   * `orders` rendered to reference-parity CSV lines — quote escaping
@@ -32,7 +31,6 @@ object Export {
       |FROM orders
       |WHERE o_orderkey % 50 = 0
       |ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-    DoublePlainString.register(s)
     val cells = Tables.orders(s, d)
       .where(col("o_orderkey") % 50 === 0)
       .select(

@@ -53,7 +53,6 @@ object Media {
           .mkString(",\n")}
        |FROM documents
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    graft.functions.BytePool.register(s)
     // pool computed ONCE per row; the 4 extractions reference the shared
     // alias (multi-referenced non-cheap producer, so CollapseProject keeps
     // the projections separate — same shape PlanSpec pins for q26/q27)
@@ -195,7 +194,6 @@ object Media {
        |FROM sc GROUP BY 1, 2
        |ORDER BY media_id, scene_idx""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.BytePool.register(s)
     val ft = Tables.documents(s, d)
       .where(length(col("text")) >= Win)
       .select(col("doc_id").as("media_id"),
@@ -282,7 +280,6 @@ object Media {
        |SELECT bit_count(CAST(xor(ha, hb) AS BIT)) AS ham,
        |  CAST(count(*) AS BIGINT) AS n_pairs
        |FROM cand GROUP BY 1 ORDER BY ham""".stripMargin) { (s, d) =>
-    graft.functions.BytePool.register(s)
     // mean-threshold bit-pack fused into the codegen
     // [[graft.functions.PoolThreshHashKernel]] (VERDICT r17 item 4 —
     // formerly two interpreted aggregate() HOF folds per row);

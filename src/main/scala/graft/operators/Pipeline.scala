@@ -77,7 +77,6 @@ object Pipeline {
       |  CAST(sum(ws_tokens) AS BIGINT) AS total_tokens,
       |  CAST(sum(members - 1) AS BIGINT) AS dropped_dupes
       |FROM groups GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val scored = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"),
         size(split(col("text"), "\\s+")).as("ws_tokens"),
@@ -271,7 +270,6 @@ object Pipeline {
             s"array_to_string(ts[(CASE WHEN k = 1 THEN 1 ELSE ends[k-1] + 1 END):e], ' ')")}
        |    AS chunk_fp
        |FROM chunks ORDER BY doc_id, chunk_id""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     cdcChunks(Tables.documents(s, d)).orderBy("doc_id", "chunk_id")
   }
 
@@ -314,7 +312,6 @@ object Pipeline {
     * rows instead of collapsing to stats.
     */
   def cleanedCorpus(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    PolyHash.register(docs.sparkSession)
     val keepCols = struct(col("doc_id") +: docs.columns.filter(_ != "doc_id")
       .map(col).toSeq: _*)
     docs
@@ -585,7 +582,6 @@ object Pipeline {
        |  k.keeper_doc, k.keeper_chunk
        |FROM dups d JOIN keepers k ON d.chunk_fp = k.chunk_fp
        |ORDER BY chunk_fp""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val chunks = cdcChunks(Tables.documents(s, d))
       .select(col("doc_id"), col("chunk_id"), col("chunk_fp"))
     val dups = chunks.groupBy("chunk_fp")
@@ -737,7 +733,6 @@ object Pipeline {
       s: SparkSession, d: String): String =
     graft.Artifacts.cached[String](s, s"chunkStore:$d") {
       val base = java.nio.file.Files.createTempDirectory("graft_chunk_store")
-      PolyHash.register(s)
       cdcChunks(Tables.documents(s, d).where(col("doc_id") % 4 =!= 0))
         .select(col("chunk_fp")).distinct()
         .repartitionByRange(4, col("chunk_fp"))
@@ -792,7 +787,6 @@ object Pipeline {
     */
   private def classifyDelivery(s: SparkSession, d: String,
       store: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    PolyHash.register(s)
     val arr = cdcChunks(Tables.documents(s, d).where(col("doc_id") % 4 === 0))
       .select(col("doc_id"), col("chunk_id"), col("chunk_fp"))
     val w = Window.partitionBy("chunk_fp").orderBy("doc_id", "chunk_id")
@@ -846,7 +840,6 @@ object Pipeline {
     graft.Artifacts.cached[String](s, s"chunkStoreVersions:$d") {
       val baseSeg = s"${writtenChunkStore(s, d)}/fingerprints"
       val base = java.nio.file.Files.createTempDirectory("graft_chunk_versions")
-      PolyHash.register(s)
       cdcChunks(Tables.documents(s, d).where(col("doc_id") % 4 === 0))
         .select(col("chunk_fp")).distinct()
         .join(s.read.parquet(baseSeg), Seq("chunk_fp"), "left_anti")
@@ -1198,7 +1191,6 @@ object Pipeline {
 
   private val q248 = GraftQuery(
     "q248_corpus_digest", digestOracleSql) { (s, d) =>
-    PolyHash.register(s)
     digestOf(Tables.documents(s, d)).orderBy("source")
   }
 
@@ -1210,7 +1202,6 @@ object Pipeline {
   private[operators] def writtenDigestStore(s: SparkSession, d: String): String =
     graft.Artifacts.cached[String](s, s"digestStore:$d") {
       val base = java.nio.file.Files.createTempDirectory("graft_digest_store")
-      PolyHash.register(s)
       digestOf(Tables.documents(s, d).where(col("doc_id") % 4 =!= 0))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$base/state")
@@ -1233,7 +1224,6 @@ object Pipeline {
     */
   private val q253 = GraftQuery(
     "q253_digest_ivm", digestOracleSql) { (s, d) =>
-    PolyHash.register(s)
     val state = s.read.parquet(s"${writtenDigestStore(s, d)}/state")
     val delta = digestOf(Tables.documents(s, d).where(col("doc_id") % 4 === 0))
     state.unionByName(delta)
@@ -1331,7 +1321,6 @@ object Pipeline {
        |  FROM old o FULL OUTER JOIN new_ n ON o.doc_id = n.doc_id)
        |SELECT source, status, CAST(count(*) AS BIGINT) AS n
        |FROM diff GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-    PolyHash.register(s)
     val bucket = lcg(col("doc_id"), SplitA, SplitC) % 10
     val docs = Tables.documents(s, d)
     val old = docs.select(col("doc_id"), col("source"),
@@ -3558,7 +3547,6 @@ object Pipeline {
          |$allLv
          |ORDER BY level, node""".stripMargin
     }) { (s, d) =>
-    PolyHash.register(s)
     val docs = Tables.documents(s, d)
     val erased = (lcg(col("doc_id"), SplitA, SplitC) % 10 >= 9) &&
       merkleShardCol === MerkleErasedShard

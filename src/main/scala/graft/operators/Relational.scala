@@ -2875,7 +2875,6 @@ object Relational {
        |FROM ps p CROSS JOIN aud a
        |WHERE p.c_custkey < 100
        |ORDER BY p.c_custkey""".stripMargin) { (s, d) =>
-    graft.functions.PolyHash.register(s)
     val cust = Tables.customer(s, d)
     val surr = concat(lit("C"),
       lpad(graft.functions.PolyHash.hash(col("c_name")).cast("string"),

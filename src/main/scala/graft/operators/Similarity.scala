@@ -95,7 +95,6 @@ object Similarity {
        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS rank
        |  FROM sim) t
        |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val a = gridProbe(
       e.select(col("vec_id"), col("label"), col("embedding").as("emb_a")),
@@ -175,7 +174,6 @@ object Similarity {
     * kernel (same value as the SQL aggregate form, ~5× cheaper).
     */
   private def shingleHashes(s: SparkSession, d: String): DataFrame = {
-    graft.functions.PolyHash.register(s)
     // r18: both per-document passes are one-pass codegen kernels — the
     // 3-gram build + array_distinct was an interpreted CodegenFallback
     // lambda per TOKEN, and the hv projection an interpreted lambda per
@@ -241,7 +239,6 @@ object Similarity {
       // every minhash tier shares. Identical affine arithmetic and
       // null policy (KernelParitySpec pins kernel == the HOF family on
       // live documents).
-      graft.functions.PolyHash.register(s)
       shingleHashTable(s, d).select(col("doc_id"),
         graft.functions.PolyHash.minHashSig(col("hv"), A, B, P).as("sig"))
     }
@@ -418,14 +415,6 @@ object Similarity {
     sym0.unpersist(false)
     var labels = adj.keys.distinct(nParts).map(v => (v, v))
       .partitionBy(part).persist()
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    var t0 = System.nanoTime()
-    def tick(label: String): Unit = {
-      if (dbg) System.err.println(
-        f"CC $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
-    tick("adjacency build")
     var iter = 0
     var converged = nSym == 0
     while (!converged && iter < maxIter) {
@@ -441,7 +430,7 @@ object Similarity {
       // self-join below — unpersisted, the labels⋈nbrMin round would be
       // recomputed once per side and the `changed` accumulator would
       // double-count (harmless for the ==0 fixpoint test, but it re-runs
-      // the narrow join and inflates GRAFT_CC_DEBUG round stats)
+      // the narrow join)
       val propagated = labels.join(nbrMin) // narrow
         .mapValues { case (own, nbr) =>
           val m = math.min(own, nbr)
@@ -478,7 +467,6 @@ object Similarity {
       labels = next
       converged = changed.value == 0
       iter += 1
-      tick(s"round $iter")
     }
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     adj.unpersist(false)
@@ -1044,7 +1032,6 @@ object Similarity {
     // ascending-cell scan as array_min's lexicographic (d, cell)
     // tie-break, so assignments are bit-identical (KernelParitySpec pins
     // kernel == HOF on live embeddings at k = 16 and 256).
-    VectorFunctions.register(e.sparkSession)
     e.withColumn("cell",
         VectorFunctions.nearestCell(col("embedding"), cellsLit, censLit))
       .select(col("vec_id"), col("embedding"), col("cell"))
@@ -1133,7 +1120,6 @@ object Similarity {
     require(k <= 1024,
       s"lloydCodebooks embeds the seed codebook as a plan literal; k=$k " +
         "exceeds the 1024-cell router-metadata bound")
-    VectorFunctions.register(corpus.sparkSession)
     val seeds = seedSrc.where(col("vec_id") < k)
       .select(col("vec_id").cast("int"), col("embedding")).collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
@@ -1311,7 +1297,6 @@ object Similarity {
   // encode re-runs once per consuming leaf stage.
   private[operators] def kmQuantized(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.checkpointedDf(s, s"ivf_quantized:$d") {
-      VectorFunctions.register(s)
       val (_, a2) = kmTrained(s, d)
       a2.select(col("vec_id"), col("cell"),
           VectorFunctions.int8Encode(col("embedding")).as("code"))
@@ -1340,7 +1325,6 @@ object Similarity {
     * pruned read-back.
     */
   def writeIvfIndex(s: SparkSession, d: String, outDir: String): Unit = {
-    VectorFunctions.register(s)
     // writes from the memoized shared caches — no private copy to clean up.
     // The stored artifact carries EVERY serving form of each vector: the
     // float embedding (exact rerank tier), the int8 code + integer norm
@@ -1521,7 +1505,6 @@ object Similarity {
   private[operators] def probeSelection(e: DataFrame, c1: DataFrame,
       p: Int = ProbeP): DataFrame = {
     require(p >= 1, s"probe count must be >= 1, got $p")
-    VectorFunctions.register(e.sparkSession)
     val (cellsLit, censLit) =
       codebookLits(collectedCodebooks(c1, "probeSelection")(0))
     e.select(col("vec_id"), col("embedding").as("emb_a"),
@@ -1605,7 +1588,6 @@ object Similarity {
        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS rank
        |  FROM sim) t
        |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val (_, a2) = kmTrained(s, d)
     val a = a2.select(col("vec_id"), col("cell"), col("embedding").as("emb_a"))
     val b = a2.select(col("vec_id").as("neighbor_id"),
@@ -1648,7 +1630,6 @@ object Similarity {
        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS rank
        |  FROM sim) t
        |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val (_, a2) = kmTrained(s, d)
     val probes = corpusProbes(s, d)
     val cand = a2.select(col("vec_id").as("neighbor_id"),
@@ -1715,7 +1696,6 @@ object Similarity {
     // (graft.functions.SimHash64): one tight loop per document. The HOF
     // formulation is CodegenFallback and gets inlined per reference;
     // explode + 64 sum-aggregates pays a multi-million-row shuffle agg.
-    graft.functions.SimHash64.register(s)
     // The repartition is a materialization fence, not a distribution
     // choice: without it CollapseProject inlines the whole shingle+hash
     // pipeline into every downstream reference (5 band structs × 2 join
@@ -1799,7 +1779,6 @@ object Similarity {
     // construction, so |A∪B| = |A| + |B| − |A∩B| exactly); the earlier
     // form built a hash set + output array per pair for the intersect
     // and did it again (twice) for the union. Same integers, same rows.
-    VectorFunctions.register(s)
     val pairs = minhashCandidates(minhashSigs(s, d))
       .select("doc_a", "doc_b")
       .dropDuplicates("doc_a", "doc_b")
@@ -1841,7 +1820,6 @@ object Similarity {
        |SELECT vec_a, vec_b, round(cos, 6) AS cos_sim
        |FROM sim WHERE cos >= $CosMin
        |ORDER BY vec_a, vec_b""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     // grid-decomposed like q30 — `<` instead of `=!=` still meets every
     // unordered pair exactly once (the build row's slot is fixed; the
@@ -1881,7 +1859,6 @@ object Similarity {
       |FROM documents
       |GROUP BY 1
       |ORDER BY keeper""".stripMargin) { (s, d) =>
-    graft.functions.PolyHash.register(s)
     Tables.documents(s, d)
       .groupBy(graft.functions.PolyHash.hash(col("text")).as("fingerprint"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keeper"))
@@ -1908,7 +1885,6 @@ object Similarity {
        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS rank
        |  FROM sim) t
        |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val q = broadcast(e.where(col("vec_id") < QueryBatch)
       .select(col("vec_id"), col("embedding").as("emb_q")))
@@ -1954,8 +1930,8 @@ object Similarity {
     * Backed by the codegen [[graft.functions.SrpBucketKernel]] (VERDICT
     * r17 item 4 — the HOF form ran `bits` interpreted folds per row);
     * bit-identical to [[srpBucketHofSql]], pinned by
-    * KernelPropertiesSpec. Callers must have run
-    * [[graft.functions.VectorFunctions.register]] on the session.
+    * KernelPropertiesSpec. The session needs the [[graft.GraftExtensions]]
+    * catalog, which every registered query installs.
     */
   def srpBucket(bits: Int): Column = {
     require(bits >= 1 && bits <= 30, s"srp bits out of range: $bits")
@@ -2000,7 +1976,6 @@ object Similarity {
        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS rank
        |  FROM sim) t
        |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     // fence: bucket is referenced by both join sides — without the
     // exchange the 6 hyperplane dot products recompute per reference
     val b = Tables.embeddings(s, d)
@@ -2062,7 +2037,6 @@ object Similarity {
       |  round(maxae, 6) AS max_abs_err,
       |  round(CASE WHEN vn2 = 0 THEN 0.0 ELSE sqrt(err2)/sqrt(vn2) END, 6) AS rel_err
       |FROM s5 ORDER BY vec_id""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     // stats computed ONCE per row; the 4 extractions reference the shared
     // alias (multi-referenced non-cheap producer stays un-inlined — the
     // q53/q26 CollapseProject shape PlanSpec pins)
@@ -2115,7 +2089,6 @@ object Similarity {
        |FROM truth t LEFT JOIN approx ap
        |  ON t.vec_id = ap.vec_id AND t.neighbor_id = ap.neighbor_id
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val truth = cosTruth(s, d)
     // approximate side: q45's SRP buckets, probe side restricted to the
@@ -2194,7 +2167,6 @@ object Similarity {
       |    row_number() OVER (PARTITION BY vec_id ORDER BY qcos DESC, neighbor_id) AS rank
       |  FROM sim) t
       |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     // codes + exact integer code norm once per ROW; degenerate vectors
     // (null/non-finite element → null codes, zero code vector → nq = 0)
@@ -2244,7 +2216,6 @@ object Similarity {
     * and the p=1 ≡ single-probe degeneracy.
     */
   private[operators] def multiProbeRecall(s: SparkSession, d: String, p: Int): Double = {
-    VectorFunctions.register(s)
     val (c1, a2) = kmTrained(s, d)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val truth = cosTruth(s, d)
@@ -2261,7 +2232,6 @@ object Similarity {
     * assigned cell under the same (dist, cell) tie-break.
     */
   private[operators] def singleProbeRecall(s: SparkSession, d: String): Double = {
-    VectorFunctions.register(s)
     val (_, a2) = kmTrained(s, d)
     val truth = cosTruth(s, d)
     val sa = a2.where(col("vec_id") < QueryBatch)
@@ -2347,7 +2317,6 @@ object Similarity {
     "q84_quantized_ivf",
     s"""WITH $kmOracleTrain, ${probesOracle("")},
        |$int8QuantOracleTail""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val qidx = kmQuantized(s, d)
     val probes = corpusProbes(s, d).select("vec_id", "probe_cell")
     val qa = qidx.select(col("vec_id"), col("code").as("code_a"), col("nq").as("nq_a"))
@@ -2450,7 +2419,6 @@ object Similarity {
     */
   private[operators] def quantShortlistRerank(s: SparkSession, d: String,
       sameLabel: Boolean): DataFrame = {
-    VectorFunctions.register(s)
     val probes = corpusProbes(s, d).select("vec_id", "probe_cell")
     val qidx = if (sameLabel) kmQuantizedLabeled(s, d) else kmQuantized(s, d)
     val aCols = Seq(col("vec_id"), col("code").as("code_a"), col("nq").as("nq_a")) ++
@@ -2551,7 +2519,6 @@ object Similarity {
        |LEFT JOIN single s ON t.vec_id = s.vec_id AND t.neighbor_id = s.neighbor_id
        |LEFT JOIN multi m ON t.vec_id = m.vec_id AND t.neighbor_id = m.neighbor_id
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val (c1, a2) = kmTrained(s, d)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val truth = cosTruth(s, d)
@@ -2851,7 +2818,6 @@ object Similarity {
     */
   private[operators] def pqAdcTop3Plan(s: SparkSession, d: String,
       k: Int = PqK, mm: Int = PqM): DataFrame = {
-      VectorFunctions.register(s)
       val (cents, codes) = pqTrained(s, d, k, mm)
       val e = Tables.embeddings(s, d).select("vec_id", "embedding")
       adcRank(codes, pqLut(batchQueries(e), cents, mm))
@@ -2868,7 +2834,6 @@ object Similarity {
     */
   private[operators] def pqProdPacked(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.checkpointedDf(s, s"pq_prod_packed:$d") {
-      VectorFunctions.register(s)
       val (_, codes) = pqTrained(s, d, PqKProd, PqMProd)
       codeCells(codes)
         .select(col("vec_id"), VectorFunctions.packCodes(col("cells")).as("pqb"))
@@ -2884,7 +2849,6 @@ object Similarity {
     * stored binary code column serves through). Exposed for PlanSpec.
     */
   private[operators] def pqProdAdcPlan(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val (cents, _) = pqTrained(s, d, PqKProd, PqMProd)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val cells = pqProdPacked(s, d)
@@ -2962,7 +2926,6 @@ object Similarity {
     */
   private def l2Top3Truth(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.checkpointedDf(s, s"l2_truth:$d") {
-      VectorFunctions.register(s)
       val e = Tables.embeddings(s, d).select("vec_id", "embedding")
       val qb = broadcast(e.where(col("vec_id") < QueryBatch))
       val all = e.select(col("vec_id").as("neighbor_id"),
@@ -3172,7 +3135,6 @@ object Similarity {
     */
   private[graft] def frozenAssignEncode(s: SparkSession, d: String,
       rows: DataFrame): DataFrame = {
-    VectorFunctions.register(s)
     val (coarseArr, cbArr) = frozenCollected(s, d)
     // r18: both argmins are the codegen [[graft.functions.
     // NearestCellKernel]] over flat codebook literals (the m index is
@@ -3340,7 +3302,6 @@ object Similarity {
     */
   private[operators] def residualAdcTop3Plan(s: SparkSession, d: String,
       k: Int = PqK, mm: Int = PqM): DataFrame = {
-    VectorFunctions.register(s)
     val (c1, a2) = kmTrained(s, d)
     val (rcents, rcodes) = pqResTrained(s, d, k, mm)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
@@ -3401,7 +3362,6 @@ object Similarity {
       k: Int = PqK, mm: Int = PqM): DataFrame = {
     // q93's tier (probed candidates, RAW-vector ADC); (k, mm) select the
     // sizing for the production residual-vs-raw audit
-    VectorFunctions.register(s)
     val (c1, a2) = kmTrained(s, d)
     val (cents, codes) = pqTrained(s, d, k, mm)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
@@ -3555,7 +3515,6 @@ object Similarity {
     */
   private def labeledFloatFiltered(s: SparkSession, d: String,
       sameLabel: Boolean): DataFrame = {
-    VectorFunctions.register(s)
     val (c1, _) = kmTrained(s, d)
     val idx = kmTrainedLabeled(s, d)
     val probes = probeSelection(
@@ -3628,7 +3587,6 @@ object Similarity {
     */
   private[operators] def quantServeFrames(s: SparkSession, coarse: DataFrame,
       index: DataFrame, tombstones: Option[DataFrame]): DataFrame = {
-    VectorFunctions.register(s)
     // tombstone mask, applied BEFORE ranking on both the query and the
     // candidate side: a deleted row must neither be served as a neighbor
     // nor occupy a rank slot (a post-top-k filter would silently return
@@ -3716,7 +3674,6 @@ object Similarity {
     */
   private[graft] def streamServePlan(s: SparkSession, d: String,
       queries: DataFrame, candidates: Option[DataFrame] = None): DataFrame = {
-    VectorFunctions.register(s)
     // r18: the probe ring is the same codegen top-p kernel as
     // [[probeSelection]] — the r17 per-row
     // `slice(array_sort(transform(typedLit(cents), ...)))` was an
@@ -3839,7 +3796,6 @@ object Similarity {
        |${kmOracleAssignFrom("embu", "c1", "a2u")},
        |${probesOracleFrom("embu", s"\n    WHERE e.vec_id < $QueryBatch")},
        |${int8QuantOracleTailFrom("a2u", "")}""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val base = writtenIndex(s, d)
     val idx = s.read.parquet(s"$base/index")
       .select("vec_id", "embedding", "cell", "code", "nq")
@@ -4311,7 +4267,6 @@ object Similarity {
        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS rank
        |  FROM sim) t
        |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     // r18 (2nd pass): fan the corpus out BEFORE the projection kernel —
     // the per-row 32×64-dim JL map and the BNLJ pair loop otherwise both
     // run on the single scan task the one-row-group table provides
@@ -4352,7 +4307,6 @@ object Similarity {
        |FROM truth t
        |LEFT JOIN ranked r ON t.vec_id = r.vec_id AND t.neighbor_id = r.neighbor_id
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     recallByQuery(cosTruth(s, d), "" -> q154.fn(s, d))
   }
 
@@ -4562,7 +4516,6 @@ object Similarity {
          |${row("k", KmKSql)}
          |ORDER BY nprobe""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     val (c1, a2) = kmTrained(s, d)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val truth = cosTruth(s, d)
@@ -4700,7 +4653,6 @@ object Similarity {
     * mechanism).
     */
   private def exactSimilarPairs(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     // the (doc_id, token-set) table — exploded from the dedup family's
     // shared hv artifact and materialized once: it feeds the df count,
     // the prefix derivation, and (as arrays) the verification, and
@@ -4820,7 +4772,6 @@ object Similarity {
        |  round(CAST(sum(coalesce(2520 // fr, 0)) AS DOUBLE)
        |    / (2520.0 * count(*)), 6) AS mrr
        |FROM firsts""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding", "label")
     val q = broadcast(e.where(col("vec_id") < QueryBatch)
       .select(col("vec_id"), col("embedding").as("emb_a"),
@@ -4912,7 +4863,6 @@ object Similarity {
        |FROM scored GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     // r18: q40's verify-kernel treatment for the Jaccard side — one
     // sorted-merge pass per pair, union by arithmetic; same integers.
-    VectorFunctions.register(s)
     val sigs = minhashSigs(s, d)
     val pairs = minhashCandidates(sigs)
       .select("doc_a", "doc_b")
@@ -5177,7 +5127,6 @@ object Similarity {
        |SELECT vec_id, neighbor_id, label, rank, round(cos, 6) AS cos_sim
        |FROM topd WHERE rank <= 5
        |ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val (c1, _) = kmTrained(s, d)
     val idx = kmTrainedLabeled(s, d)
     val probes = probeSelection(
@@ -5259,7 +5208,6 @@ object Similarity {
        |  CAST((sum(conc) - sum(disc)) * 1000000 // count(*) AS BIGINT)
        |    AS tau_ppm
        |FROM pr GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val (c1, _) = kmTrained(s, d)
     val (_, a2) = kmTrained(s, d)
     val probes = probeSelection(
@@ -5351,7 +5299,6 @@ object Similarity {
     // pair (`sorted_overlap_str`) replaces two array_intersect hash-set
     // builds and an array_union; the union size is n_a + n_b − n_common
     // exactly (distinct inputs). Same integers, same rows.
-    VectorFunctions.register(s)
     val sigs = minhashSigs(s, d)
     val pairs = minhashCandidates(sigs)
       .select("doc_a", "doc_b")
@@ -5687,7 +5634,6 @@ object Similarity {
        |SELECT CAST(h.m AS BIGINT) AS m, nq.nq AS n_queries, h.hits,
        |  CAST(h.hits * 1000000 // (nq.nq * 10) AS BIGINT) AS recall_ppm
        |FROM hits h CROSS JOIN nq ORDER BY m""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val qv = broadcast(e.where(col("vec_id") < QueryBatch)
       .select(col("vec_id"), col("embedding").as("emb_q")))
@@ -5772,7 +5718,6 @@ object Similarity {
        |  CAST((h.k_occ * h.n_vectors * 1000000) // t.total_slots AS BIGINT)
        |    AS slots_ppm
        |FROM hist h CROSS JOIN tot t ORDER BY k_occ""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val q = broadcast(e.where(col("vec_id") < QueryBatch)
       .select(col("vec_id"), col("embedding").as("emb_a")))
@@ -5836,7 +5781,6 @@ object Similarity {
        |SELECT cluster_id, doc_a, doc_b, round(cos, 6) AS cos
        |FROM sc ORDER BY cos, doc_a, doc_b LIMIT 20""".stripMargin) {
     (s, d) =>
-      VectorFunctions.register(s)
       val clus = clusterAssignments(s, d)
       val cs = clus.groupBy("cluster_id").agg(count(lit(1)).as("size"))
       val cc = clus
@@ -5928,7 +5872,6 @@ object Similarity {
        |  CAST(sum((dcg * 1000000) // idcg) // count(*) AS BIGINT)
        |    AS macro_ndcg_ppm
        |FROM perq""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding", "label")
     val q = broadcast(e.where(col("vec_id") < QueryBatch)
       .select(col("vec_id"), col("embedding").as("emb_a"),
@@ -6050,7 +5993,6 @@ object Similarity {
        |    AS white_prec_ppm
        |FROM m CROSS JOIN ov CROSS JOIN rh CROSS JOIN wh""".stripMargin) {
     (s, d) =>
-      VectorFunctions.register(s)
       val e = Tables.embeddings(s, d).select("vec_id", "embedding", "label")
       val dm = e.select(posexplode(col("embedding")).as(Seq("p", "x")))
         .select((col("p") + 1).as("i"),
@@ -6193,7 +6135,6 @@ object Similarity {
          |FROM v4, m4, m3, tr ORDER BY dim""".stripMargin
     }) { (s, d) =>
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"),
       expr(s"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * $SgQ)" +
         " AS BIGINT))").as("xs"))
@@ -6325,7 +6266,6 @@ object Similarity {
        |    AS BIGINT) AS dropped_ppm
        |FROM cl LEFT JOIN ecnt ON cl.cell = ecnt.cell
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val (_, a2) = kmTrained(s, d)
     val left = a2.select(col("cell"), col("vec_id").as("vec_a"),
       col("embedding").as("emb_a"))
@@ -6560,7 +6500,6 @@ object Similarity {
          |FROM lab l JOIN maj m ON m.vec_id = l.vec_id
          |GROUP BY 1 ORDER BY 1""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     knnLabelAuditOn(routedAuditAssigns(s, d)
       .join(Tables.embeddings(s, d)
         .select(col("vec_id"), col("label").cast("long").as("label")),
@@ -6631,7 +6570,6 @@ object Similarity {
     */
   private[graft] def frozenAssign(s: SparkSession, d: String,
       e: DataFrame): DataFrame = {
-    VectorFunctions.register(s)
     val (c1, _) = kmTrained(s, d)
     kmAssign(e, c1)
   }
@@ -6735,7 +6673,6 @@ object Similarity {
 
   private val q348 = GraftQuery(
     "q348_cluster_label_nmi", nmiOracleSql) { (s, d) =>
-    VectorFunctions.register(s)
     val (_, a2) = kmTrained(s, d)
     // ONE corpus-grain aggregate to the (k × labels) contingency, then
     // the shared distributed epilogue — no driver collect (k ~ √n)
@@ -6808,7 +6745,6 @@ object Similarity {
          |UNION ALL ${row("k", KmKSql, s" WHERE $KmKSql > 4")}
          |ORDER BY nprobe""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     val (c1, a2) = kmTrained(s, d)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val tp = tauPairTruth(s, d)
@@ -6903,7 +6839,6 @@ object Similarity {
        |FROM cl LEFT JOIN ew ON ew.cell = cl.cell
        |LEFT JOIN ex ON ex.cell = cl.cell
        |GROUP BY cl.cell ORDER BY cl.cell""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val (assigns, probes) = routedSemDedupInputs(s, d)
     multiProbeSemDedupOn(assigns, probes)
   }
@@ -7028,7 +6963,6 @@ object Similarity {
        |  CAST(b.cell AS BIGINT) AS cell_b
        |FROM imia2_0 a JOIN imia2_1 b ON a.vec_id = b.vec_id
        |ORDER BY a.vec_id""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val (_, codes) = pqTrained(s, d, kImi(s, d), 2)
     val a = codes.where(col("m") === 0)
       .select(col("vec_id"), col("cell").cast("long").as("cell_a"))
@@ -7090,7 +7024,6 @@ object Similarity {
          |  FROM sim) t
          |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     val (cents, codes) = pqTrained(s, d, kImi(s, d), 2)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val qe = e.where(col("vec_id") < QueryBatch)
@@ -7145,7 +7078,6 @@ object Similarity {
        |  CAST((occ.n_members * 1000000) // t.n AS BIGINT) AS share_ppm
        |FROM occ CROSS JOIN t
        |ORDER BY cell_a, cell_b""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val (_, codes) = pqTrained(s, d, kImi(s, d), 2)
     val occ = codes.where(col("m") === 0)
       .select(col("vec_id"), col("cell").cast("long").as("cell_a"))
@@ -7352,7 +7284,6 @@ object Similarity {
        |FROM icl LEFT JOIN iew ON iew.cell = icl.cell
        |LEFT JOIN iex ON iex.cell = icl.cell
        |GROUP BY icl.cell ORDER BY icl.cell""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     multiProbeSemDedupOn(imiAssigns(s, d), imiProbes(s, d))
   }
 
@@ -7427,7 +7358,6 @@ object Similarity {
          |UNION ALL ${row(4)}
          |ORDER BY nprobe""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     val (c1, _) = kmTrained(s, d)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val tp = tauPairTruth(s, d)
@@ -7623,7 +7553,6 @@ object Similarity {
          |UNION ALL ${recallModeRowSql("imi_square", "cs")}
          |ORDER BY mode""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     val (c1f, a2f) = kmTrained(s, d)
     val (cents, codes) = pqTrained(s, d, kImi(s, d), 2)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
@@ -7697,7 +7626,6 @@ object Similarity {
        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS rank
        |  FROM sim) t
        |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val (_, codes) = pqTrained(s, d, kImi(s, d), 2)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val qe = e.where(col("vec_id") < QueryBatch)
@@ -7772,7 +7700,6 @@ object Similarity {
          |FROM ilab l JOIN maj m ON m.vec_id = l.vec_id
          |GROUP BY 1 ORDER BY 1""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     knnLabelAuditOn(imiAssigns(s, d)
       .join(Tables.embeddings(s, d)
         .select(col("vec_id"), col("label").cast("long").as("label")),
@@ -7807,7 +7734,6 @@ object Similarity {
     */
   private[graft] def frozenImiRoute(s: SparkSession, d: String,
       rows: DataFrame): DataFrame = {
-    VectorFunctions.register(s)
     val cbs = frozenImiCollected(s, d)
     // r18: codegen NearestCellKernel argmin per half (was an interpreted
     // array_min/transform HOF per row); same distances, same tie-break
@@ -7989,7 +7915,6 @@ object Similarity {
        |FROM icl LEFT JOIN iew ON iew.cell = icl.cell
        |LEFT JOIN iex ON iex.cell = icl.cell
        |GROUP BY icl.cell ORDER BY icl.cell""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     multiProbeSemDedupOn(imiAssigns(s, d), imiMultiSeqProbes(s, d))
   }
 
@@ -8049,7 +7974,6 @@ object Similarity {
          |UNION ALL ${row("imi_square", "s")}
          |ORDER BY rule""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     val tp = tauPairTruth(s, d)
     val np = broadcast(tp.agg(count(lit(1)).as("n_pairs")))
     def ruleRow(rule: String, pb: DataFrame): DataFrame =
@@ -8147,7 +8071,6 @@ object Similarity {
   private def nndGraphsOn(s: SparkSession, key: String,
       vecs: DataFrame, n: => Long): Seq[DataFrame] =
     graft.Artifacts.cached[Seq[DataFrame]](s, key) {
-      VectorFunctions.register(s)
       val e = vecs.select("vec_id", "embedding")
       val ids = e.select(col("vec_id").as("dst"))
       val init = e.select(col("vec_id").as("src"))
@@ -8307,7 +8230,6 @@ object Similarity {
          |${(0 to NndIters).map(row).mkString("\nUNION ALL ")}
          |ORDER BY iter""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val batchPairs = e.where(col("vec_id") < QueryBatch)
       .select(col("vec_id").as("src"))
@@ -8378,7 +8300,6 @@ object Similarity {
       vecs: DataFrame, queries: DataFrame,
       n: => Long): (DataFrame, DataFrame) =
     graft.Artifacts.cached[(DataFrame, DataFrame)](s, key) {
-      VectorFunctions.register(s)
       val e = vecs.select("vec_id", "embedding")
       val entries = queries.select(col("vec_id").as("qid"))
         .crossJoin(broadcast(s.range(1, GbsEntries + 1).toDF("i")))
@@ -8409,7 +8330,6 @@ object Similarity {
   private def beamCore(s: SparkSession, graph: DataFrame, vecs: DataFrame,
       queries: DataFrame, entries: DataFrame)
       : ((DataFrame, DataFrame), () => Unit) = {
-      VectorFunctions.register(s)
       val e = vecs.select("vec_id", "embedding")
       val g = graph.select("src", "dst")
       val sym = g.unionByName(
@@ -8571,7 +8491,6 @@ object Similarity {
          |UNION ALL ${recallModeRowSql("graph_beam", "gbc")}
          |ORDER BY mode""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val qe = e.where(col("vec_id") < QueryBatch)
     val truth = cosTruth(s, d)
@@ -8669,7 +8588,6 @@ object Similarity {
     */
   private[graft] def graphAttachPlan(s: SparkSession, d: String,
       qs: DataFrame): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val n = e.count()
     val base = e.where(shardBucket(col("vec_id")) < 8)
@@ -8732,7 +8650,6 @@ object Similarity {
     */
   private[graft] def graphMaskedServePlan(s: SparkSession, d: String,
       qs: DataFrame): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val n = e.count()
     val sym = graft.Artifacts.checkpointedDf(s, s"nnd_full_sym:$d") {
@@ -8786,7 +8703,6 @@ object Similarity {
     */
   private[operators] def twoNNSummary(s: SparkSession,
       vecs: DataFrame): DataFrame = {
-    VectorFunctions.register(s)
     val e = vecs.select("vec_id", "embedding")
     val q = broadcast(e.where(col("vec_id") < QueryBatch)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb")))
@@ -9034,7 +8950,6 @@ object Similarity {
          |UNION ALL ${row("graph_verify_round", "ce2")}
          |ORDER BY rule""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     val tp = tauPairTruth(s, d)
     val np = broadcast(tp.agg(count(lit(1)).as("n_pairs")))
     val g = nnDescentGraphs(s, d).last.select("src", "dst")
@@ -9099,7 +9014,6 @@ object Similarity {
        |    WHERE NOT (${tombstoneSql("g.qid")})
        |      AND NOT (${tombstoneSql("g.v")})) s) t
        |WHERE rn <= 3 ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val tomb = e.select("vec_id").where(tombstoned(col("vec_id")))
     val (_, scoredAll) = graphBeamSearch(s, d)
@@ -9163,7 +9077,6 @@ object Similarity {
        |  round(cos, 6) AS cos_sim
        |FROM rg WHERE src < $QueryBatch
        |ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val tomb = e.select("vec_id").where(tombstoned(col("vec_id")))
     val g = nnDescentGraphs(s, d).last.select("src", "dst")
@@ -9395,7 +9308,6 @@ object Similarity {
          |UNION ALL ${recallModeRowSql("hier_entry", "hgc")}
          |ORDER BY mode""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val truth = cosTruth(s, d)
     val nt = broadcast(truth.agg(count(lit(1)).as("n_truth")))
@@ -9481,7 +9393,6 @@ object Similarity {
   private[operators] def alphaPrunedGraph(s: SparkSession,
       d: String): DataFrame =
     graft.Artifacts.checkpointedDf(s, s"alpha_pruned:$d") {
-      VectorFunctions.register(s)
       val e = Tables.embeddings(s, d).select("vec_id", "embedding")
       val g = nnDescentGraphs(s, d).last.select("src", "dst")
       val sym = g.unionByName(
@@ -9604,7 +9515,6 @@ object Similarity {
          |UNION ALL ${recallModeRowSql("closest_k", "ugc")}
          |ORDER BY mode""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val batch = e.where(col("vec_id") < QueryBatch)
     val truth = cosTruth(s, d)
@@ -9637,7 +9547,6 @@ object Similarity {
   private def repairedGraphs(s: SparkSession,
       d: String): (DataFrame, DataFrame) =
     graft.Artifacts.cached[(DataFrame, DataFrame)](s, s"graph_repair:$d") {
-      VectorFunctions.register(s)
       val e = Tables.embeddings(s, d).select("vec_id", "embedding")
       val n = e.count()
       val base = e.where(shardBucket(col("vec_id")) < 8)
@@ -9758,7 +9667,6 @@ object Similarity {
          |UNION ALL ${row("post_repair", "rg")}
          |ORDER BY mode""".stripMargin
     }) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val nq = e.where(shardBucket(col("vec_id")) >= 8
       && col("vec_id") < NewAuditBound)
@@ -9842,7 +9750,6 @@ object Similarity {
        |    WHERE NOT (${tombstoneSql("g.qid")})
        |      AND NOT (${tombstoneSql("g.v")})) s) t
        |WHERE rn <= 3 ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val tomb = e.select("vec_id").where(tombstoned(col("vec_id")))
     val (_, visited) = servedGraphSearch(s, d)

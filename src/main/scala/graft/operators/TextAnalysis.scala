@@ -172,7 +172,6 @@ object TextAnalysis {
     // Codegen'd kernel (graft.functions.PolyHash) — same value as the SQL
     // aggregate(sequence(...)) form without materializing a per-character
     // int array per document.
-    graft.functions.PolyHash.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         graft.functions.PolyHash.hash(col("text")).as("fingerprint"))

@@ -32,29 +32,12 @@ final case class FieldSpec(
     name: String,
     kind: FieldKind,
     required: Boolean,
-    isKey: Boolean = false) {
-  /** Spark type of the DECODED column (raw side is always StringType). */
-  def decodedType: DataType = kind match {
-    case FieldKind.Str => StringType
-    case FieldKind.Dbl => DoubleType
-    case FieldKind.Bool => BooleanType
-    case FieldKind.DateCol => TimestampType
-  }
-}
+    isKey: Boolean = false)
 
 final case class EntitySpec(entity: String, fields: Seq[FieldSpec]) {
   /** All-string schema for the PERMISSIVE CSV read (raw side). */
   def rawSchema: StructType =
     StructType(fields.map(f => StructField(f.name, StringType, nullable = true)))
-  /** Typed schema after decode (field metadata carries isKey, as the
-    * reference's AllocAttribute table does).
-    */
-  def decodedSchema: StructType =
-    StructType(fields.map { f =>
-      val md = new MetadataBuilder().putBoolean("isKey", f.isKey).build()
-      StructField(f.name, f.decodedType, nullable = !f.required, md)
-    })
-  def keyFields: Seq[String] = fields.filter(_.isKey).map(_.name)
 }
 
 // Typed row models for Dataset[T] use (decoded timestamps carried as epoch

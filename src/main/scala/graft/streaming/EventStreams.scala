@@ -956,20 +956,17 @@ object EventStreams {
     * (delta file + snapshot maintenance) is fixed I/O regardless of how
     * few rows it holds, and the count is frozen into the checkpoint at
     * first start anyway, so production jobs always pin it explicitly.
-    * Size it to state volume / throughput: the default here suits the
-    * gate-scale replays (measured: 32 → 8 partitions cuts the
-    * stream-stream join gate 5.9s → 3.4s with identical results); a
-    * 100 TB deployment raises [[statePartitions]] to its executor count
-    * the same way it would set shuffle partitions for a batch job.
+    * [[StatePartitions]] suits the gate-scale replays (measured: 32 → 8
+    * partitions cuts the stream-stream join gate 5.9s → 3.4s with
+    * identical results); at scale the count should follow state volume.
     * Results are partition-count-independent (the driver's oracle gate
     * hashes them), so this is a throughput knob, not a semantics knob.
     */
   def runToMemory(spark: SparkSession, streamed: DataFrame, name: String,
-      outputMode: String = "append",
-      statePartitions: Option[Int] = Some(defaultStatePartitions)): DataFrame = {
+      outputMode: String = "append"): DataFrame = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
+    spark.conf.set(key, StatePartitions.toString)
     try {
       val q = streamed.writeStream
         .format("memory")
@@ -1560,9 +1557,6 @@ object EventStreams {
     (closed.toSeq, Seq(grp, nf, gb, cum))
   }
 
-  /** Gate-scale default for [[runToMemory]]'s state partitions (env
-    * override for experiments; a real deployment passes it explicitly).
-    */
-  def defaultStatePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(_.toInt).getOrElse(8)
+  /** [[runToMemory]]'s stateful-operator partition count. */
+  private final val StatePartitions = 8
 }

@@ -416,7 +416,6 @@ object StreamingQueries {
        |WHERE user_id IS NOT NULL AND user_id NOT IN (SELECT user_id FROM deny)
        |GROUP BY 1, 2
        |ORDER BY window_start_ms, event_type""".stripMargin) { (s, d) =>
-    graft.functions.BloomFilterFunctions.register(s)
     // registry leaf: the stream-static join re-executes the static
     // side every micro-batch — unmaterialized, each batch would
     // re-aggregate the events table to rebuild a 9-row denylist (plus the
@@ -477,7 +476,6 @@ object StreamingQueries {
        |FROM allchunks a LEFT JOIN dups d ON a.chunk_fp = d.chunk_fp
        |WHERE d.chunk_fp IS NULL
        |ORDER BY doc_id, chunk_id""".stripMargin) { (s, d) =>
-    graft.functions.PolyHash.register(s)
     val dupFps = graft.operators.Pipeline
       .cdcChunks(graft.Tables.documents(s, d))
       .groupBy("chunk_fp").agg(count(lit(1)).as("n"))
@@ -806,7 +804,6 @@ object StreamingQueries {
   private val q397 = GraftQuery(
     "q397_stream_merkle",
     graft.operators.Pipeline.merkleStreamOracle) { (s, d) =>
-    graft.functions.PolyHash.register(s)
     val docs = EventStreams.readDocuments(s, d)
     val sunk = EventStreams.runToMemory(s,
       graft.operators.Pipeline.merkleStreamPlan(docs),
@@ -908,7 +905,6 @@ object StreamingQueries {
        |SELECT r, cell, CAST(sum(f) AS BIGINT) AS n
        |FROM cells GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
     val Cs = graft.operators.CorpusStats
-    graft.functions.PolyHash.register(s)
     val seeds = s.createDataFrame(Cs.CmRows).toDF("r", "a", "c")
     val staged = stagedWithFlush(s, d)
     val events = readStaged(s, d, staged).where(col("user_id") >= 0)
@@ -1152,7 +1148,6 @@ object StreamingQueries {
        |    AS status
        |FROM arr a LEFT JOIN store s ON a.chunk_fp = s.chunk_fp
        |ORDER BY doc_id, chunk_id""".stripMargin) { (s, d) =>
-    graft.functions.PolyHash.register(s)
     val P = graft.operators.Pipeline
     val store = P.chunkStoreResolve(s, P.versionedChunkStore(s, d), 4)
       .withColumn("in_store", lit(true))
@@ -1182,7 +1177,6 @@ object StreamingQueries {
   private val q251 = GraftQuery(
     "q251_stream_corpus_digest",
     graft.operators.Pipeline.digestOracleSql) { (s, d) =>
-    graft.functions.PolyHash.register(s)
     val digest =
       graft.operators.Pipeline.digestOf(EventStreams.readDocuments(s, d))
     EventStreams.runToMemory(s, digest,
@@ -1235,7 +1229,6 @@ object StreamingQueries {
   private val q256 = GraftQuery(
     "q256_stream_repetition",
     graft.operators.CorpusStats.repetitionOracleSql) { (s, d) =>
-    graft.functions.PolyHash.register(s)
     val out = EventStreams.readDocuments(s, d)
       .select(col("doc_id"), split(lower(col("text")), "\\s+").as("ts"))
       .where(size(col("ts")) >= 2)
@@ -1535,7 +1528,6 @@ object StreamingQueries {
     "q300_stream_hll_registers",
     graft.operators.CorpusStats.hllRegisterOracleSql) { (s, d) =>
     val Cs = graft.operators.CorpusStats
-    graft.functions.PolyHash.register(s)
     val regs = EventStreams.readDocuments(s, d)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
       .where(col("w") =!= "")
@@ -1611,7 +1603,6 @@ object StreamingQueries {
   private val q347 = GraftQuery(
     "q347_stream_kmv",
     graft.operators.CorpusStats.kmvServeOracleSql) { (s, d) =>
-    graft.functions.PolyHash.register(s)
     val Cs = graft.operators.CorpusStats
     val kmv = udaf(new graft.functions.KmvSketch(Cs.KmvK),
       org.apache.spark.sql.Encoders.scalaLong)

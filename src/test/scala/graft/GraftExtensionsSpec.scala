@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The `spark.sql.extensions` entry point must make every graft function
-  * SQL-callable on a session that never touched the per-module
-  * `register()` calls — this is how a cluster deployment gets the
+/** The `spark.sql.extensions` entry point must make every catalog
+  * function SQL-callable on a session that never ran
+  * `GraftExtensions.install` — this is how a cluster deployment gets the
   * function surface.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
@@ -13,7 +13,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   /** Built with the default session cleared first: getOrCreate would
     * otherwise return another suite's session (all suites share one
     * forked JVM) and silently DROP withExtensions — the spec would then
-    * pass via that session's register()-ed temp functions instead of
+    * pass via that session's installed functions instead of
     * testing the extensions path. The previous default is restored so
     * suites running after this one are unaffected.
     */
@@ -71,9 +71,29 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("every declared function is present in the session catalog") {
-    for ((name, _, _) <- GraftExtensions.functions)
-      assert(spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)),
-        s"$name missing from catalog")
+    val names = GraftExtensions.functions.map(_.name)
+    assert(names.size == 31 && names.distinct.size == names.size, names)
+    for (f <- GraftExtensions.functions) {
+      assert(spark.sessionState.functionRegistry.functionExists(f.id),
+        s"${f.name} missing from the session catalog")
+      // a Spark built-in of the same name would shadow the graft function
+      // on an installed session (install skips present names)
+      assert(!org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+        .functionExists(f.id), s"${f.name} is also a Spark built-in")
+    }
+  }
+
+  test("literal integer arguments follow one strict rule") {
+    // an Int-range long is accepted, as `lit(n: Long)` callers rely on
+    assert(spark.sql("SELECT size(byte_pool('abcdefgh', CAST(2 AS BIGINT)))")
+      .head.getInt(0) == 2)
+    val e = intercept[Exception](
+      spark.sql("SELECT byte_pool('abcdefgh', 4294967298)"))
+    assert(e.getMessage.contains("byte_pool n out of int range: 4294967298"),
+      e.getMessage)
+    val e2 = intercept[Exception](
+      spark.sql("SELECT byte_pool('abcdefgh', CAST(id AS INT)) FROM range(1)"))
+    assert(e2.getMessage.contains("byte_pool n must be a literal integer"),
+      e2.getMessage)
   }
 }

@@ -6,17 +6,23 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for the test suite (one JVM-wide session — Spark
-  * startup dominates test wall-clock otherwise).
+  * startup dominates test wall-clock otherwise), with the function catalog
+  * installed for specs that call operator helpers outside a registered
+  * query.
   */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    GraftExtensions.install(s)
+    s
+  }
 }
 
 abstract class SparkSuite extends AnyFunSuite {

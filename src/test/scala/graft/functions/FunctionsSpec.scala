@@ -75,7 +75,6 @@ class FunctionsSpec extends SparkSuite {
   }
 
   private def cosOf(a: Seq[java.lang.Float], b: Seq[java.lang.Float]): Any = {
-    VectorFunctions.register(spark)
     val schema = StructType(Seq(
       StructField("a", ArrayType(FloatType, containsNull = true)),
       StructField("b", ArrayType(FloatType, containsNull = true))))
@@ -110,7 +109,6 @@ class FunctionsSpec extends SparkSuite {
 
   private def prefCosOf(a: Seq[java.lang.Float], b: Seq[java.lang.Float],
       cuts: Seq[Int]): Any = {
-    VectorFunctions.register(spark)
     val schema = StructType(Seq(
       StructField("a", ArrayType(FloatType, containsNull = true)),
       StructField("b", ArrayType(FloatType, containsNull = true))))
@@ -153,7 +151,6 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("cosine_sim_d is bit-identical to the interpreted HOF fold it replaces") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(
       (Seq(0.37, -1.25, 2.5003, 0.071), Seq(1.1, 0.63, -0.807, 2.31)),
@@ -184,7 +181,6 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("double_plain renders reference goldens and extremes") {
-    DoublePlainString.register(spark)
     import spark.implicits._
     val got = Seq((0.01, -0.00033, 12345678.9)).toDF("a", "b", "c")
       .select(DoublePlainString.plain(col("a")),
@@ -197,7 +193,6 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("poly_hash matches the SQL aggregate formula including multi-byte chars") {
-    PolyHash.register(spark)
     import spark.implicits._
     val rows = Seq("hello world", "Priçe: €19.00", "", "naïve — test")
       .toDF("s")
@@ -230,7 +225,6 @@ class FunctionsSpec extends SparkSuite {
     val bf = BloomFilter.create(100, 0.03)
     (0L until 100L).foreach(bf.putLong)
     val bytes = BloomFilterFunctions.serialize(bf)
-    BloomFilterFunctions.register(spark)
     val probe = (0L until 2000L).toDF("k")
       .select(col("k"),
         BloomFilterFunctions.mightContain(lit(bytes), col("k")).as("hit"))
@@ -244,7 +238,6 @@ class FunctionsSpec extends SparkSuite {
 
   test("bloom might-contain is null-safe and rejects bad input types") {
     import spark.implicits._
-    BloomFilterFunctions.register(spark)
     val bf = org.apache.spark.util.sketch.BloomFilter.create(10, 0.03)
     bf.putLong(7L)
     val bytes = BloomFilterFunctions.serialize(bf)
@@ -262,7 +255,6 @@ class FunctionsSpec extends SparkSuite {
 
   test("int8 quant stats: error bound, zero-vector guard, null element") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     def statsOf(v: Seq[java.lang.Float]): Seq[Double] = {
       val r = Seq(Tuple1(v)).toDF("v")
         .select(VectorFunctions.int8QuantStats(col("v")).as("s"))
@@ -282,7 +274,6 @@ class FunctionsSpec extends SparkSuite {
 
   test("broadcast-handle bloom probe agrees with the literal form") {
     import spark.implicits._
-    BloomFilterFunctions.register(spark)
     val bf = org.apache.spark.util.sketch.BloomFilter.create(50, 0.03)
     (0L until 50L).foreach(bf.putLong)
     val bytes = BloomFilterFunctions.serialize(bf)

@@ -17,7 +17,6 @@ class CdcChunkSpec extends SparkSuite {
       .select("chunk_fp").collect().map(_.getLong(0)).toSeq
 
   test("a prefix insertion leaves every chunk after the next boundary intact") {
-    graft.functions.PolyHash.register(spark)
     import spark.implicits._
     // deterministic 240-token text with hash variety
     val toks = (0 until 240).map(i => s"w$i")
@@ -43,7 +42,6 @@ class CdcChunkSpec extends SparkSuite {
   }
 
   test("chunks tile each document exactly: contiguous, complete, fp of its tokens") {
-    graft.functions.PolyHash.register(spark)
     import spark.implicits._
     val toks = (0 until 150).map(i => s"w$i")
     val docs = Seq((7L, toks.mkString(" "))).toDF("doc_id", "text")

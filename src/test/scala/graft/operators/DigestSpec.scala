@@ -23,7 +23,6 @@ class DigestSpec extends SparkSuite {
       .collect().map(r => (r.getString(0),
         (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
 
-    graft.functions.PolyHash.register(spark)
     def digest(pred: org.apache.spark.sql.Column) =
       graft.Tables.documents(spark, dir).where(pred)
         .select(col("source"),

@@ -22,7 +22,6 @@ class KernelParitySpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("srp_bucket kernel == interpreted HOF fold on live embeddings, all bits") {
-    graft.functions.VectorFunctions.register(spark)
     val e = graft.Tables.embeddings(spark, dir)
     // the PRODUCTION bit count plus one narrower and one wider setting
     Seq(4, Similarity.srpBitsProd, Similarity.srpBitsProd + 2)
@@ -36,7 +35,6 @@ class KernelParitySpec extends SparkSuite {
   }
 
   test("jl_project kernel == interpreted HOF projection on live embeddings") {
-    graft.functions.VectorFunctions.register(spark)
     val e = graft.Tables.embeddings(spark, dir)
     val (kOut, dim) = Similarity.jlDims // the PRODUCTION projection shape
     val diff = e.select(
@@ -47,7 +45,6 @@ class KernelParitySpec extends SparkSuite {
   }
 
   test("pool_thresh_hash kernel == interpreted HOF folds on live documents") {
-    graft.functions.BytePool.register(spark)
     val bits = Media.phashBits // the PRODUCTION phash width
     val diff = graft.Tables.documents(spark, dir)
       .where(length(col("text")) >= bits)
@@ -63,7 +60,6 @@ class KernelParitySpec extends SparkSuite {
   }
 
   test("tri_products kernel == interpreted flatten/transform on live embeddings") {
-    graft.functions.VectorFunctions.register(spark)
     // q321's quantization feed, then the ORIGINAL interpreted upper-
     // triangle struct builder flattened to the kernel's positional order
     val diff = graft.Tables.embeddings(spark, dir)
@@ -79,7 +75,6 @@ class KernelParitySpec extends SparkSuite {
   }
 
   test("sorted_overlap kernel == size(array_intersect) on live sorted-distinct arrays") {
-    graft.functions.VectorFunctions.register(spark)
     // live token-set-shaped arrays: coarse-quantized embedding components,
     // sorted-distinct exactly like q196's prefix sets — every cross pair
     // of a bounded batch, so overlaps of 0..n all occur
@@ -98,7 +93,6 @@ class KernelParitySpec extends SparkSuite {
   }
 
   test("gram_hashes / distinct_gram_hashes kernels == the HOF gram pipelines on live documents") {
-    graft.functions.PolyHash.register(spark)
     val n = 8 // the production GramN
     val toks = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), split(lower(col("text")), "\\s+").as("ts"))
@@ -127,7 +121,6 @@ class KernelParitySpec extends SparkSuite {
   }
 
   test("shingles3 + poly_hash_all + min_hash_sig kernels == the HOF pipeline on live documents") {
-    graft.functions.PolyHash.register(spark)
     // the EXACT r17 shingle/hash/signature pipeline, stage by stage,
     // against the three one-pass kernels that replaced it
     val base = graft.Tables.documents(spark, dir)
@@ -159,8 +152,6 @@ class KernelParitySpec extends SparkSuite {
   }
 
   test("sorted_overlap_str kernel == size(array_intersect) on live sorted shingle arrays") {
-    graft.functions.VectorFunctions.register(spark)
-    graft.functions.PolyHash.register(spark)
     // live 3-gram shingle sets, sorted-distinct exactly like the q40/
     // q249/q276 verify projections; every cross pair of a bounded batch
     val sets = graft.Tables.documents(spark, dir)
@@ -184,7 +175,6 @@ class KernelParitySpec extends SparkSuite {
   }
 
   test("nearest_cell kernel == interpreted array_min/transform argmin on live embeddings") {
-    graft.functions.VectorFunctions.register(spark)
     val e = graft.Tables.embeddings(spark, dir)
     val total = e.count()
     // the c0 codebook recipe at fixture and (clamped) production-ish k
@@ -207,7 +197,6 @@ class KernelParitySpec extends SparkSuite {
   }
 
   test("nearest_cells kernel == crossJoin/sort_array top-p selection on live embeddings") {
-    graft.functions.VectorFunctions.register(spark)
     val e = graft.Tables.embeddings(spark, dir)
     val total = e.count()
     val k = math.min(16L, total / 2)
@@ -238,7 +227,6 @@ class KernelParitySpec extends SparkSuite {
   }
 
   test("cell_mean kernel == interpreted posexplode/aggregate recompute on live assignments") {
-    graft.functions.VectorFunctions.register(spark)
     // live embeddings under an arbitrary 7-cell assignment — the exact
     // r17 centroid-recompute pipeline (posexplode, per-(cell, j) sorted fold,
     // re-assembly) against the one-pass per-cell kernel
@@ -269,7 +257,6 @@ class KernelParitySpec extends SparkSuite {
   }
 
   test("tri_products null and small-input policy") {
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(
       (1L, Seq[java.lang.Long](2L, 3L, 5L)),
@@ -327,14 +314,12 @@ class KernelParitySpec extends SparkSuite {
 
   for ((mm, k) <- Seq((4, 16), (Similarity.PqMProd, Similarity.PqKProd))) {
     test(s"raw query-batch LUT matches the per-subspace union (M=$mm, k=$k)") {
-      VectorFunctions.register(spark)
       val (cents, _) = Similarity.pqTrained(spark, dir, k, mm)
       val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
       assertParity("raw", Similarity.batchQueries(e), cents, mm)
     }
 
     test(s"residual per-probe LUT matches the per-subspace union (M=$mm, k=$k)") {
-      VectorFunctions.register(spark)
       val (c1, _) = Similarity.kmTrained(spark, dir)
       val (rcents, _) = Similarity.pqResTrained(spark, dir, k, mm)
       val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")

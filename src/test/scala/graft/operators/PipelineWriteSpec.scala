@@ -41,7 +41,6 @@ class PipelineWriteSpec extends SparkSuite {
     assert(pruned.count() > 0)
 
     // the dedup contract survives the write: one row per fingerprint
-    graft.functions.PolyHash.register(spark)
     val dupes = full
       .groupBy(graft.functions.PolyHash.hash(col("text")).as("fp"))
       .agg(count(lit(1)).as("n")).where(col("n") > 1).count()

@@ -225,7 +225,6 @@ class ScaleSpec extends SparkSuite {
       s"cell predicate did not prune partitions:\n$scan")
     // the pruned cell is a complete, searchable shard: every member's
     // top-1 neighbor within the cell exists and is not itself
-    graft.functions.VectorFunctions.register(spark)
     val l = probe.select(col("vec_id"), col("embedding").as("emb_a"))
     val r = probe.select(col("vec_id").as("nid"), col("embedding").as("emb_b"))
     val top1 = l.join(r, col("vec_id") =!= col("nid"))
@@ -298,7 +297,6 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("SRP bucket count scales with the bits parameter") {
-    graft.functions.VectorFunctions.register(spark)
     val e = graft.Tables.embeddings(spark, dir)
     def buckets(bits: Int): Long =
       e.select(Similarity.srpBucket(bits).as("b")).distinct().count()
@@ -384,7 +382,6 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("packed production codes round-trip and are genuinely one byte per subspace") {
-    graft.functions.VectorFunctions.register(spark)
     val packed = Similarity.pqProdPacked(spark, dir)
     // byte width IS the subspace count — the 1-byte/subspace claim
     val widths = packed.select(length(col("pqb")).as("w")).distinct()
@@ -592,7 +589,6 @@ class ScaleSpec extends SparkSuite {
     import spark.implicits._
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    graft.functions.VectorFunctions.register(spark)
     val e = spark.read.parquet(s"$tmp/embeddings.parquet")
       .select("vec_id", "embedding")
     val truth = {
@@ -678,7 +674,6 @@ class ScaleSpec extends SparkSuite {
     //  3. diversification: kept neighborhoods are measurably more
     //     SPREAD than the closest-K graph's — mean max pairwise cosine
     //     inside a neighborhood strictly drops.
-    graft.functions.VectorFunctions.register(spark)
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
       .select("vec_id", "embedding")
     val pruned = Similarity.alphaPrunedGraph(spark, dir).localCheckpoint()
