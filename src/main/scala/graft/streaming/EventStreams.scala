@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming twins of the batch temporal operators (q18-q21,
   * graft.operators.Temporal) over a file-source stream of the `events`
@@ -18,8 +19,6 @@ import org.apache.spark.sql.functions._
   * nanos are read as raw longs and floored to micros so the streaming and
   * batch paths share one timestamp semantics.
   */
-final case class UserTotals(user_id: Long, n_events: Long, sum_value: Double)
-
 object EventStreams {
 
   /** Stage a single parquet FILE as a directory a file-stream source will
@@ -36,7 +35,7 @@ object EventStreams {
     * copying the file, resolving the symlink to a versioned target, or
     * keying consumers on the first-read content. If this staging ever
     * needs to materialize content, switch the key to part-file identity
-    * + footer hash like [[StreamingQueries.stagedWithFlush]].
+    * + footer hash like [[StreamingQueries.stagedWithFlush]] does.
     */
   private def stageAsDir(src: java.io.File, prefix: String): String =
     if (!src.isFile) src.getPath
@@ -115,25 +114,28 @@ object EventStreams {
   def readEmbeddings(spark: SparkSession, dir: String): DataFrame =
     readTable(spark, dir, "embeddings")
 
+  /** The watermark delay of every twin here but q55's interval join. */
+  private[streaming] val Watermark = "10 minutes"
+
   /** Tumbling 1-hour windows per event type (streaming q18). */
-  def tumblingCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
+  def tumblingCounts(events: DataFrame): DataFrame =
+    events.withWatermark("ts", Watermark)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
       .select(unix_millis(col("window.start")).as("window_start_ms"),
         col("event_type"), col("n"), col("sum_value"))
 
   /** Sliding 1-hour/15-minute windows (streaming q19). */
-  def slidingCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
+  def slidingCounts(events: DataFrame): DataFrame =
+    events.withWatermark("ts", Watermark)
       .groupBy(window(col("ts"), "1 hour", "15 minutes"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
       .select(unix_millis(col("window.start")).as("window_start_ms"),
         col("n"), col("sum_value"))
 
   /** Per-user session windows with a 10-minute gap (streaming q20). */
-  def sessionCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
+  def sessionCounts(events: DataFrame): DataFrame =
+    events.withWatermark("ts", Watermark)
       .groupBy(session_window(col("ts"), "10 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
       .select(col("user_id"),
@@ -144,36 +146,13 @@ object EventStreams {
     * first event per (user_id, event_type) with state eviction once the
     * watermark passes — the unbounded-state-safe form of dropDuplicates.
     */
-  def dedupedEvents(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
+  def dedupedEvents(events: DataFrame): DataFrame =
+    events.withWatermark("ts", Watermark)
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select("user_id", "event_type", "event_id", "ts")
 
-  /** Per-user running totals via explicit keyed state — the custom-state
-    * surface (`KeyValueGroupedDataset.mapGroupsWithState`) for semantics
-    * the built-in windows can't express. State is one (count, sum) pair
-    * per user: bounded, mergeable, and evictable via timeouts in a
-    * production config (NoTimeout here since the smoke harness drains a
-    * finite file stream).
-    */
-  def userTotalsWithState(events: DataFrame): org.apache.spark.sql.Dataset[UserTotals] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id"), col("value")).as[(Long, Double)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[(Long, Double), UserTotals](
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, Double)],
-         state: org.apache.spark.sql.streaming.GroupState[(Long, Double)]) =>
-          var (n, sv) = state.getOption.getOrElse((0L, 0.0))
-          rows.foreach { r => n += 1; sv += r._2 }
-          state.update((n, sv))
-          UserTotals(uid, n, sv)
-      }
-  }
-
   /** Stream-stream interval join: each view joined to the same user's
-    * clicks within `maxGap` after it (click attribution). The watermark is
+    * clicks within 6 hours after it (click attribution). The watermark is
     * applied BEFORE the type split so both join branches share the source
     * watermark, and the two-sided time bound lets Spark evict join state
     * once the watermark passes — bounded state on an infinite stream.
@@ -188,8 +167,8 @@ object EventStreams {
     * touch that code path.
     *
     * `flushType` is the outer-gate analog of [[segmentRevenue]]'s
-    * keepTypes: a watermark operator only sees rows that survive the
-    * filters Catalyst pushes BELOW it, so for a flush sentinel to advance
+    * '__flush' filter: a watermark operator only sees rows that survive
+    * the filters Catalyst pushes BELOW it, so for a flush sentinel to advance
     * the watermark it must pass BOTH branches' event-type filters (the
     * self-join has two watermark nodes and the global watermark is their
     * min — one stuck side stalls eviction and the final null rows never
@@ -201,8 +180,8 @@ object EventStreams {
     * is never emitted — the watermark never passes its own window, the
     * same invariant every flush-gated query relies on.
     */
-  def attributedClicks(events: DataFrame, maxGap: String = "6 hours",
-      watermark: String = "10 minutes", joinType: String = "inner",
+  def attributedClicks(events: DataFrame,
+      watermark: String = Watermark, joinType: String = "inner",
       flushType: Option[String] = None): DataFrame = {
     val wm = events.withWatermark("ts", watermark)
     def keep(t: String) = flushType
@@ -219,7 +198,7 @@ object EventStreams {
     views.join(clicks,
       col("v_user") === col("c_user") &&
         col("c_ts") >= col("v_ts") &&
-        col("c_ts") <= col("v_ts") + expr(s"INTERVAL $maxGap") && guard, joinType)
+        col("c_ts") <= col("v_ts") + expr("INTERVAL 6 hours") && guard, joinType)
       .select(col("v_user").as("user_id"), col("view_id"), col("click_id"),
         unix_millis(col("v_ts")).as("view_ts_ms"),
         unix_millis(col("c_ts")).as("click_ts_ms"))
@@ -233,16 +212,14 @@ object EventStreams {
     * the operator runs indefinitely at scale while the dimension rides
     * along as a broadcast that AQE would re-plan to shuffle if it grew.
     *
-    * The event-type filter keeps `keepTypes` (not just purchases) so a
-    * flush-sentinel row ('__flush') can reach the watermark operator and
-    * close the final windows; non-purchase rows die at the inner join
-    * (sentinel user_id = -1 matches no customer) before touching state.
+    * The event-type filter keeps '__flush' beside purchases so the
+    * flush-sentinel row can reach the watermark operator and close the
+    * final windows; it dies at the inner join (sentinel user_id = -1
+    * matches no customer) before touching state.
     */
-  def segmentRevenue(events: DataFrame, customers: DataFrame,
-      watermark: String = "10 minutes",
-      keepTypes: Seq[String] = Seq("purchase", "__flush")): DataFrame =
-    events.withWatermark("ts", watermark)
-      .where(col("event_type").isin(keepTypes: _*))
+  def segmentRevenue(events: DataFrame, customers: DataFrame): DataFrame =
+    events.withWatermark("ts", Watermark)
+      .where(col("event_type").isin("purchase", "__flush"))
       .join(broadcast(customers.select(col("c_custkey"), col("c_mktsegment"))),
         col("user_id") + 1 === col("c_custkey"))
       .groupBy(window(col("ts"), "1 hour"), col("c_mktsegment"))
@@ -251,11 +228,11 @@ object EventStreams {
         col("c_mktsegment").as("mktsegment"), col("n"), col("sum_value"))
 
   /** Per-user value-milestone alerts via `flatMapGroupsWithState` — the
-    * zero-or-more-outputs custom-state surface (vs [[userTotalsWithState]]'s
-    * exactly-one). Emits one row per `stepCents` of cumulative value a
-    * user crosses in the batch — between crossings a group emits NOTHING,
-    * which `mapGroupsWithState` cannot express. State per user is one
-    * running long: bounded and evictable by timeout in production.
+    * zero-or-more-outputs custom-state surface. Emits one row per
+    * `stepCents` of cumulative value a user crosses in the batch —
+    * between crossings a group emits NOTHING, which `mapGroupsWithState`
+    * cannot express. State per user is one running long: bounded and
+    * evictable by timeout in production.
     *
     * Accumulation is in INTEGER CENTS (`round(value·100)` — exact for
     * 2-decimal money values, and a binary double can never land exactly
@@ -291,114 +268,129 @@ object EventStreams {
       }
   }
 
-  /** The q126 funnel as a WATERMARK-FINALIZED streaming fold
-    * (`flatMapGroupsWithState` + event-time timeout) — the principled
-    * streaming funnel: greedy first-match progress is NOT monotone under
-    * event-time disorder (an earlier-arriving-later event can both raise
-    * and lower the final step), so an append stream may only emit a
-    * user's `steps_reached` once it is PROVABLY final. That proof is the
-    * watermark: once it passes `max(event ts) + window`, no admissible
-    * future event can qualify for any step (every step match requires
-    * `ts <= last_match + window`, and the first signup is fixed), so the
-    * group times out, folds its buffered history in (ts, event_id)
-    * order — the IDENTICAL state machine as the batch `aggregate` fold —
-    * emits, and drops state.
+  /** The one event-time finality rule of the keyed twin folds (the
+    * watermark model of Structured Streaming): a key's answer is emitted
+    * only once the watermark proves no admissible future row can change
+    * it. `rows` carry the event-time column `ts`, watermarked here by
+    * [[Watermark]]; each fold supplies only what is its own — the key, a
+    * per-row horizon in ms (the latest event time at which a later row
+    * could still change the key's answer), the `empty` state, a `close`
+    * run once when the key is final, and a per-batch `step` over (key,
+    * state, the batch's rows, watermark ms) that may emit a prefix the
+    * watermark has already made final.
     *
-    * State per user is the funnel-RELEVANT event list (four types only)
-    * plus a max-ts high-water mark — the same per-user payload bound as
-    * the batch collect_list, evicted at timeout; users whose events are
-    * all non-funnel types still hold a (empty-buffer, max-ts) entry so
-    * they finalize at step 0, exactly like the oracle's DISTINCT-user
-    * frame. The flush sentinel advances the watermark past every real
-    * user's horizon at replay end (its own timeout never fires — the
-    * watermark stays 10 min behind it), which is how q148's drained
-    * stream emits exactly the batch answer.
+    * The state is (fold state, max horizon seen). After each batch the
+    * key's timeout is `max(horizon + 10 ms, watermark + 1 ms)`: it fires
+    * once the watermark passes every horizon the key has seen (the clamp
+    * covers a key whose horizon is already behind the watermark — its
+    * answer is equally final then), and the timed-out key is closed,
+    * emitted and evicted. The flush sentinel (see [[StreamingQueries]])
+    * advances the watermark past every real key's horizon at replay end
+    * while its own key never times out (the watermark stays one delay
+    * behind its event), which is how a drained flush-gated twin such as
+    * q148 emits exactly the batch answer.
     */
-  def funnelSteps(events: DataFrame, watermark: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[(Long, Int)] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    // the watermarked `ts` column must ride into the grouped Dataset
-    // (event-time timeout resolves the watermark from the child schema);
-    // the µs long `t` alongside it is what the fold compares on
-    events.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"),
-        col("event_id"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Seq[(Long, Long, String)], Long), (Long, Int)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, String)],
-         state: org.apache.spark.sql.streaming.GroupState[(Seq[(Long, Long, String)], Long)]) =>
+  private def finalizedByWatermark[K, R, S, O](rows: Dataset[R])(
+      key: R => K, horizonMs: R => Long, empty: S)(
+      close: (K, S) => Iterator[O])(
+      step: (K, S, Seq[R], Long) => (S, Iterator[O]))(
+      implicit kEnc: Encoder[K], sEnc: Encoder[(S, Long)], oEnc: Encoder[O])
+      : Dataset[O] =
+    rows.withWatermark("ts", Watermark)
+      .groupByKey(key)
+      .flatMapGroupsWithState[(S, Long), O](OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout()) {
+        (k: K, batch: Iterator[R], state: GroupState[(S, Long)]) =>
           if (state.hasTimedOut) {
-            val steps = foldFunnel(state.get._1)
+            val (s, _) = state.get
             state.remove()
-            Iterator.single((uid, steps))
+            close(k, s)
           } else {
-            val rs = rows.toSeq
-            val (buf0, max0) = state.getOption.getOrElse(
-              (Seq.empty[(Long, Long, String)], Long.MinValue))
-            val buf = buf0 ++ rs.collect {
-              case (_, _, t, eid, et) if FunnelTypes(et) => (t, eid, et)
-            }
-            val maxT = math.max(max0, rs.iterator.map(_._3).max)
-            state.update((buf, maxT))
-            // finalize once the watermark proves the window closed; the
-            // clamp handles a group whose horizon is already behind the
-            // watermark (its fold is equally final then)
-            state.setTimeoutTimestamp(math.max(
-              maxT / 1000L + FunnelWindowUs / 1000L + 10L,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
+            val rs = batch.toSeq
+            val (s0, h0) = state.getOption.getOrElse((empty, Long.MinValue))
+            val wm = state.getCurrentWatermarkMs()
+            val (s, out) = step(k, s0, rs, wm)
+            val h = math.max(h0, rs.iterator.map(horizonMs).max)
+            state.update((s, h))
+            state.setTimeoutTimestamp(math.max(h + 10L, wm + 1L))
+            out
           }
       }
+
+  /** One per-user timeline row: (t µs, event_id, event_type). */
+  private type Touch = (Long, Long, String)
+
+  /** [[finalizedByWatermark]] over each user's event timeline, the
+    * projection seven twins share. A user's horizon is their last event
+    * plus `windowUs`, how far past it a later event can still change the
+    * answer.
+    */
+  private def timelineFold[S, O](events: DataFrame, windowUs: Long, empty: S)(
+      close: (Long, S) => Iterator[O])(
+      step: (S, Seq[Touch], Long) => (S, Iterator[O]))(
+      implicit sEnc: Encoder[(S, Long)], oEnc: Encoder[O]): Dataset[O] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    finalizedByWatermark(events
+        .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"),
+          col("event_id"), col("event_type"))
+        .as[(Long, java.sql.Timestamp, Long, Long, String)])(
+      _._1, _._3 / 1000L + windowUs / 1000L, empty)(close) {
+      (_, s, rs, wm) => step(s, rs.map(r => (r._3, r._4, r._5)), wm)
+    }
   }
 
-  /** The q127 retention cohorts as watermark-finalized custom state —
-    * [[funnelSteps]]' machinery applied to the other non-monotone
-    * per-user temporal fold: a user's cohort day is their FIRST-seen
-    * day, which late data can only move EARLIER, so emitted
-    * (cohort_day, day_offset) rows are provisional until the watermark
-    * proves them final. State per user is the active-day set plus a
-    * max-ts high-water mark (bounded by days of real activity — far
-    * smaller than the event history); at event-time timeout the group
-    * emits its (cohort, offset) pairs exactly once and evicts. Each
+  /** The q126 funnel as a watermark-finalized streaming fold
+    * ([[finalizedByWatermark]]) — the principled streaming funnel: greedy
+    * first-match progress is NOT monotone under event-time disorder (an
+    * earlier-arriving-later event can both raise and lower the final
+    * step), so an append stream may only emit a user's `steps_reached`
+    * once it is PROVABLY final. The horizon is `max(event ts) + window`:
+    * past it no admissible future event can qualify for any step (every
+    * step match requires `ts <= last_match + window`, and the first
+    * signup is fixed), so the group folds its buffered history
+    * ([[foldFunnel]]), emits, and drops state.
+    *
+    * State per user is the funnel-RELEVANT event list (four types only)
+    * — the same per-user payload bound as the batch collect_list; users
+    * whose events are all non-funnel types still hold an empty buffer so
+    * they finalize at step 0, exactly like the oracle's DISTINCT-user
+    * frame.
+    */
+  def funnelSteps(events: DataFrame): Dataset[(Long, Int)] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    timelineFold(events, FunnelWindowUs, Seq.empty[Touch])(
+      (uid, buf) => Iterator.single((uid, foldFunnel(buf)))) {
+      (buf, rs, _) => (buf ++ rs.filter(r => FunnelTypes(r._3)), Iterator.empty)
+    }
+  }
+
+  /** The q127 retention cohorts as watermark-finalized custom state
+    * ([[finalizedByWatermark]]) on the other non-monotone per-user
+    * temporal fold: a user's cohort day is their FIRST-seen day, which
+    * late data can only move EARLIER, so emitted (cohort_day,
+    * day_offset) rows are provisional until the watermark proves them
+    * final. State per user is the active-day set (bounded by days of
+    * real activity — far smaller than the event history); at timeout
+    * the group emits its (cohort, offset) pairs exactly once. Each
     * user contributes at most one row per pair, so the downstream
     * per-pair `count(*)` IS the batch `count(DISTINCT user_id)` —
     * distinct-count streaming without distinct-count state.
     */
-  def retentionRows(events: DataFrame, watermark: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[(Int, Int)] = {
+  def retentionRows(events: DataFrame): Dataset[(Int, Int)] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"))
-      .as[(Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Seq[Int], Long), (Int, Int)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long)],
-         state: org.apache.spark.sql.streaming.GroupState[(Seq[Int], Long)]) =>
-          if (state.hasTimedOut) {
-            val days = state.get._1
-            state.remove()
-            val cohort = days.min
-            days.sorted.iterator.map(d => (cohort, d - cohort))
-          } else {
-            val rs = rows.toSeq
-            val (days0, max0) = state.getOption.getOrElse(
-              (Seq.empty[Int], Long.MinValue))
-            val days = (days0 ++ rs.iterator.map(r =>
-              Math.floorDiv(r._3, DayUs).toInt)).distinct
-            val maxT = math.max(max0, rs.iterator.map(_._3).max)
-            state.update((days, maxT))
-            state.setTimeoutTimestamp(math.max(maxT / 1000L + 10L,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-      }
+    finalizedByWatermark(events
+        .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"))
+        .as[(Long, java.sql.Timestamp, Long)])(
+      _._1, _._3 / 1000L, Seq.empty[Int]) { (_, days) =>
+      val cohort = days.min
+      days.sorted.iterator.map(d => (cohort, d - cohort))
+    } { (_, days, rs, _) =>
+      ((days ++ rs.iterator.map(r => Math.floorDiv(r._3, DayUs).toInt)).distinct,
+        Iterator.empty)
+    }
   }
 
   /** q192's interval union as watermark-finalized custom state — each
@@ -416,54 +408,33 @@ object EventStreams {
     * connected components of the overlap-or-touch relation (the sweep
     * discovers them in sorted order, the merge discovers them
     * arrival-incrementally; components are order-free). Emission waits
-    * for the event-time timeout past the user's horizon — a future
-    * admissible event (ts ≥ watermark − delay) could still extend or
-    * BRIDGE islands whose end lies ahead of the watermark, so per-user
-    * finalization is the earliest sound emission; the flush sentinel
-    * closes every real user at replay end (q148's invariant).
+    * for [[finalizedByWatermark]]'s timeout past the user's horizon (the
+    * latest island end, in ms) — a future admissible event (ts ≥
+    * watermark − delay) could still extend or BRIDGE islands whose end
+    * lies ahead of the watermark, so per-user finalization is the
+    * earliest sound emission.
     */
-  def intervalIslands(events: DataFrame, watermark: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[(Long, Long, Long, Long)] = {
+  def intervalIslands(events: DataFrame): Dataset[(Long, Long, Long, Long)] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), unix_millis(col("ts")).as("s_ms"),
-        (unix_millis(col("ts"))
-          + round(col("value") * 60000).cast("long")).as("e_ms"))
-      .as[(Long, java.sql.Timestamp, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Seq[(Long, Long, Long)], Long),
-          (Long, Long, Long, Long)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long)],
-         state: org.apache.spark.sql.streaming.GroupState[(Seq[(Long, Long, Long)], Long)]) =>
-          if (state.hasTimedOut) {
-            val islands = state.get._1
-            state.remove()
-            islands.sortBy(i => (i._1, i._2)).iterator
-              .map(i => (uid, i._1, i._2, i._3))
-          } else {
-            val rs = rows.toSeq
-            val (isl0, max0) = state.getOption.getOrElse(
-              (Seq.empty[(Long, Long, Long)], Long.MinValue))
-            val isl = rs.foldLeft(isl0) { case (acc, (_, _, s, e)) =>
-              mergeInterval(acc, s, e)
-            }
-            val maxT = math.max(max0,
-              rs.iterator.map(r => math.max(r._3, r._4)).max)
-            state.update((isl, maxT))
-            state.setTimeoutTimestamp(math.max(maxT + 10L,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-      }
+    finalizedByWatermark(events
+        .select(col("user_id"), col("ts"), unix_millis(col("ts")).as("s_ms"),
+          (unix_millis(col("ts"))
+            + round(col("value") * 60000).cast("long")).as("e_ms"))
+        .as[(Long, java.sql.Timestamp, Long, Long)])(
+      _._1, r => math.max(r._3, r._4), Seq.empty[(Long, Long, Long)]) {
+      (uid, islands) => islands.sortBy(i => (i._1, i._2)).iterator
+        .map(i => (uid, i._1, i._2, i._3))
+    } { (_, isl, rs, _) =>
+      (rs.foldLeft(isl) { case (acc, (_, _, s, e)) => mergeInterval(acc, s, e) },
+        Iterator.empty)
+    }
   }
 
   /** q241's session 3-gram paths as watermark-finalized custom state —
     * the streaming side of the "top user flows" report. Per user the
-    * state buffers (t_us, event_id, event_type) rows plus a max-ts
-    * high-water mark, and sessions (6-hour inactivity gap, q241's
+    * state buffers (t_us, event_id, event_type) rows, and sessions
+    * (6-hour inactivity gap, q241's
     * constant) are finalized INCREMENTALLY: on every batch, any session
     * whose last event sits more than the gap behind the watermark is
     * provably complete — no future event can extend it (anything new
@@ -474,57 +445,34 @@ object EventStreams {
     * (the q205 bounded-state discipline applied to an order-sensitive
     * fold). Path strings null-propagate exactly like the batch side's
     * `concat` (a NULL event_type yields a NULL path, grouped as such).
-    * The event-time timeout sweeps users whose stream simply ended.
+    * [[finalizedByWatermark]]'s timeout sweeps users whose stream simply
+    * ended.
     */
-  def sessionPathRows(events: DataFrame, watermark: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[String] = {
+  def sessionPathRows(events: DataFrame): Dataset[String] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"),
-        col("event_id"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Seq[(Long, Long, String)], Long), String](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, String)],
-         state: org.apache.spark.sql.streaming.GroupState[(Seq[(Long, Long, String)], Long)]) =>
-          if (state.hasTimedOut) {
-            val buf = state.get._1
-            state.remove()
-            sessionTrigrams(buf).iterator
-          } else {
-            val rs = rows.toSeq
-            val (buf0, max0) = state.getOption.getOrElse(
-              (Seq.empty[(Long, Long, String)], Long.MinValue))
-            val buf = (buf0 ++ rs.map { case (_, _, t, eid, et) => (t, eid, et) })
-              .sortBy(r => (r._1, r._2))
-            val maxT = math.max(max0, rs.iterator.map(_._3).max)
-            // split the sorted buffer at the last PROVABLY-final session
-            // boundary: every session ending > gap before the watermark
-            // is closed — emit and evict it, keep the open tail
-            val wmUs = state.getCurrentWatermarkMs() * 1000L
-            // sorted buffer ⇒ a session's end is its last row's t, and
-            // session ends increase along the buffer, so the LAST session
-            // boundary whose preceding end sits > gap behind the watermark
-            // cuts off every closed session at once
-            var cut = 0
-            var i = 1
-            while (i < buf.length) {
-              if (buf(i)._1 - buf(i - 1)._1 > SessionGapUs &&
-                  buf(i - 1)._1 + SessionGapUs < wmUs)
-                cut = i
-              i += 1
-            }
-            val (closed, open) = buf.splitAt(cut)
-            state.update((open, maxT))
-            state.setTimeoutTimestamp(math.max(
-              maxT / 1000L + SessionGapUs / 1000L + 10L,
-              state.getCurrentWatermarkMs() + 1L))
-            sessionTrigrams(closed).iterator
-          }
+    timelineFold(events, SessionGapUs, Seq.empty[Touch])(
+      (_, buf) => sessionTrigrams(buf).iterator) { (buf0, rs, wmMs) =>
+      val buf = (buf0 ++ rs).sortBy(r => (r._1, r._2))
+      // split the sorted buffer at the last PROVABLY-final session
+      // boundary: every session ending > gap before the watermark
+      // is closed — emit and evict it, keep the open tail
+      val wmUs = wmMs * 1000L
+      // sorted buffer ⇒ a session's end is its last row's t, and
+      // session ends increase along the buffer, so the LAST session
+      // boundary whose preceding end sits > gap behind the watermark
+      // cuts off every closed session at once
+      var cut = 0
+      var i = 1
+      while (i < buf.length) {
+        if (buf(i)._1 - buf(i - 1)._1 > SessionGapUs &&
+            buf(i - 1)._1 + SessionGapUs < wmUs)
+          cut = i
+        i += 1
       }
+      val (closed, open) = buf.splitAt(cut)
+      (open, sessionTrigrams(closed).iterator)
+    }
   }
 
   private val SessionGapUs = 21600000000L
@@ -568,50 +516,31 @@ object EventStreams {
     * unlike [[intervalIslands]] the state must buffer the (t_us,
     * event_id, k) history — q148's payload bound — and the dimension
     * rows are only emittable once the watermark proves the user's
-    * history complete. At event-time timeout the group sorts once and
-    * runs the IDENTICAL change-detect + interval-close logic as the
-    * batch lag/lead passes, then evicts.
+    * history complete ([[finalizedByWatermark]]). At timeout the group
+    * sorts once and runs the IDENTICAL change-detect + interval-close
+    * logic as the batch lag/lead passes.
     */
-  def scd2Intervals(events: DataFrame, watermark: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[(Long, Long, Long, Option[Long])] = {
+  def scd2Intervals(events: DataFrame)
+      : Dataset[(Long, Long, Long, Option[Long])] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"),
-        col("event_id"),
-        regexp_extract(col("props"), "(\\d+)", 1).cast("long").as("k"))
-      .as[(Long, java.sql.Timestamp, Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Seq[(Long, Long, Long)], Long),
-          (Long, Long, Long, Option[Long])](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, Long)],
-         state: org.apache.spark.sql.streaming.GroupState[(Seq[(Long, Long, Long)], Long)]) =>
-          if (state.hasTimedOut) {
-            val hist = state.get._1.sortBy(r => (r._1, r._2))
-            state.remove()
-            // change rows: first, or k differs from the previous event
-            val changes = hist.iterator.zipWithIndex.collect {
-              case ((t, _, k), i) if i == 0 || hist(i - 1)._3 != k => (t, k)
-            }.toSeq
-            changes.iterator.zipWithIndex.map { case ((t, k), i) =>
-              val to = if (i + 1 < changes.size)
-                Some(changes(i + 1)._1 / 1000L) else None
-              (uid, k, t / 1000L, to)
-            }
-          } else {
-            val rs = rows.toSeq
-            val (buf0, max0) = state.getOption.getOrElse(
-              (Seq.empty[(Long, Long, Long)], Long.MinValue))
-            val buf = buf0 ++ rs.map(r => (r._3, r._4, r._5))
-            val maxT = math.max(max0, rs.iterator.map(_._3).max)
-            state.update((buf, maxT))
-            state.setTimeoutTimestamp(math.max(maxT / 1000L + 10L,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
+    finalizedByWatermark(events
+        .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"),
+          col("event_id"),
+          regexp_extract(col("props"), "(\\d+)", 1).cast("long").as("k"))
+        .as[(Long, java.sql.Timestamp, Long, Long, Long)])(
+      _._1, _._3 / 1000L, Seq.empty[(Long, Long, Long)]) { (uid, buf) =>
+      val hist = buf.sortBy(r => (r._1, r._2))
+      // change rows: first, or k differs from the previous event
+      val changes = hist.iterator.zipWithIndex.collect {
+        case ((t, _, k), i) if i == 0 || hist(i - 1)._3 != k => (t, k)
+      }.toSeq
+      changes.iterator.zipWithIndex.map { case ((t, k), i) =>
+        val to = if (i + 1 < changes.size)
+          Some(changes(i + 1)._1 / 1000L) else None
+        (uid, k, t / 1000L, to)
       }
+    } { (_, buf, rs, _) => (buf ++ rs.map(r => (r._3, r._4, r._5)), Iterator.empty) }
   }
 
   /** One incremental island-merge step: the arriving interval [s, e]
@@ -635,70 +564,39 @@ object EventStreams {
   private val FunnelOrder = Vector("signup", "view", "click", "purchase")
   private val FunnelWindowUs = 86400000000L
 
-  /** The batch q126 `aggregate` fold, verbatim, over a buffered history:
-    * sort by (ts, event_id), greedy first-match with a 1-day window in
-    * integer µs — bit-identical window decisions to both the batch
-    * engine and the DuckDB oracle.
-    */
   /** q172's last-touch attribution as watermark-finalized custom state
-    * ([[funnelSteps]]' machinery on a third non-monotone per-user fold):
+    * ([[finalizedByWatermark]] on a third non-monotone per-user fold):
     * a purchase's attribution depends on the latest PRECEDING event, so
     * late data can rewrite it until the watermark passes — the group
     * buffers its timeline (every type: any event can be the touch) and
-    * at event-time timeout replays it in (t, event_id) order tracking
+    * at timeout replays it in (t, event_id) order tracking
     * the last non-purchase touch, emitting one attribution row per
     * purchase exactly once. Same 1-day window and -1/'none' misses as
     * the batch window plan; gated on the identical oracle.
     */
-  def lastTouchRows(events: DataFrame, watermark: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[(Long, Long, Long, String, Long, Long)] = {
+  def lastTouchRows(events: DataFrame)
+      : Dataset[(Long, Long, Long, String, Long, Long)] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"),
-        col("event_id"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Seq[(Long, Long, String)], Long),
-          (Long, Long, Long, String, Long, Long)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, String)],
-         state: org.apache.spark.sql.streaming.GroupState[(Seq[(Long, Long, String)], Long)]) =>
-          if (state.hasTimedOut) {
-            val buf = state.get._1
-            state.remove()
-            var lastT = Long.MinValue
-            var lastId = -1L
-            var lastType = "none"
-            val out = Seq.newBuilder[(Long, Long, Long, String, Long, Long)]
-            buf.sorted.foreach { case (t, eid, et) =>
-              if (et == "purchase") {
-                if (lastT != Long.MinValue && t - lastT <= AttrWindowUs)
-                  out += ((eid, uid, t, lastType, lastId, t - lastT))
-                else out += ((eid, uid, t, "none", -1L, -1L))
-              } else {
-                lastT = t; lastId = eid; lastType = et
-              }
-            }
-            out.result().iterator
-          } else {
-            val rs = rows.toSeq
-            val (buf0, max0) = state.getOption.getOrElse(
-              (Seq.empty[(Long, Long, String)], Long.MinValue))
-            val buf = buf0 ++ rs.map { case (_, _, t, eid, et) => (t, eid, et) }
-            val maxT = math.max(max0, rs.iterator.map(_._3).max)
-            state.update((buf, maxT))
-            // attribution has no forward window: a group is final as
-            // soon as the watermark passes its last buffered event
-            state.setTimeoutTimestamp(math.max(
-              maxT / 1000L + 10L, state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
+    // attribution has no forward window: a group is final as soon as the
+    // watermark passes its last buffered event
+    timelineFold(events, 0L, Seq.empty[Touch]) { (uid, buf) =>
+      var lastT = Long.MinValue
+      var lastId = -1L
+      var lastType = "none"
+      val out = Seq.newBuilder[(Long, Long, Long, String, Long, Long)]
+      buf.sorted.foreach { case (t, eid, et) =>
+        if (et == "purchase") {
+          if (lastT != Long.MinValue && t - lastT <= AttributionWindowUs)
+            out += ((eid, uid, t, lastType, lastId, t - lastT))
+          else out += ((eid, uid, t, "none", -1L, -1L))
+        } else {
+          lastT = t; lastId = eid; lastType = et
+        }
       }
+      out.result().iterator
+    } { (buf, rs, _) => (buf ++ rs, Iterator.empty) }
   }
-
-  private val AttrWindowUs = 86400000000L
 
   /** Per-user TIME-DECAY attribution credits for the streaming twin
     * (q344) — [[lastTouchRows]]' buffer-until-timeout discipline with
@@ -710,63 +608,39 @@ object EventStreams {
     * purchase) holds row-for-row. Emits one (touch_type, ppm) row per
     * credit; the source-grain rollup runs on the finalized table.
     */
-  def timeDecayRows(events: DataFrame, watermark: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[(String, Long)] = {
+  def timeDecayRows(events: DataFrame): Dataset[(String, Long)] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"),
-        col("event_id"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Seq[(Long, Long, String)], Long),
-          (String, Long)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, String)],
-         state: org.apache.spark.sql.streaming.GroupState[(Seq[(Long, Long, String)], Long)]) =>
-          if (state.hasTimedOut) {
-            val buf = state.get._1.sortBy(r => (r._1, r._2))
-            state.remove()
-            val out = Seq.newBuilder[(String, Long)]
-            val purchases = buf.filter(_._3 == "purchase")
-            val touches = buf.filter(_._3 != "purchase")
-            purchases.foreach { case (pus, _, _) =>
-              // touches in the 24h window, batch order (tus, tid); the
-              // lower bound is STRICT, matching q335's batch predicate
-              // (Δt = exactly 24h would underflow the weight to 0 and a
-              // boundary-only purchase would divide by Σw = 0 below)
-              val win = touches
-                .filter(r => r._1 < pus && r._1 > pus - AttrWindowUs)
-              val k = win.length
-              if (k > 0) {
-                val ws = win.map(r => 8L >> ((pus - r._1) / 21600000000L))
-                val wSum = ws.sum
-                val flrs = ws.map(w => 1000000L * w / wSum)
-                val fSum = flrs.sum
-                win.zipWithIndex.foreach { case ((_, _, ttype), i) =>
-                  val ppm = flrs(i) +
-                    (if (i == k - 1) 1000000L - fSum else 0L)
-                  out += ((ttype, ppm))
-                }
-              }
-            }
-            out.result().iterator
-          } else {
-            val rs = rows.toSeq
-            val (buf0, max0) = state.getOption.getOrElse(
-              (Seq.empty[(Long, Long, String)], Long.MinValue))
-            val buf = buf0 ++ rs.map { case (_, _, t, eid, et) => (t, eid, et) }
-            val maxT = math.max(max0, rs.iterator.map(_._3).max)
-            state.update((buf, maxT))
-            // like lastTouchRows: no forward window past the last event —
-            // every purchase's 24h LOOKBACK is complete once the
-            // watermark passes the timeline
-            state.setTimeoutTimestamp(math.max(
-              maxT / 1000L + 10L, state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
+    // like lastTouchRows: no forward window past the last event — every
+    // purchase's 24h LOOKBACK is complete once the watermark passes the
+    // timeline
+    timelineFold(events, 0L, Seq.empty[Touch]) { (_, timeline) =>
+      val buf = timeline.sortBy(r => (r._1, r._2))
+      val out = Seq.newBuilder[(String, Long)]
+      val purchases = buf.filter(_._3 == "purchase")
+      val touches = buf.filter(_._3 != "purchase")
+      purchases.foreach { case (pus, _, _) =>
+        // touches in the 24h window, batch order (tus, tid); the
+        // lower bound is STRICT, matching q335's batch predicate
+        // (Δt = exactly 24h would underflow the weight to 0 and a
+        // boundary-only purchase would divide by Σw = 0 below)
+        val win = touches
+          .filter(r => r._1 < pus && r._1 > pus - AttributionWindowUs)
+        val k = win.length
+        if (k > 0) {
+          val ws = win.map(r => 8L >> ((pus - r._1) / 21600000000L))
+          val wSum = ws.sum
+          val flrs = ws.map(w => 1000000L * w / wSum)
+          val fSum = flrs.sum
+          win.zipWithIndex.foreach { case ((_, _, ttype), i) =>
+            val ppm = flrs(i) +
+              (if (i == k - 1) 1000000L - fSum else 0L)
+            out += ((ttype, ppm))
           }
+        }
       }
+      out.result().iterator
+    } { (buf, rs, _) => (buf ++ rs, Iterator.empty) }
   }
 
   /** Per-user (channel-set mask, converted) rows for the streaming
@@ -781,8 +655,7 @@ object EventStreams {
     * touches and emits NOTHING (q338's u-frame drops it identically) —
     * unattributable conversions belong to no channel in either engine.
     */
-  def shapleyMaskRows(events: DataFrame, watermark: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[(Long, Long)] = {
+  def shapleyMaskRows(events: DataFrame): Dataset[(Long, Long)] = {
     val spark = events.sparkSession
     import spark.implicits._
     def bitOf(et: String): Long = et match {
@@ -792,59 +665,33 @@ object EventStreams {
       case "view" => 8L
       case _ => 0L
     }
-    events.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"),
-        col("event_id"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, Long, String)]
-      .groupByKey(_._1)
-      // state = (disorder buffer, mask, touches seen, done, max micros)
-      .flatMapGroupsWithState[(Seq[(Long, Long, String)], Long, Boolean,
-          Boolean, Long), (Long, Long)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, String)],
-         state: org.apache.spark.sql.streaming.GroupState[
-           (Seq[(Long, Long, String)], Long, Boolean, Boolean, Long)]) =>
-          def fold(mask0: Long, saw0: Boolean, done0: Boolean,
-              finals: Seq[(Long, Long, String)]): (Long, Boolean, Boolean) = {
-            var mask = mask0; var saw = saw0; var done = done0
-            finals.foreach { case (_, _, et) =>
-              if (!done) {
-                if (et == "purchase") done = true
-                else { mask |= bitOf(et); saw = true }
-              }
-            }
-            (mask, saw, done)
-          }
-          if (state.hasTimedOut) {
-            val (buf, mask0, saw0, done0, _) = state.get
-            state.remove()
-            val (mask, saw, done) =
-              fold(mask0, saw0, done0, buf.sortBy(r => (r._1, r._2)))
-            if (saw) Iterator((mask, if (done) 1L else 0L))
-            else Iterator.empty
-          } else {
-            val rs = rows.toSeq
-            val (buf0, mask0, saw0, done0, max0) = state.getOption.getOrElse(
-              (Seq.empty[(Long, Long, String)], 0L, false, false,
-                Long.MinValue))
-            val maxT = math.max(max0, rs.iterator.map(_._3).max)
-            val (buf, mask, saw, done) =
-              if (done0) (Seq.empty[(Long, Long, String)], mask0, saw0, true)
-              else {
-                val all = (buf0 ++ rs.map { case (_, _, t, eid, et) =>
-                  (t, eid, et) }).sortBy(r => (r._1, r._2))
-                val wmUs = state.getCurrentWatermarkMs() * 1000L
-                val (fin, open) = all.span(_._1 <= wmUs)
-                val (m, sw, dn) = fold(mask0, saw0, done0, fin)
-                (if (dn) Seq.empty[(Long, Long, String)] else open, m, sw, dn)
-              }
-            state.update((buf, mask, saw, done, maxT))
-            state.setTimeoutTimestamp(math.max(
-              maxT / 1000L + 10L, state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
+    def fold(mask0: Long, saw0: Boolean, done0: Boolean,
+        finals: Seq[Touch]): (Long, Boolean, Boolean) = {
+      var mask = mask0; var saw = saw0; var done = done0
+      finals.foreach { case (_, _, et) =>
+        if (!done) {
+          if (et == "purchase") done = true
+          else { mask |= bitOf(et); saw = true }
+        }
       }
+      (mask, saw, done)
+    }
+    // state = (disorder buffer, mask, touches seen, done)
+    timelineFold(events, 0L, (Seq.empty[Touch], 0L, false, false)) {
+      case (_, (buf, mask0, saw0, done0)) =>
+        val (mask, saw, done) =
+          fold(mask0, saw0, done0, buf.sortBy(r => (r._1, r._2)))
+        if (saw) Iterator((mask, if (done) 1L else 0L))
+        else Iterator.empty
+    } { case ((buf0, mask0, saw0, done0), rs, wmMs) =>
+      if (done0) ((Seq.empty[Touch], mask0, saw0, true), Iterator.empty)
+      else {
+        val (fin, open) = (buf0 ++ rs).sortBy(r => (r._1, r._2))
+          .span(_._1 <= wmMs * 1000L)
+        val (m, sw, dn) = fold(mask0, saw0, done0, fin)
+        ((if (dn) Seq.empty[Touch] else open, m, sw, dn), Iterator.empty)
+      }
+    }
   }
 
   /** Per-user journey transitions for the streaming Markov-attribution
@@ -861,15 +708,12 @@ object EventStreams {
     * buffer (rows still above the watermark), never the journey. A
     * converted user's state collapses to a `done` flag the moment the
     * purchase is final: everything after is dropped on arrival, which is
-    * exactly the batch truncation. The event-time timeout (watermark past
-    * the user's last event — driven by the flush sentinel at replay end,
-    * a terminal punctuation any production backfill has) drains the
-    * remaining buffer and closes the journey with its END row. The
-    * sentinel user itself never times out (the watermark stays behind its
-    * event) and its row never enters a final prefix, so it emits nothing.
+    * exactly the batch truncation. [[finalizedByWatermark]]'s timeout
+    * drains the remaining buffer and closes the journey with its END
+    * row; the sentinel's row never enters a final prefix, so it emits
+    * nothing.
     */
-  def journeyTransitions(events: DataFrame, watermark: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[(String, String)] = {
+  def journeyTransitions(events: DataFrame): Dataset[(String, String)] = {
     val spark = events.sparkSession
     import spark.implicits._
     def advance(prev0: String, done0: Boolean,
@@ -887,53 +731,33 @@ object EventStreams {
       }
       (prev, done)
     }
-    events.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"),
-        col("event_id"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, Long, String)]
-      .groupByKey(_._1)
-      // state = (disorder buffer, prev type — "START" before the first
-      // emission, done flag — first purchase finalized, max event micros)
-      .flatMapGroupsWithState[(Seq[(Long, Long, String)], String, Boolean,
-          Long), (String, String)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, String)],
-         state: org.apache.spark.sql.streaming.GroupState[
-           (Seq[(Long, Long, String)], String, Boolean, Long)]) =>
-          if (state.hasTimedOut) {
-            val (buf, prev0, done0, _) = state.get
-            state.remove()
-            val out = Seq.newBuilder[(String, String)]
-            val (prev, done) =
-              advance(prev0, done0, buf.sortBy(r => (r._1, r._2)), out)
-            // a timed-out group saw ≥1 row, so prev != "START" unless done
-            if (!done && prev != "START") out += ((prev, "END"))
-            out.result().iterator
-          } else {
-            val rs = rows.toSeq
-            val (buf0, prev0, done0, max0) = state.getOption.getOrElse(
-              (Seq.empty[(Long, Long, String)], "START", false, Long.MinValue))
-            val maxT = math.max(max0, rs.iterator.map(_._3).max)
-            val out = Seq.newBuilder[(String, String)]
-            val (buf, prev, done) =
-              if (done0) (Seq.empty[(Long, Long, String)], prev0, true)
-              else {
-                val all = (buf0 ++ rs.map { case (_, _, t, eid, et) =>
-                  (t, eid, et) }).sortBy(r => (r._1, r._2))
-                val wmUs = state.getCurrentWatermarkMs() * 1000L
-                val (fin, open) = all.span(_._1 <= wmUs)
-                val (p, dn) = advance(prev0, done0, fin, out)
-                (if (dn) Seq.empty[(Long, Long, String)] else open, p, dn)
-              }
-            state.update((buf, prev, done, maxT))
-            state.setTimeoutTimestamp(math.max(
-              maxT / 1000L + 10L, state.getCurrentWatermarkMs() + 1L))
-            out.result().iterator
-          }
+    // state = (disorder buffer, prev type — "START" before the first
+    // emission, done flag — first purchase finalized)
+    timelineFold(events, 0L, (Seq.empty[Touch], "START", false)) {
+      case (_, (buf, prev0, done0)) =>
+        val out = Seq.newBuilder[(String, String)]
+        val (prev, done) =
+          advance(prev0, done0, buf.sortBy(r => (r._1, r._2)), out)
+        // a timed-out group saw ≥1 row, so prev != "START" unless done
+        if (!done && prev != "START") out += ((prev, "END"))
+        out.result().iterator
+    } { case ((buf0, prev0, done0), rs, wmMs) =>
+      if (done0) ((Seq.empty[Touch], prev0, true), Iterator.empty)
+      else {
+        val out = Seq.newBuilder[(String, String)]
+        val (fin, open) = (buf0 ++ rs).sortBy(r => (r._1, r._2))
+          .span(_._1 <= wmMs * 1000L)
+        val (p, dn) = advance(prev0, done0, fin, out)
+        ((if (dn) Seq.empty[Touch] else open, p, dn), out.result().iterator)
       }
+    }
   }
 
+  /** The batch q126 `aggregate` fold, verbatim, over a buffered history:
+    * sort by (ts, event_id), greedy first-match with a 1-day window in
+    * integer µs — bit-identical window decisions to both the batch
+    * engine and the DuckDB oracle.
+    */
   private def foldFunnel(buf: Seq[(Long, Long, String)]): Int = {
     var step = 0
     var t = 0L
@@ -999,57 +823,39 @@ object EventStreams {
     * with no qualifying rows emits nothing (the sentinel's own group
     * among them).
     */
-  def fifoTotalsRows(events: DataFrame, watermark: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[(Long, Long, Long, Long, Long, Long)] = {
+  def fifoTotalsRows(events: DataFrame)
+      : Dataset[(Long, Long, Long, Long, Long, Long)] = {
     val spark = events.sparkSession
     import spark.implicits._
     // state: (buffer rows (sec, event_id, isSupply 1/0, units),
     //         unmatched supply lots (units, sec), unmatched demand lots,
-    //         totals [nRows, supTot, demTot, matched, age], max event µs)
-    events.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"),
-        col("event_id"),
-        when(col("event_type") === "purchase" && col("value") > 0, 1L)
-          .when(col("event_type") === "click" && col("value") > 0, 0L)
-          .otherwise(-1L).as("side"),
-        coalesce(floor(col("value") * 100 + 0.5).cast("long"), lit(0L))
-          .as("units"))
-      .as[(Long, java.sql.Timestamp, Long, Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Seq[(Long, Long, Long, Long)], Seq[(Long, Long)], Seq[(Long, Long)], Seq[Long], Long),
-          (Long, Long, Long, Long, Long, Long)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long,
-         rows: Iterator[(Long, java.sql.Timestamp, Long, Long, Long, Long)],
-         state: org.apache.spark.sql.streaming.GroupState[(Seq[(Long, Long, Long, Long)], Seq[(Long, Long)], Seq[(Long, Long)], Seq[Long], Long)]) =>
-          if (state.hasTimedOut) {
-            val (buf, supQ, demQ, tot, _) = state.get
-            state.remove()
-            // everything buffered is behind the watermark now — fold it
-            val (_, _, t2) = fifoFold(buf.sortBy(r => (r._1, r._2)),
-              supQ, demQ, tot)
-            if (t2(0) == 0L) Iterator.empty
-            else Iterator((uid, t2(1), t2(2), t2(3), t2(2) - t2(3), t2(4)))
-          } else {
-            val rs = rows.toSeq
-            val (buf0, supQ0, demQ0, tot0, max0) = state.getOption.getOrElse(
-              (Seq.empty[(Long, Long, Long, Long)], Seq.empty[(Long, Long)],
-                Seq.empty[(Long, Long)], Seq(0L, 0L, 0L, 0L, 0L),
-                Long.MinValue))
-            val maxT = math.max(max0, rs.iterator.map(_._3).max)
-            val buf = (buf0 ++ rs.filter(_._5 >= 0).map(r =>
-              (r._3 / 1000000L, r._4, r._5, r._6)))
-              .sortBy(r => (r._1, r._2))
-            val wmSec = state.getCurrentWatermarkMs() / 1000L
-            val (closed, open) = buf.partition(_._1 < wmSec)
-            val (supQ, demQ, tot) = fifoFold(closed, supQ0, demQ0, tot0)
-            state.update((open, supQ, demQ, tot, maxT))
-            state.setTimeoutTimestamp(math.max(maxT / 1000L + 10L,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-      }
+    //         totals [nRows, supTot, demTot, matched, age])
+    finalizedByWatermark(events
+        .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"),
+          col("event_id"),
+          when(col("event_type") === "purchase" && col("value") > 0, 1L)
+            .when(col("event_type") === "click" && col("value") > 0, 0L)
+            .otherwise(-1L).as("side"),
+          coalesce(floor(col("value") * 100 + 0.5).cast("long"), lit(0L))
+            .as("units"))
+        .as[(Long, java.sql.Timestamp, Long, Long, Long, Long)])(
+      _._1, _._3 / 1000L,
+      (Seq.empty[(Long, Long, Long, Long)], Seq.empty[(Long, Long)],
+        Seq.empty[(Long, Long)], Seq(0L, 0L, 0L, 0L, 0L))) {
+      case (uid, (buf, supQ, demQ, tot)) =>
+        // everything buffered is behind the watermark now — fold it
+        val (_, _, t2) = fifoFold(buf.sortBy(r => (r._1, r._2)),
+          supQ, demQ, tot)
+        if (t2(0) == 0L) Iterator.empty
+        else Iterator((uid, t2(1), t2(2), t2(3), t2(2) - t2(3), t2(4)))
+    } { case (_, (buf0, supQ0, demQ0, tot0), rs, wmMs) =>
+      val buf = (buf0 ++ rs.filter(_._5 >= 0).map(r =>
+        (r._3 / 1000000L, r._4, r._5, r._6)))
+        .sortBy(r => (r._1, r._2))
+      val (closed, open) = buf.partition(_._1 < wmMs / 1000L)
+      val (supQ, demQ, tot) = fifoFold(closed, supQ0, demQ0, tot0)
+      ((open, supQ, demQ, tot), Iterator.empty)
+    }
   }
 
   /** Fold FIFO-ordered (sec, event_id, isSupply, units) rows into the
@@ -1403,47 +1209,21 @@ object EventStreams {
     * caller aggregates to q269's per-type totals, gated on q269's
     * oracle verbatim.
     */
-  def positionCreditRows(events: DataFrame, watermark: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[(String, Long)] = {
+  def positionCreditRows(events: DataFrame): Dataset[(String, Long)] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"),
-        col("event_id"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Seq[(Long, Long, String)], Long),
-          (String, Long)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long,
-         rows: Iterator[(Long, java.sql.Timestamp, Long, Long, String)],
-         state: org.apache.spark.sql.streaming.GroupState[(Seq[(Long, Long, String)], Long)]) =>
-          if (state.hasTimedOut) {
-            // timeout fires only after the watermark passed maxT, so
-            // every buffered purchase was already finalized; drop state
-            val buf = state.get._1
-            state.remove()
-            creditsFor(buf, Long.MaxValue).iterator
-          } else {
-            val rs = rows.toSeq
-            val (buf0, max0) = state.getOption.getOrElse(
-              (Seq.empty[(Long, Long, String)], Long.MinValue))
-            val maxT = math.max(max0, rs.iterator.map(_._3).max)
-            val buf = (buf0 ++ rs.map(r => (r._3, r._4, r._5)))
-              .sortBy(r => (r._1, r._2))
-            val wmUs = state.getCurrentWatermarkMs() * 1000L
-            val out = creditsFor(buf, wmUs)
-            val kept = buf.filter { case (t, _, tp) =>
-              if (tp == "purchase") t >= wmUs
-              else t >= wmUs - AttributionWindowUs
-            }
-            state.update((kept, maxT))
-            state.setTimeoutTimestamp(math.max(maxT / 1000L + 10L,
-              state.getCurrentWatermarkMs() + 1L))
-            out.iterator
-          }
+    // timeout fires only after the watermark passed every buffered
+    // event, so every buffered purchase is final at close
+    timelineFold(events, 0L, Seq.empty[Touch])(
+      (_, buf) => creditsFor(buf, Long.MaxValue).iterator) { (buf0, rs, wmMs) =>
+      val buf = (buf0 ++ rs).sortBy(r => (r._1, r._2))
+      val wmUs = wmMs * 1000L
+      val kept = buf.filter { case (t, _, tp) =>
+        if (tp == "purchase") t >= wmUs
+        else t >= wmUs - AttributionWindowUs
       }
+      (kept, creditsFor(buf, wmUs).iterator)
+    }
   }
 
   private val AttributionWindowUs = 86400000000L
@@ -1489,53 +1269,34 @@ object EventStreams {
     * (file_id breaks within-second ties); emits (source, grp, n_files,
     * group_bytes, is_tail).
     */
-  def compactionGroupRows(files: DataFrame, target: Long,
-      watermark: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[(String, Long, Long, Long, Long)] = {
+  def compactionGroupRows(files: DataFrame, target: Long)
+      : Dataset[(String, Long, Long, Long, Long)] = {
     val spark = files.sparkSession
     import spark.implicits._
-    files.withWatermark("ts", watermark)
-      .select(col("source"), col("ts"), unix_micros(col("ts")).as("t"),
-        col("file_id"), col("bytes"))
-      .as[(String, java.sql.Timestamp, Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Seq[(Long, Long, Long)], Seq[Long], Long),
-          (String, Long, Long, Long, Long)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (src: String,
-         rows: Iterator[(String, java.sql.Timestamp, Long, Long, Long)],
-         state: org.apache.spark.sql.streaming.GroupState[(Seq[(Long, Long, Long)], Seq[Long], Long)]) =>
-          if (state.hasTimedOut) {
-            val (buf, open0, _) = state.get
-            state.remove()
-            val (closed, open) =
-              compactionFold(buf.sortBy(r => (r._1, r._2)).map(r => (r._2, r._3)),
-                open0, target)
-            val tail =
-              if (open(1) == 0L) Seq.empty
-              else Seq((src, open(0), open(1), open(2), 1L))
-            (closed.map(g => (src, g._1, g._2, g._3, 0L)) ++ tail).iterator
-          } else {
-            val rs = rows.toSeq
-            val (buf0, open0, max0) = state.getOption.getOrElse(
-              (Seq.empty[(Long, Long, Long)], Seq(0L, 0L, 0L, 0L),
-                Long.MinValue))
-            val maxT = math.max(max0, rs.iterator.map(_._3).max)
-            // buffer (sec, file_id, bytes) — event time orders the fold
-            // frontier, file_id breaks ties within a second
-            val buf = (buf0 ++ rs.map(r => (r._3 / 1000000L, r._4, r._5)))
-              .sortBy(r => (r._1, r._2))
-            val wmSec = state.getCurrentWatermarkMs() / 1000L
-            val (ready, pending) = buf.partition(_._1 < wmSec)
-            val (closed, open) =
-              compactionFold(ready.map(r => (r._2, r._3)), open0, target)
-            state.update((pending, open, maxT))
-            state.setTimeoutTimestamp(math.max(maxT / 1000L + 10L,
-              state.getCurrentWatermarkMs() + 1L))
-            closed.map(g => (src, g._1, g._2, g._3, 0L)).iterator
-          }
-      }
+    finalizedByWatermark(files
+        .select(col("source"), col("ts"), unix_micros(col("ts")).as("t"),
+          col("file_id"), col("bytes"))
+        .as[(String, java.sql.Timestamp, Long, Long, Long)])(
+      _._1, _._3 / 1000L,
+      (Seq.empty[(Long, Long, Long)], Seq(0L, 0L, 0L, 0L))) {
+      case (src, (buf, open0)) =>
+        val (closed, open) =
+          compactionFold(buf.sortBy(r => (r._1, r._2)).map(r => (r._2, r._3)),
+            open0, target)
+        val tail =
+          if (open(1) == 0L) Seq.empty
+          else Seq((src, open(0), open(1), open(2), 1L))
+        (closed.map(g => (src, g._1, g._2, g._3, 0L)) ++ tail).iterator
+    } { case (src, (buf0, open0), rs, wmMs) =>
+      // buffer (sec, file_id, bytes) — event time orders the fold
+      // frontier, file_id breaks ties within a second
+      val buf = (buf0 ++ rs.map(r => (r._3 / 1000000L, r._4, r._5)))
+        .sortBy(r => (r._1, r._2))
+      val (ready, pending) = buf.partition(_._1 < wmMs / 1000L)
+      val (closed, open) =
+        compactionFold(ready.map(r => (r._2, r._3)), open0, target)
+      ((pending, open), closed.map(g => (src, g._1, g._2, g._3, 0L)).iterator)
+    }
   }
 
   /** Fold ingest-ordered (file_id, bytes) rows into next-fit groups under

@@ -35,11 +35,9 @@ object StreamingQueries {
   private val memorySinkId = new java.util.concurrent.atomic.AtomicInteger()
 
   /** Stage `dir`/events.parquet (file or directory) plus the flush
-    * sentinel into a stream-source directory. Idempotent per input path —
-    * keyed by an MD5 digest of the absolute path, marked complete by a
-    * `_STAGED` file — so repeated runs (warmup + timed, Verify + Bench)
-    * reuse the same staging. The sentinel is deterministic: the max-ts row
-    * shifted 30 days forward with neutral key/value columns.
+    * sentinel into a stream-source directory ([[stagedWithSentinel]]).
+    * The sentinel is deterministic: the max-ts row shifted 30 days
+    * forward with neutral key/value columns.
     */
   def stagedWithFlush(spark: SparkSession, dir: String): String = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -51,22 +49,48 @@ object StreamingQueries {
     val raw = spark.read.parquet(src.getPath)
     val tsIsLong =
       raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val mode = if (tsIsLong) "ns" else "ntz"
+    stagedWithSentinel(src, s"graft_events_flush_${if (tsIsLong) "ns" else "ntz"}") {
+      // sentinel row: max-ts row pushed 30 days out; plain long addition
+      // on raw nanos, a day-interval shift on TIMESTAMP_NTZ
+      raw.orderBy(col("ts").desc).limit(1)
+        .withColumn("ts",
+          if (tsIsLong) col("ts") + lit(FlushDelayNanos)
+          else col("ts") + expr("INTERVAL 30 DAYS"))
+        .withColumn("event_id", lit(-1L))
+        .withColumn("user_id", lit(-1L))
+        .withColumn("event_type", lit("__flush"))
+        .withColumn("value", lit(0.0))
+    }
+  }
+
+  /** Stage the parquet `src` (file or directory) plus the one-row
+    * `sentinel` into a stream-source directory under java.io.tmpdir:
+    * symlinks to the source's part files beside `sentinel.parquet`.
+    * Idempotent per source CONTENT, marked complete by a `_STAGED` file,
+    * so repeated runs (warmup + timed, Verify + Bench) reuse one staging.
+    *
+    * The key digests the part-file IDENTITY (name, size, mtime, footer
+    * bytes), not just the source path: a source directory REWRITTEN in
+    * place (GenScale regenerating a replica dir) gets new part-file
+    * names, and a path-keyed staging dir would keep serving symlinks to
+    * the deleted old parts — the stream then reads ONLY the sentinel and
+    * every flush-gated twin silently computes over zero events (how the
+    * r15 sf1 q336 '/ by zero' was found), or over a sentinel computed
+    * from the old content. The footer tail-hash closes the residual
+    * (name, size, mtime) hole: a same-name same-size rewrite inside one
+    * mtime tick (coarse-mtime filesystems) still changes the parquet
+    * footer (row-group stats / offsets live there), so content change →
+    * new key → fresh staging.
+    */
+  private def stagedWithSentinel(src: java.io.File, prefix: String)(
+      sentinel: => DataFrame): String = {
     val files =
       if (src.isFile) Seq(src)
       else src.listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet"))
         .toSeq.sortBy(_.getName)
-    // The staging key digests the part-file IDENTITY (name, size, mtime,
-    // footer bytes), not just the source path: a source directory
-    // REWRITTEN in place (GenScale regenerating a replica dir) gets new
-    // part-file names, and a path-keyed staging dir would keep serving
-    // symlinks to the deleted old parts — the stream then reads ONLY the
-    // sentinel and every flush-gated twin silently computes over zero
-    // events (how the r15 sf1 q336 '/ by zero' was found). The footer
-    // tail-hash closes the residual (name, size, mtime) hole: a
-    // same-name same-size rewrite inside one mtime tick (coarse-mtime
-    // filesystems) still changes the parquet footer (row-group stats /
-    // offsets live there), so content change → new key → fresh staging.
+    def md5(bytes: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("MD5").digest(bytes)
+        .map("%02x".format(_)).mkString
     def footerHash(f: java.io.File): String = {
       val in = new java.io.RandomAccessFile(f, "r")
       try {
@@ -74,32 +98,27 @@ object StreamingQueries {
         in.seek(f.length - tail)
         val buf = new Array[Byte](tail)
         in.readFully(buf)
-        java.security.MessageDigest.getInstance("MD5").digest(buf)
-          .map("%02x".format(_)).mkString
+        md5(buf)
       } finally in.close()
     }
     val identity = (src.getAbsolutePath +:
       files.map(f =>
         s"${f.getName}:${f.length}:${f.lastModified}:${footerHash(f)}"))
       .mkString("|")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(identity.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
     val staged = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_events_flush_${digest}_$mode")
+      s"${prefix}_${md5(identity.getBytes("UTF-8"))}")
     val marker = new java.io.File(staged, "_STAGED")
     if (!marker.exists()) {
-      // a fresh key means prior content-keyed stagings for this mode are
-      // abandoned garbage; sweep AGED siblings (marker older than 24 h)
-      // so rewrite-heavy hosts don't accumulate them indefinitely. The
-      // age bound keeps a concurrently-running session's freshly staged
-      // sibling (a DIFFERENT corpus dir, e.g. Verify at another sf)
-      // untouched — best-effort, failures ignored.
+      // a fresh key means prior content-keyed stagings under this prefix
+      // are abandoned garbage; sweep AGED siblings (marker older than
+      // 24 h) so rewrite-heavy hosts don't accumulate them indefinitely.
+      // The age bound keeps a concurrently-running session's freshly
+      // staged sibling (a DIFFERENT corpus dir, e.g. Verify at another
+      // sf) untouched — best-effort, failures ignored.
       val cutoff = System.currentTimeMillis - 24L * 3600 * 1000
       Option(staged.getParentFile.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f != staged
-          && f.getName.startsWith("graft_events_flush_")
-          && f.getName.endsWith(s"_$mode"))
+          && f.getName.startsWith(s"${prefix}_"))
         .filter { f =>
           val m = new java.io.File(f, "_STAGED")
           m.exists() && m.lastModified < cutoff
@@ -116,16 +135,6 @@ object StreamingQueries {
           java.nio.file.Files.createSymbolicLink(
             link.toPath, f.toPath.toAbsolutePath)
       }
-      // sentinel row: max-ts row pushed 30 days out; plain long addition
-      // on raw nanos, a day-interval shift on TIMESTAMP_NTZ
-      val sentinel = raw.orderBy(col("ts").desc).limit(1)
-        .withColumn("ts",
-          if (tsIsLong) col("ts") + lit(FlushDelayNanos)
-          else col("ts") + expr("INTERVAL 30 DAYS"))
-        .withColumn("event_id", lit(-1L))
-        .withColumn("user_id", lit(-1L))
-        .withColumn("event_type", lit("__flush"))
-        .withColumn("value", lit(0.0))
       val build = new java.io.File(staged, "_sentinel_build")
       sentinel.coalesce(1).write.mode("overwrite").parquet(build.getPath)
       val part = build.listFiles().filter(_.getName.endsWith(".parquet")).head
@@ -1200,7 +1209,7 @@ object StreamingQueries {
     "q254_stream_mad_anomaly",
     graft.operators.Temporal.madOracleSql) { (s, d) =>
     val dc = runGated(s, d)(ev => ev
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", EventStreams.Watermark)
       .groupBy(col("event_type"), window(col("ts"), "1 day").as("w"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("event_type"), col("w.start").cast("date").as("day"),
@@ -1317,7 +1326,7 @@ object StreamingQueries {
     "q267_stream_cusum",
     graft.operators.Temporal.cusumOracleSql) { (s, d) =>
     val dc = runGated(s, d)(ev => ev
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", EventStreams.Watermark)
       .groupBy(col("event_type"), window(col("ts"), "1 day").as("w"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("event_type"),
@@ -1346,51 +1355,6 @@ object StreamingQueries {
       .orderBy("touch_type")
   }
 
-  /** Stage `dir`/documents.parquet plus a flush sentinel for the
-    * INGEST-ORDER stateful streams (q284): event time is the ingest
-    * sequence number (doc_id seconds), and the sentinel is one row 3
-    * days of sequence past the last real file under source '__flush' —
-    * the same terminal-punctuation discipline as [[stagedWithFlush]],
-    * on the ingest-log axis instead of the event-time axis. Idempotent
-    * per input path (keyed staging dir + `_STAGED` marker).
-    */
-  private def stagedDocsWithFlush(spark: SparkSession, dir: String): String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(src.getAbsolutePath.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val staged = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_docs_flush_$digest")
-    val marker = new java.io.File(staged, "_STAGED")
-    if (!marker.exists()) {
-      staged.mkdirs()
-      val files =
-        if (src.isFile) Seq(src)
-        else src.listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet")).toSeq
-      files.zipWithIndex.foreach { case (f, i) =>
-        val link = new java.io.File(staged, s"orig_$i.parquet")
-        if (!java.nio.file.Files.exists(link.toPath,
-            java.nio.file.LinkOption.NOFOLLOW_LINKS))
-          java.nio.file.Files.createSymbolicLink(
-            link.toPath, f.toPath.toAbsolutePath)
-      }
-      val sentinel = spark.read.parquet(src.getPath)
-        .orderBy(col("doc_id").desc).limit(1)
-        .withColumn("doc_id", col("doc_id") + lit(259200L))
-        .withColumn("source", lit("__flush"))
-      val build = new java.io.File(staged, "_sentinel_build")
-      sentinel.coalesce(1).write.mode("overwrite").parquet(build.getPath)
-      val part = build.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(staged, "sentinel.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      build.listFiles().foreach(_.delete())
-      build.delete()
-      marker.createNewFile()
-    }
-    staged.getPath
-  }
-
   /** q284: STREAMING compaction-plan maintenance ≡ batch q281 — the
     * small-files group manifest built AT INGEST
     * ([[EventStreams.compactionGroupRows]]: per-source state is the
@@ -1399,15 +1363,23 @@ object StreamingQueries {
     * emits on event-time timeout with `is_tail = 1`). Event time is the
     * ingest sequence number — the contract that arrival order IS the
     * packing order, which is what an object-store ingest log provides.
-    * The '__flush' sentinel's own group never times out before the query
-    * drains and emits nothing (the defensive filter pins it). Gated on
-    * q281's oracle verbatim: stream == batch == DuckDB.
+    * The staged flush sentinel ([[stagedWithSentinel]]) is one row 3 days
+    * of sequence past the last real file under source '__flush' —
+    * [[stagedWithFlush]]'s terminal punctuation on the ingest-log axis
+    * instead of the event-time axis. Its own group never times out
+    * before the query drains and emits nothing (the defensive filter
+    * pins it). Gated on q281's oracle verbatim: stream == batch == DuckDB.
     */
   private val q284 = GraftQuery(
     "q284_stream_compaction_plan",
     graft.operators.Pipeline.compactionPlanOracleSql) { (s, d) =>
-    val staged = stagedDocsWithFlush(s, d)
-    val schema = graft.Tables.schemaOf(s, s"$d/documents.parquet")
+    val docs = s"$d/documents.parquet"
+    val staged = stagedWithSentinel(new java.io.File(docs), "graft_docs_flush") {
+      s.read.parquet(docs).orderBy(col("doc_id").desc).limit(1)
+        .withColumn("doc_id", col("doc_id") + lit(259200L))
+        .withColumn("source", lit("__flush"))
+    }
+    val schema = graft.Tables.schemaOf(s, docs)
     // +1s so the first file (sequence 0) sits strictly ABOVE the initial
     // watermark — the stateful late-row filter drops rows at/below it
     val files = s.readStream.schema(schema).parquet(staged)

@@ -87,16 +87,23 @@ class EventStreamsSpec extends SparkSuite {
       "stream served stale staged content after an in-place source rewrite")
   }
 
-  test("mapGroupsWithState running totals match batch per-user counts") {
-    val streamed = EventStreams.runToMemory(spark,
-      EventStreams.userTotalsWithState(EventStreams.readEvents(spark, dir)).toDF(),
-      "t_state", outputMode = "update")
-    val s = streamed.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = spark.read.parquet(s"$dir/events.parquet")
-      .groupBy("user_id").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(s.nonEmpty)
-    assert(s == b) // one availableNow batch -> final state equals batch counts
+  test("q284 restages a documents directory rewritten in place") {
+    // the staging is keyed on the source's part-file content: a
+    // directory rewritten in place (new part-file names, new doc_id
+    // range) must be restaged, never replayed from the first staging's
+    // dangling links and stale sentinel
+    val tmp = java.nio.file.Files.createTempDirectory("graft_docs_rewrite")
+    val docs = graft.Tables.documents(spark, dir)
+    val q281 = graft.SparkEntry.queries("q281_compaction_plan")
+    val q284 = graft.SparkEntry.queries("q284_stream_compaction_plan")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq
+    try Seq(col("doc_id") < 250, col("doc_id") >= 250).foreach { range =>
+      docs.where(range).coalesce(1).write.mode("overwrite")
+        .parquet(s"$tmp/documents.parquet")
+      val batch = rows(q281(spark, tmp.toString))
+      assert(batch.nonEmpty)
+      assert(rows(q284(spark, tmp.toString)) == batch, s"q284 != q281 over $range")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 
   test("late data behind the watermark is dropped from window aggregates") {
@@ -663,5 +670,89 @@ class EventStreamsSpec extends SparkSuite {
     assert(stW2._3.isEmpty,
       s"covered + out-of-window sales must finalize and evict, " +
         s"got ${stW2._3.length} retained")
+  }
+
+  test("every watermark-finalized fold carries its state across micro-batches") {
+    // the AvailableNow gates drain each twin in ONE data batch, so no
+    // fold merges a batch into carried state there. Here the same input
+    // arrives as three ordered slices plus the flush sentinel, one file
+    // per micro-batch, and each fold must emit exactly its one-batch rows
+    import org.apache.spark.sql.DataFrame
+    def sliced(name: String, df: DataFrame, order: org.apache.spark.sql.Column,
+        sentinel: DataFrame): String = {
+      val keys = df.select(order).collect().map(_.getLong(0)).sorted
+      val (c1, c2) = (keys(keys.length / 3), keys(2 * keys.length / 3))
+      val streamDir = java.nio.file.Files.createTempDirectory(s"graft_${name}_slices")
+      Seq(df.where(order < c1), df.where(order >= c1 && order < c2),
+        df.where(order >= c2), sentinel).zipWithIndex.foreach { case (part, i) =>
+        val stage = java.nio.file.Files.createTempDirectory(s"graft_${name}_f$i")
+        part.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        val file = stage.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
+        val dst = streamDir.resolve(s"$i.parquet")
+        java.nio.file.Files.move(file.toPath, dst)
+        org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+        // file-source batches follow modification time: pin the order
+        dst.toFile.setLastModified(1000000L * (i + 1))
+      }
+      streamDir.toString
+    }
+    // every run starts at once: the replays are tiny and mostly wait on
+    // the driver, so overlapping them keeps this test cheap
+    def started(streamDir: String, name: String, perFile: Boolean)(
+        fold: DataFrame => DataFrame) = {
+      val reader = spark.readStream.schema(spark.read.parquet(streamDir).schema)
+      val src = (if (perFile) reader.option("maxFilesPerTrigger", 1) else reader)
+        .parquet(streamDir)
+      fold(src).writeStream.format("memory").queryName(name)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    }
+
+    val events = graft.Tables.events(spark, dir)
+    val eventSlices = sliced("events", events, unix_micros(col("ts")),
+      events.orderBy(col("ts").desc).limit(1)
+        .withColumn("ts", col("ts") + expr("INTERVAL 30 DAYS"))
+        .withColumn("event_id", lit(-1L)).withColumn("user_id", lit(-1L))
+        .withColumn("event_type", lit("__flush")).withColumn("value", lit(0.0)))
+    val docs = graft.Tables.documents(spark, dir)
+    val docSlices = sliced("docs", docs, col("doc_id"),
+      docs.orderBy(col("doc_id").desc).limit(1)
+        .withColumn("doc_id", col("doc_id") + lit(259200L))
+        .withColumn("source", lit("__flush")))
+    val folds = Seq[(String, String, DataFrame => DataFrame)](
+      ("funnel", eventSlices, EventStreams.funnelSteps(_).toDF()),
+      ("retention", eventSlices, EventStreams.retentionRows(_).toDF()),
+      ("islands", eventSlices, EventStreams.intervalIslands(_).toDF()),
+      ("session_paths", eventSlices, EventStreams.sessionPathRows(_).toDF()),
+      ("scd2", eventSlices, EventStreams.scd2Intervals(_).toDF()),
+      ("last_touch", eventSlices, EventStreams.lastTouchRows(_).toDF()),
+      ("time_decay", eventSlices, EventStreams.timeDecayRows(_).toDF()),
+      ("shapley", eventSlices, EventStreams.shapleyMaskRows(_).toDF()),
+      ("journey", eventSlices, EventStreams.journeyTransitions(_).toDF()),
+      ("fifo", eventSlices, EventStreams.fifoTotalsRows(_).toDF()),
+      ("position_credit", eventSlices, EventStreams.positionCreditRows(_).toDF()),
+      ("compaction", docSlices, files => EventStreams.compactionGroupRows(
+        files.select(col("source"), col("doc_id").as("file_id"),
+          col("n_chars").as("bytes"),
+          timestamp_micros((col("doc_id") + lit(1L)) * lit(1000000L)).as("ts")),
+        graft.operators.Pipeline.CompactTarget).toDF()))
+    val runs = folds.map { case (name, slices, fold) =>
+      (name, started(slices, s"t_fold_whole_$name", perFile = false)(fold),
+        started(slices, s"t_fold_split_$name", perFile = true)(fold))
+    }
+    runs.foreach { case (_, whole, split) =>
+      whole.awaitTermination(); split.awaitTermination()
+    }
+    Seq(eventSlices, docSlices).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+    def rows(q: org.apache.spark.sql.streaming.StreamingQuery) =
+      spark.table(q.name).collect().map(_.toString).toSeq.sorted
+    runs.foreach { case (name, whole, split) =>
+      assert(split.recentProgress.count(_.numInputRows > 0) == 4,
+        s"$name: expected one data batch per slice file")
+      val (oneBatch, perSlice) = (rows(whole), rows(split))
+      assert(oneBatch.nonEmpty, name)
+      assert(perSlice == oneBatch, s"$name: split-only=" +
+        s"${perSlice.diff(oneBatch)}, whole-only=${oneBatch.diff(perSlice)}")
+    }
   }
 }
