@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.concurrent.TrieMap
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -34,7 +35,8 @@ object GraftQuery {
   *
   * Schema contract: [[schemaOf]] infers a table's schema (a one-task
   * footer job) once per session (held weakly), path, listing (each leaf
-  * file's path, length and mtime, from a Hadoop `listFiles`, no job)
+  * file's path, length and mtime, from a recursive Hadoop `listStatus`,
+  * no job)
   * and set `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` confs,
   * so a table rewritten in place or a reader conf flipped (as [[events]]
   * does) is re-inferred; reads pass it to `spark.read.schema` and start
@@ -53,8 +55,14 @@ object Tables {
   /** The parquet schema at `path`, cached per the object doc's contract. */
   def schemaOf(spark: SparkSession, path: String): StructType = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val files = p.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(p, true)
-    val listing = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    // listStatus, not listFiles: a LocatedFileStatus reads each file's
+    // permissions, which the local filesystem without its native library
+    // does by forking `ls -ld`
+    def leaves(f: FileStatus): Iterator[FileStatus] =
+      if (f.isDirectory) fs.listStatus(f.getPath).iterator.flatMap(leaves)
+      else Iterator.single(f)
+    val listing = leaves(fs.getFileStatus(p))
       .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
     val confs = spark.conf.getAll.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")

@@ -772,35 +772,43 @@ object EventStreams {
 
   /** Run any of the above to completion over the existing files and
     * return the collected result table (availableNow trigger + memory
-    * sink — the batch-parity harness used by the smoke tests).
+    * sink — the batch-parity harness used by the smoke tests). The sink
+    * gets a fresh name and its temp view is dropped once the returned
+    * DataFrame has resolved it, so the sink's rows live only as long as
+    * that DataFrame.
     *
-    * Stateful-streaming partition count is a per-query design parameter,
-    * NOT the session's batch shuffle setting: each shuffle partition of a
-    * stateful operator owns a state store whose per-micro-batch commit
-    * (delta file + snapshot maintenance) is fixed I/O regardless of how
-    * few rows it holds, and the count is frozen into the checkpoint at
-    * first start anyway, so production jobs always pin it explicitly.
-    * [[StatePartitions]] suits the gate-scale replays (measured: 32 → 8
-    * partitions cuts the stream-stream join gate 5.9s → 3.4s with
-    * identical results); at scale the count should follow state volume.
-    * Results are partition-count-independent (the driver's oracle gate
-    * hashes them), so this is a throughput knob, not a semantics knob.
+    * Two confs are set for the stream and restored afterwards:
+    *  - `spark.sql.shuffle.partitions` = [[StatePartitions]]. The
+    *    stateful partition count is a per-query design parameter, not the
+    *    session's batch setting: each partition owns a state store that
+    *    commits a delta file every micro-batch, and the count is frozen
+    *    into the checkpoint at first start, so production jobs pin it.
+    *    Results do not depend on it (the oracle gate hashes them).
+    *  - the checkpoint file manager = [[LocalCheckpointFileManager]].
+    *    Every checkpoint, state-delta and `.crc` file goes through it;
+    *    without Hadoop's native library the default manager forks a
+    *    `readlink` or `chmod` process for each of them, and those forks,
+    *    not the file I/O, were the per-partition cost of a batch.
     */
-  def runToMemory(spark: SparkSession, streamed: DataFrame, name: String,
+  def runToMemory(spark: SparkSession, streamed: DataFrame,
       outputMode: String = "append"): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, StatePartitions.toString)
+    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
+    val prev = StreamConfs.keys.map(k => k -> spark.conf.getOption(k))
+    StreamConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val q = streamed.writeStream
+      try streamed.writeStream
         .format("memory")
         .queryName(name)
         .outputMode(outputMode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-    } finally spark.conf.set(key, prev)
-    spark.table(name)
+        .awaitTermination()
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      spark.table(name)
+    } finally spark.catalog.dropTempView(name)
   }
 
   /** q262's FIFO matching maintained ONLINE — per user, `purchase` rows
@@ -1320,4 +1328,12 @@ object EventStreams {
 
   /** [[runToMemory]]'s stateful-operator partition count. */
   private final val StatePartitions = 8
+
+  /** The confs [[runToMemory]] sets for each stream. */
+  private val StreamConfs = Map(
+    "spark.sql.shuffle.partitions" -> StatePartitions.toString,
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[LocalCheckpointFileManager].getName)
+
+  private val sinkId = new java.util.concurrent.atomic.AtomicLong()
 }

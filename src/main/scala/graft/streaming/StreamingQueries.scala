@@ -32,7 +32,6 @@ import graft.GraftQuery
 object StreamingQueries {
 
   private val FlushDelayNanos = 30L * 24 * 3600 * 1000000000L
-  private val memorySinkId = new java.util.concurrent.atomic.AtomicInteger()
 
   /** Stage `dir`/events.parquet (file or directory) plus the flush
     * sentinel into a stream-source directory ([[stagedWithSentinel]]).
@@ -160,8 +159,7 @@ object StreamingQueries {
       build: DataFrame => DataFrame): DataFrame = {
     val staged = stagedWithFlush(spark, dir)
     val events = readStaged(spark, dir, staged)
-    EventStreams.runToMemory(spark, build(events),
-      s"stream_gate_${memorySinkId.incrementAndGet()}")
+    EventStreams.runToMemory(spark, build(events))
   }
 
   /** q47: streaming tumbling-window counts ≡ batch q18 on closed windows.
@@ -242,8 +240,7 @@ object StreamingQueries {
       |ORDER BY user_id, milestone""".stripMargin) { (s, d) =>
     val streamed = EventStreams.runToMemory(s,
       EventStreams.valueMilestones(EventStreams.readEvents(s, d))
-        .toDF("user_id", "milestone"),
-      s"stream_gate_${memorySinkId.incrementAndGet()}")
+        .toDF("user_id", "milestone"))
     streamed.orderBy("user_id", "milestone")
   }
 
@@ -298,8 +295,7 @@ object StreamingQueries {
       |GROUP BY user_id, event_type
       |ORDER BY user_id, event_type""".stripMargin) { (s, d) =>
     val streamed = EventStreams.runToMemory(s,
-      EventStreams.dedupedEvents(EventStreams.readEvents(s, d)),
-      s"stream_gate_${memorySinkId.incrementAndGet()}")
+      EventStreams.dedupedEvents(EventStreams.readEvents(s, d)))
     streamed.select("user_id", "event_type")
       .orderBy("user_id", "event_type")
   }
@@ -324,8 +320,7 @@ object StreamingQueries {
     // could be dropped between batches before a later in-window click).
     val streamed = EventStreams.runToMemory(s,
       EventStreams.attributedClicks(EventStreams.readEvents(s, d),
-        watermark = "30 days"),
-      s"stream_gate_${memorySinkId.incrementAndGet()}")
+        watermark = "30 days"))
     streamed.orderBy("user_id", "view_id", "click_id")
   }
 
@@ -493,8 +488,7 @@ object StreamingQueries {
       .cdcChunks(EventStreams.readDocuments(s, d))
       .select("doc_id", "chunk_id", "chunk_fp")
     val kept = chunks.join(dupFps, Seq("chunk_fp"), "left_anti")
-    EventStreams.runToMemory(s, kept,
-        s"stream_gate_${memorySinkId.incrementAndGet()}")
+    EventStreams.runToMemory(s, kept)
       .select("doc_id", "chunk_id", "chunk_fp")
       .orderBy("doc_id", "chunk_id")
   }
@@ -518,8 +512,7 @@ object StreamingQueries {
       .select(col("vec_id"), col("embedding"))
       .where(graft.operators.Similarity.shardBucket(col("vec_id")) >= 8)
     EventStreams.runToMemory(s,
-        graft.operators.Similarity.frozenAssignEncode(s, d, nw),
-        s"stream_gate_${memorySinkId.incrementAndGet()}")
+        graft.operators.Similarity.frozenAssignEncode(s, d, nw))
       .orderBy("vec_id", "m")
   }
 
@@ -543,8 +536,7 @@ object StreamingQueries {
       .select(col("vec_id"), col("embedding"))
       .where(graft.operators.Similarity.shardBucket(col("vec_id")) >= 8)
     EventStreams.runToMemory(s,
-        graft.operators.Similarity.frozenImiRoute(s, d, nw),
-        s"stream_gate_${memorySinkId.incrementAndGet()}")
+        graft.operators.Similarity.frozenImiRoute(s, d, nw))
       .orderBy("vec_id")
   }
 
@@ -567,7 +559,6 @@ object StreamingQueries {
       .select(col("vec_id"), col("embedding"))
     val sunk = EventStreams.runToMemory(s,
       graft.operators.Similarity.graphAttachPlan(s, d, nw),
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "complete")
     sunk.select(col("qid").as("vec_id"), posexplode(col("top")))
       .select(col("vec_id"), (col("pos") + 1).cast("int").as("rank"),
@@ -595,7 +586,6 @@ object StreamingQueries {
       .select(col("vec_id"), col("embedding"))
     val sunk = EventStreams.runToMemory(s,
       graft.operators.Similarity.graphMaskedServePlan(s, d, qs),
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "complete")
     sunk.select(col("qid").as("vec_id"), posexplode(col("top")))
       .select(col("vec_id"), (col("pos") + 1).cast("int").as("rank"),
@@ -628,7 +618,6 @@ object StreamingQueries {
     }
     val sunk = EventStreams.runToMemory(s,
       orders.groupBy("o_custkey").agg(pivotAggs.head, pivotAggs.tail: _*),
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "complete")
     val n = classes.size
     val withTot = sunk.withColumn("t",
@@ -726,7 +715,6 @@ object StreamingQueries {
     val sunk = EventStreams.runToMemory(s,
       EventStreams.ledgerPnlRows(trades).toDF("cust", "part", "n_trades",
         "proceeds", "cost", "realized", "olu", "olc", "osu", "osp"),
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "update")
     val wSnap = org.apache.spark.sql.expressions.Window
       .partitionBy("cust", "part").orderBy(col("n_trades").desc)
@@ -778,7 +766,6 @@ object StreamingQueries {
       EventStreams.washSaleRows(trades).toDF("cust", "part", "n_trades",
         "n_sales", "n_matched", "n_loss", "n_washed", "matched", "loss",
         "washed_loss"),
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "update")
     val wSnap = org.apache.spark.sql.expressions.Window
       .partitionBy("cust", "part").orderBy(col("n_trades").desc)
@@ -816,7 +803,6 @@ object StreamingQueries {
     val docs = EventStreams.readDocuments(s, d)
     val sunk = EventStreams.runToMemory(s,
       graft.operators.Pipeline.merkleStreamPlan(docs),
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "complete")
     graft.operators.Pipeline.merkleStreamReadback(s, sunk)
   }
@@ -841,7 +827,6 @@ object StreamingQueries {
       .select(col("vec_id"), col("embedding"))
     val sunk = EventStreams.runToMemory(s,
       graft.operators.Similarity.streamServePlan(s, d, qs),
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "complete")
     sunk.select(col("vec_id"), posexplode(col("top")))
       .select(col("vec_id"), col("col.neighbor_id").as("neighbor_id"),
@@ -875,7 +860,6 @@ object StreamingQueries {
       .select(col("vec_id"), col("embedding"))
     val sunk = EventStreams.runToMemory(s,
       Sim.streamServePlan(s, d, qs, Some(live)),
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "complete")
     sunk.select(col("vec_id"), posexplode(col("top")))
       .select(col("vec_id"), col("col.neighbor_id").as("neighbor_id"),
@@ -925,7 +909,6 @@ object StreamingQueries {
           lit(Cs.CmW)).as("cell"))
       .groupBy("r", "cell").agg(count(lit(1)).as("n"))
     EventStreams.runToMemory(s, cells,
-        s"stream_gate_${memorySinkId.incrementAndGet()}",
         outputMode = "complete")
       .orderBy("r", "cell")
   }
@@ -1080,7 +1063,6 @@ object StreamingQueries {
       .withColumn("bucket", expr("c div 50"))
       .groupBy("bucket").agg(count(lit(1)).as("cnt"))
     val snap = EventStreams.runToMemory(s, sk,
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "complete")
     val w = org.apache.spark.sql.expressions.Window
     val cum = snap
@@ -1166,8 +1148,7 @@ object StreamingQueries {
     val out = chunks.join(store, Seq("chunk_fp"), "left")
       .select(col("doc_id"), col("chunk_id"), col("chunk_fp"),
         when(col("in_store"), "dup_store").otherwise("new").as("status"))
-    EventStreams.runToMemory(s, out,
-        s"stream_gate_${memorySinkId.incrementAndGet()}")
+    EventStreams.runToMemory(s, out)
       .orderBy("doc_id", "chunk_id")
   }
 
@@ -1189,7 +1170,6 @@ object StreamingQueries {
     val digest =
       graft.operators.Pipeline.digestOf(EventStreams.readDocuments(s, d))
     EventStreams.runToMemory(s, digest,
-        s"stream_gate_${memorySinkId.incrementAndGet()}",
         outputMode = "complete")
       .orderBy("source")
   }
@@ -1264,8 +1244,7 @@ object StreamingQueries {
       .withColumn("top_ppm", expr("(top_cnt * 1000000) div n_bigrams"))
       .withColumn("rep_ppm",
         expr("((n_bigrams - n_distinct) * 1000000) div n_bigrams"))
-    EventStreams.runToMemory(s, out,
-        s"stream_gate_${memorySinkId.incrementAndGet()}")
+    EventStreams.runToMemory(s, out)
       .orderBy("doc_id")
   }
 
@@ -1284,7 +1263,6 @@ object StreamingQueries {
     val drift =
       graft.operators.Similarity.dimDriftOf(EventStreams.readEmbeddings(s, d))
     EventStreams.runToMemory(s, drift,
-        s"stream_gate_${memorySinkId.incrementAndGet()}",
         outputMode = "complete")
       .orderBy("dim")
   }
@@ -1389,8 +1367,7 @@ object StreamingQueries {
     val groups = EventStreams
       .compactionGroupRows(files, graft.operators.Pipeline.CompactTarget)
       .toDF("source", "grp", "n_files", "group_bytes", "is_tail")
-    EventStreams.runToMemory(s, groups,
-        s"stream_gate_${memorySinkId.incrementAndGet()}")
+    EventStreams.runToMemory(s, groups)
       .where(col("source") =!= "__flush")
       .select(col("source"), col("grp"), col("n_files"), col("group_bytes"),
         expr(s"(group_bytes * 1000000) div ${graft.operators.Pipeline.CompactTarget}")
@@ -1416,7 +1393,6 @@ object StreamingQueries {
     val cap = EventStreams.readDocuments(s, d)
       .groupBy("source").agg(sum(col("n_chars")).as("cap"))
     val capT = EventStreams.runToMemory(s, cap,
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "complete")
     graft.operators.Pipeline.waterfillOf(
         s.createDataFrame(capT.rdd, capT.schema))
@@ -1445,7 +1421,6 @@ object StreamingQueries {
       .groupBy("source", "tier")
       .agg(count(lit(1)).as("n_runs"), sum(col("bytes")).as("tier_bytes"))
     val rollup = EventStreams.runToMemory(s, g,
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "complete")
     P.stcsOf(rollup)
   }
@@ -1472,7 +1447,6 @@ object StreamingQueries {
       .groupBy("source").agg(count(lit(1)).as("nh"), sum("x").as("sx"),
         sum(col("x") * col("x")).as("sxx"))
     val stT = EventStreams.runToMemory(s, st,
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "complete")
     graft.operators.Pipeline.neymanOf(
         s.createDataFrame(stT.rdd, stT.schema))
@@ -1508,7 +1482,6 @@ object StreamingQueries {
         expr(Cs.hllRankArith(s"(h div ${Cs.HllM})")).as("rank"))
       .groupBy("source", "reg").agg(max(col("rank")).as("mx"))
     EventStreams.runToMemory(s, regs,
-        s"stream_gate_${memorySinkId.incrementAndGet()}",
         outputMode = "complete")
       .select(col("source"), col("reg").cast("long").as("reg"),
         col("mx").cast("long").as("mx"))
@@ -1584,7 +1557,6 @@ object StreamingQueries {
       .select(col("source"), graft.functions.PolyHash.hash(col("w")).as("h"))
       .groupBy("source").agg(kmv(col("h")).as("bk"))
     EventStreams.runToMemory(s, st,
-        s"stream_gate_${memorySinkId.incrementAndGet()}",
         outputMode = "complete")
       .where(size(col("bk")) >= Cs.KmvK)
       .select(col("source"),
@@ -1618,7 +1590,6 @@ object StreamingQueries {
       .select(col("cell").cast("long").as("cell"), col("label"))
       .groupBy("cell", "label").agg(count(lit(1)).as("nxy"))
     val fin = EventStreams.runToMemory(s, xy,
-      s"stream_gate_${memorySinkId.incrementAndGet()}",
       outputMode = "complete")
     Sim.nmiOf(s, fin.select("cell", "label", "nxy"))
   }

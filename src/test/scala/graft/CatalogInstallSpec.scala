@@ -43,7 +43,7 @@ class CatalogInstallSpec extends SparkSuite {
     val fresh = spark.newSession()
     assert(missing(fresh).nonEmpty, "a new session already has catalog functions")
     def written(s: SparkSession): Seq[String] = {
-      val out = java.nio.file.Files.createTempDirectory("graft_catalog_csv").toString
+      val out = tempDir("graft_catalog_csv").toString
       val df = s.createDataFrame(Seq((1L, 0.00033, "a,b"), (2L, 1.0e7, "c")))
         .toDF("id", "x", "s")
       io.DelimitedWriter.writeDelimited(df, out)

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * registers SQL functions, and every name a function module's Column
   * helper calls is declared there. A textual scan, like
   * `RegistrationCensusSpec`: a registration call or an undeclared name is
-  * visible in the source before any query happens to run it.
+  * visible in the source before any query happens to run it. The same
+  * scan keeps test scratch space on `SparkSuite.tempDir`, the one helper
+  * that deletes what it makes.
   */
 class FunctionCatalogCensusSpec extends AnyFunSuite {
 
@@ -42,5 +44,17 @@ class FunctionCatalogCensusSpec extends AnyFunSuite {
     assert(Set("cosine_sim", "poly_hash", "double_plain").subsetOf(called), called)
     val undeclared = called -- GraftExtensions.functions.map(_.name)
     assert(undeclared.isEmpty, s"called but not in the catalog: ${undeclared.toSeq.sorted}")
+  }
+
+  test("no test source outside SparkTestBase makes a bare temp dir or file") {
+    val tempRe = """createTemp(Directory|File)\(""".r
+    val offenders = for {
+      (p, text) <- sources("src/test/scala")
+      if !p.endsWith("SparkTestBase.scala")
+      (line, i) <- text.linesIterator.zipWithIndex
+      if tempRe.findFirstIn(line).isDefined
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      s"take scratch space from SparkSuite.tempDir instead:\n${offenders.mkString("\n")}")
   }
 }

@@ -1,8 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for the test suite (one JVM-wide session — Spark
@@ -16,17 +19,48 @@ object SparkTestBase {
       .master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     GraftExtensions.install(s)
     s
   }
+
+  /** The session outlives every suite, so its warehouse goes at JVM exit. */
+  private lazy val warehouse: Path = {
+    val d = Files.createTempDirectory("graft_warehouse")
+    sys.addShutdownHook(deleteTree(d))
+    d
+  }
+
+  /** Deletes `root` and everything under it. Symlinks are deleted, not
+    * followed (`Files.walk` does not follow them), so a link into the
+    * test data removes only the link.
+    */
+  def deleteTree(root: Path): Unit = if (Files.exists(root)) {
+    val s = Files.walk(root)
+    try s.iterator.asScala.toVector.reverse.foreach(Files.deleteIfExists)
+    finally s.close()
+  }
 }
 
-abstract class SparkSuite extends AnyFunSuite {
+abstract class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh directory under `java.io.tmpdir`, deleted with all it holds
+    * after the suite. Every test that needs scratch space takes it here.
+    */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.asScala.foreach(SparkTestBase.deleteTree)
+    finally super.afterAll()
 
   /** Runs `body` and returns its value with the descriptions of the jobs
     * that started meanwhile ("null" for an unlabelled job). A fence job

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
@@ -27,8 +26,7 @@ class TablesSpec extends SparkSuite {
     } finally writer.close()
   }
 
-  private def freshDir(): String =
-    Files.createTempDirectory("graft_tables").toString
+  private def freshDir(): String = tempDir("graft_tables").toString
 
   test("a second read of an unchanged table starts no job and is a fresh relation") {
     val d = freshDir()

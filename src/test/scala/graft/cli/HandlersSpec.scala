@@ -38,7 +38,7 @@ class HandlersSpec extends SparkSuite {
   }
 
   test("TSV sources detect and transform end to end") {
-    val tsv = java.nio.file.Files.createTempFile("graft_txn", ".tsv")
+    val tsv = tempDir("graft_txn").resolve("txn.tsv")
     val header = "txnAction\ttxnTransactedAt\ttxnAccountID\ttxnSecurityID" +
       "\ttxnLotID\ttxnShareCount\ttxnSharePrice\trealizedGainShort\trealizedGainLong"
     java.nio.file.Files.writeString(tsv, header +

@@ -56,7 +56,7 @@ class DecoderSpec extends SparkSuite {
 
   test("optional typed fields decode to null without rejecting (holding)") {
     val holdingSpec = AllocRegistry.holding
-    val tmp = java.nio.file.Files.createTempFile("graft_holding", ".csv")
+    val tmp = tempDir("graft_holding").resolve("holding.csv")
     java.nio.file.Files.writeString(tmp,
       "holdingAccountID,holdingSecurityID,holdingLotID,shareCount,shareBasis,acquiredAt\n" +
         "ACC-1,BND,,100,85.0,2020-06-30\n" + // full row
@@ -161,7 +161,7 @@ class DecoderSpec extends SparkSuite {
   }
 
   private def tmpCsv(body: String): String =
-    write(Files.createTempFile("graft_decode", ".csv"), body)
+    write(tempDir("graft_decode").resolve("input.csv"), body)
 
   private def withConf[T](key: String, value: String)(body: => T): T = {
     val old = spark.conf.getOption(key)
@@ -214,7 +214,7 @@ class DecoderSpec extends SparkSuite {
   }
 
   test("readRaw on a two-file directory drops each file's header once") {
-    val dir = Files.createTempDirectory("graft_decode_dir")
+    val dir = tempDir("graft_decode_dir")
     write(dir.resolve("a.csv"), (header +: txnRows.take(2)).mkString("", "\n", "\n"))
     write(dir.resolve("b.csv"), (header +: txnRows.drop(2)).mkString("", "\n", "\n"))
     write(dir.resolve("_SUCCESS"), "")
@@ -287,7 +287,7 @@ class DecoderSpec extends SparkSuite {
   test("writing good and rejects reads the input once; a second decode reads it again") {
     val path = txnFixture
     val fileBytes = Files.size(java.nio.file.Paths.get(path))
-    val out = Files.createTempDirectory("graft_decode_once").toString
+    val out = tempDir("graft_decode_once").toString
     val scans = new InputScans(path)
     spark.sparkContext.addSparkListener(scans)
     try {

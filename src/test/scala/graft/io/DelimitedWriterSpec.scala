@@ -102,7 +102,7 @@ class DelimitedWriterSpec extends SparkSuite {
     val s = StructType(Seq(StructField("bar", StringType), StructField("n", DoubleType)))
     val df = spark.createDataFrame(java.util.Arrays.asList(Row("x", 1.5)), s)
     assert(DelimitedWriter.jsonArrayString(df) == """[{"bar":"x","n":1.5}]""")
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString + "/out"
+    val dir = tempDir("graft_json").toString + "/out"
     DelimitedWriter.writeJson(df.coalesce(1), dir)
     val part = new java.io.File(dir).listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".json")).head
@@ -114,7 +114,7 @@ class DelimitedWriterSpec extends SparkSuite {
     val s = StructType(Seq(StructField("bar", StringType), StructField("baz", StringType)))
     val df = spark.createDataFrame(
       java.util.Arrays.asList(Row("bl,ah", "b\"p")), s).coalesce(1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString + "/out"
+    val dir = tempDir("graft_csv").toString + "/out"
     DelimitedWriter.writeDelimited(df, dir)
     val part = new java.io.File(dir).listFiles()
       .filter(f => f.getName.startsWith("part-")).head

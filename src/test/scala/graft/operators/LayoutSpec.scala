@@ -39,7 +39,7 @@ class LayoutSpec extends SparkSuite {
 
     // A/B: the same rows laid out in doc_id order — every file spans the
     // full (src_idx, n_chars) space, so the box prunes (almost) nothing
-    val flat = java.nio.file.Files.createTempDirectory("graft_flat_layout")
+    val flat = tempDir("graft_flat_layout")
     try {
       spark.read.parquet(s"$zdir/z")
         .repartitionByRange(zTotal, col("doc_id"))

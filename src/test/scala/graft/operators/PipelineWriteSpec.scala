@@ -14,7 +14,7 @@ class PipelineWriteSpec extends SparkSuite {
 
   test("writeCleanCorpus writes (lang, source) partitions that prune at the scan") {
     val docs = graft.Tables.documents(spark, dir)
-    val out = java.nio.file.Files.createTempDirectory("graft_clean").toString + "/corpus"
+    val out = tempDir("graft_clean").toString + "/corpus"
     Pipeline.writeCleanCorpus(docs, out)
 
     val cleaned = Pipeline.cleanedCorpus(docs)
@@ -48,7 +48,7 @@ class PipelineWriteSpec extends SparkSuite {
   }
 
   test("writeDecontaminatedCorpus keeps exactly q77's kept roster, partitions prune") {
-    val out = java.nio.file.Files.createTempDirectory("graft_decon").toString + "/corpus"
+    val out = tempDir("graft_decon").toString + "/corpus"
     CorpusStats.writeDecontaminatedCorpus(spark, dir, out)
 
     val written = spark.read.parquet(out)
@@ -103,7 +103,7 @@ class PipelineWriteSpec extends SparkSuite {
     val docs = graft.Tables.documents(spark, dir)
     val n = docs.count()
     val per = 20L
-    val out = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/docs"
+    val out = tempDir("graft_compact").toString + "/docs"
     Pipeline.writeCompacted(docs, out, "doc_id", per)
 
     val files = new java.io.File(out).listFiles()
@@ -140,7 +140,7 @@ class PipelineWriteSpec extends SparkSuite {
 
   test("writeShuffledShards: shard dirs hold the q128 permutation in file order") {
     val docs = graft.Tables.documents(spark, dir)
-    val out = java.nio.file.Files.createTempDirectory("graft_shuf").toString + "/shards"
+    val out = tempDir("graft_shuf").toString + "/shards"
     Pipeline.writeShuffledShards(docs, out)
 
     // every shard directory exists and the union is exactly the corpus
@@ -161,7 +161,7 @@ class PipelineWriteSpec extends SparkSuite {
         s"(${fileOrder.take(5).toSeq} vs ${q128.take(5).toSeq})")
 
     // determinism: a rerun reproduces the identical per-shard sequence
-    val out2 = java.nio.file.Files.createTempDirectory("graft_shuf2").toString + "/shards"
+    val out2 = tempDir("graft_shuf2").toString + "/shards"
     Pipeline.writeShuffledShards(docs, out2)
     val fileOrder2 = spark.read.parquet(s"$out2/shard=3")
       .select("doc_id").collect().map(_.getLong(0))
@@ -169,7 +169,7 @@ class PipelineWriteSpec extends SparkSuite {
   }
 
   test("writeScrubbedCorpus masks every banned term; char delta matches q100") {
-    val out = java.nio.file.Files.createTempDirectory("graft_scrub").toString + "/corpus"
+    val out = tempDir("graft_scrub").toString + "/corpus"
     TextAnalysis.writeScrubbedCorpus(spark, dir, out)
 
     val docs = graft.Tables.documents(spark, dir)

@@ -55,7 +55,7 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("partitioned writes prune partitions at the scan") {
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString + "/orders"
+    val out = tempDir("graft_part").toString + "/orders"
     spark.read.parquet(s"$dir/orders.parquet")
       .withColumn("yr", year(col("o_orderdate")))
       .write.partitionBy("yr").mode("overwrite").parquet(out)
@@ -194,7 +194,7 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("written IVF index serves a single-cell probe via partition pruning") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf")
+    val tmp = tempDir("graft_ivf")
     val out = tmp.toString + "/index"
     Similarity.writeIvfIndex(spark, dir, out)
     val index = spark.read.parquet(out)
@@ -308,7 +308,7 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("index + sidecar writes are serving-complete: files round-trip every tier's inputs") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sidecar").toString
+    val tmp = tempDir("graft_sidecar").toString
     Similarity.writeIvfIndex(spark, dir, tmp + "/index")
     Similarity.writeIndexSidecar(spark, dir, tmp)
 
@@ -553,7 +553,7 @@ class ScaleSpec extends SparkSuite {
       (i.toLong, c.map(x => (x + rnd.nextGaussian() * 0.25).toFloat).toSeq,
         i % 10)
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_clustered")
+    val tmp = tempDir("graft_clustered")
     import spark.implicits._
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
@@ -585,7 +585,7 @@ class ScaleSpec extends SparkSuite {
       (i.toLong, c.map(x => (x + rnd.nextGaussian() * 0.25).toFloat).toSeq,
         i % 10)
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nnd_clu")
+    val tmp = tempDir("graft_nnd_clu")
     import spark.implicits._
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
@@ -650,7 +650,7 @@ class ScaleSpec extends SparkSuite {
       (i.toLong, c.map(x => (x + rnd.nextGaussian() * 0.25).toFloat).toSeq,
         i % 10)
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hier_clu")
+    val tmp = tempDir("graft_hier_clu")
     import spark.implicits._
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")

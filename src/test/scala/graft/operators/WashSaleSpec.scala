@@ -23,7 +23,7 @@ class WashSaleSpec extends SparkSuite {
 
   test("wash-sale flags fire exactly per the rule") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_wash")
+    val tmp = tempDir("graft_wash")
     // (orderkey, partkey, suppkey, linenumber, qty, extprice, discount,
     //  tax, returnflag, linestatus, shipdate)
     def li(ok: Long, part: Long, ln: Int, qty: Double, price: Double,

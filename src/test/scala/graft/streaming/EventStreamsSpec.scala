@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -17,16 +19,16 @@ class EventStreamsSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def streamFlushed(build: org.apache.spark.sql.DataFrame =>
-      org.apache.spark.sql.DataFrame, name: String) = {
+      org.apache.spark.sql.DataFrame) = {
     val staged = StreamingQueries.stagedWithFlush(spark, dir)
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val events = graft.Tables.normalizeEventTs(
       spark.readStream.schema(schema).parquet(staged))
-    EventStreams.runToMemory(spark, build(events), name)
+    EventStreams.runToMemory(spark, build(events))
   }
 
   test("tumbling-window stream EQUALS batch on flushed input") {
-    val streamed = streamFlushed(EventStreams.tumblingCounts(_), "t_tumbling")
+    val streamed = streamFlushed(EventStreams.tumblingCounts(_))
     val batch = graft.SparkEntry.queries("q18_tumbling_window")(spark, dir)
     val s = streamed.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
@@ -37,7 +39,7 @@ class EventStreamsSpec extends SparkSuite {
   }
 
   test("sliding-window stream EQUALS batch on flushed input") {
-    val streamed = streamFlushed(EventStreams.slidingCounts(_), "t_sliding")
+    val streamed = streamFlushed(EventStreams.slidingCounts(_))
     val batch = graft.SparkEntry.queries("q19_sliding_window")(spark, dir)
     val s = streamed.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -48,7 +50,7 @@ class EventStreamsSpec extends SparkSuite {
   }
 
   test("session-window stream EQUALS batch on flushed input") {
-    val streamed = streamFlushed(EventStreams.sessionCounts(_), "t_session")
+    val streamed = streamFlushed(EventStreams.sessionCounts(_))
     val batch = graft.SparkEntry.queries("q20_session_window")(spark, dir)
     val s = streamed.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
@@ -67,7 +69,7 @@ class EventStreamsSpec extends SparkSuite {
     // state, this test catches the silent-empty-stream class the r15
     // flush-gate bug belonged to.
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_restage").toFile
+    val tmp = tempDir("graft_restage").toFile
     def writeDocs(n: Int): Unit = {
       val build = new java.io.File(tmp, "_build")
       (0 until n).map(i => (i.toLong, s"doc $i", "src"))
@@ -78,12 +80,12 @@ class EventStreamsSpec extends SparkSuite {
         new java.io.File(tmp, "documents.parquet").toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    def streamedCount(name: String): Long = EventStreams.runToMemory(spark,
-      EventStreams.readDocuments(spark, tmp.getPath), name).count()
+    def streamedCount(): Long = EventStreams.runToMemory(spark,
+      EventStreams.readDocuments(spark, tmp.getPath)).count()
     writeDocs(5)
-    assert(streamedCount("t_restage_before") == 5)
+    assert(streamedCount() == 5)
     writeDocs(9) // REGENERATE in place: same path, new content
-    assert(streamedCount("t_restage_after") == 9,
+    assert(streamedCount() == 9,
       "stream served stale staged content after an in-place source rewrite")
   }
 
@@ -92,18 +94,18 @@ class EventStreamsSpec extends SparkSuite {
     // directory rewritten in place (new part-file names, new doc_id
     // range) must be restaged, never replayed from the first staging's
     // dangling links and stale sentinel
-    val tmp = java.nio.file.Files.createTempDirectory("graft_docs_rewrite")
+    val tmp = tempDir("graft_docs_rewrite")
     val docs = graft.Tables.documents(spark, dir)
     val q281 = graft.SparkEntry.queries("q281_compaction_plan")
     val q284 = graft.SparkEntry.queries("q284_stream_compaction_plan")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq
-    try Seq(col("doc_id") < 250, col("doc_id") >= 250).foreach { range =>
+    Seq(col("doc_id") < 250, col("doc_id") >= 250).foreach { range =>
       docs.where(range).coalesce(1).write.mode("overwrite")
         .parquet(s"$tmp/documents.parquet")
       val batch = rows(q281(spark, tmp.toString))
       assert(batch.nonEmpty)
       assert(rows(q284(spark, tmp.toString)) == batch, s"q284 != q281 over $range")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
   }
 
   test("late data behind the watermark is dropped from window aggregates") {
@@ -162,9 +164,9 @@ class EventStreamsSpec extends SparkSuite {
 
   test("checkpointed file sink resumes exactly-once across restarts") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = java.nio.file.Files.createTempDirectory("graft_sink_src")
-    val out = java.nio.file.Files.createTempDirectory("graft_sink_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sink_ckpt").toString
+    val src = tempDir("graft_sink_src")
+    val out = tempDir("graft_sink_out").toString
+    val ckpt = tempDir("graft_sink_ckpt").toString
     java.nio.file.Files.createSymbolicLink(
       src.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -187,7 +189,7 @@ class EventStreamsSpec extends SparkSuite {
     assert(spark.read.parquet(out).count() == batchN)
     // a NEW input file after restart is picked up incrementally: exactly
     // its rows are appended
-    val extraBuild = java.nio.file.Files.createTempDirectory("graft_sink_extra")
+    val extraBuild = tempDir("graft_sink_extra")
     spark.read.parquet(s"$dir/events.parquet").limit(5)
       .coalesce(1).write.mode("overwrite").parquet(extraBuild.toString)
     val part = new java.io.File(extraBuild.toString).listFiles()
@@ -199,8 +201,7 @@ class EventStreamsSpec extends SparkSuite {
 
   test("watermarked dedup stream emits exactly one row per key") {
     val streamed = EventStreams.runToMemory(spark,
-      EventStreams.dedupedEvents(EventStreams.readEvents(spark, dir)),
-      "t_dedup")
+      EventStreams.dedupedEvents(EventStreams.readEvents(spark, dir)))
     val n = streamed.count()
     val keys = streamed.select(countDistinct(col("user_id"), col("event_type")))
       .collect().head.getLong(0)
@@ -521,10 +522,10 @@ class EventStreamsSpec extends SparkSuite {
         expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("price"))
     val cuts = ledger.stat.approxQuantile("dd", Array(0.33, 0.66), 0.0)
     val (c1, c2) = (cuts(0), cuts(1))
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_ledger_mb")
+    val streamDir = tempDir("graft_ledger_mb")
     Seq(col("dd") <= c1, col("dd") > c1 && col("dd") <= c2, col("dd") > c2)
       .zipWithIndex.foreach { case (p, i) =>
-        val stage = java.nio.file.Files.createTempDirectory(s"graft_ledger_f$i")
+        val stage = tempDir(s"graft_ledger_f$i")
         ledger.where(p).coalesce(1).write.mode("overwrite")
           .parquet(stage.toString)
         val part = new java.io.File(stage.toString).listFiles()
@@ -541,7 +542,7 @@ class EventStreamsSpec extends SparkSuite {
     val sunk = EventStreams.runToMemory(spark,
       EventStreams.ledgerPnlRows(trades).toDF("cust", "part", "n_trades",
         "proceeds", "cost", "realized", "olu", "olc", "osu", "osp"),
-      "t_ledger_files", outputMode = "update")
+      outputMode = "update")
     // >1 emitted snapshot for at least one key proves multiple batches
     // actually reached the fold (the premise of the test)
     val snaps = sunk.collect()
@@ -682,15 +683,14 @@ class EventStreamsSpec extends SparkSuite {
         sentinel: DataFrame): String = {
       val keys = df.select(order).collect().map(_.getLong(0)).sorted
       val (c1, c2) = (keys(keys.length / 3), keys(2 * keys.length / 3))
-      val streamDir = java.nio.file.Files.createTempDirectory(s"graft_${name}_slices")
+      val streamDir = tempDir(s"graft_${name}_slices")
       Seq(df.where(order < c1), df.where(order >= c1 && order < c2),
         df.where(order >= c2), sentinel).zipWithIndex.foreach { case (part, i) =>
-        val stage = java.nio.file.Files.createTempDirectory(s"graft_${name}_f$i")
+        val stage = tempDir(s"graft_${name}_f$i")
         part.coalesce(1).write.mode("overwrite").parquet(stage.toString)
         val file = stage.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
         val dst = streamDir.resolve(s"$i.parquet")
         java.nio.file.Files.move(file.toPath, dst)
-        org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
         // file-source batches follow modification time: pin the order
         dst.toFile.setLastModified(1000000L * (i + 1))
       }
@@ -742,8 +742,6 @@ class EventStreamsSpec extends SparkSuite {
     runs.foreach { case (_, whole, split) =>
       whole.awaitTermination(); split.awaitTermination()
     }
-    Seq(eventSlices, docSlices).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
     def rows(q: org.apache.spark.sql.streaming.StreamingQuery) =
       spark.table(q.name).collect().map(_.toString).toSeq.sorted
     runs.foreach { case (name, whole, split) =>
@@ -754,5 +752,41 @@ class EventStreamsSpec extends SparkSuite {
       assert(perSlice == oneBatch, s"$name: split-only=" +
         s"${perSlice.diff(oneBatch)}, whole-only=${oneBatch.diff(perSlice)}")
     }
+  }
+
+  /** Each process started while `body` ran, as its command and stack
+    * frames, from an in-process JFR `jdk.ProcessStart` recording.
+    */
+  private def processStarts(body: => Unit): Seq[(String, Seq[String])] = {
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      try body finally rec.stop()
+      val file = tempDir("graft_jfr").resolve("census.jfr")
+      rec.dump(file)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(e => e.getString("command") -> e.getStackTrace.getFrames.asScala.toSeq
+          .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}"))
+    } finally rec.close()
+  }
+
+  test("q401 and a table read start no checkpoint or listing process") {
+    // without Hadoop's native library the local filesystem forks chmod,
+    // readlink or ls for file metadata unless the caller avoids it
+    val starts = processStarts {
+      graft.SparkEntry.queries("q401_stream_wash_sale")(spark, dir).collect()
+      graft.Tables.table(spark, dir, "lineitem")
+      // guards the recorder: a process started here must be seen
+      new ProcessBuilder("true").start().waitFor()
+    }
+    assert(starts.exists(_._2.exists(_.startsWith(classOf[EventStreamsSpec].getName))),
+      s"the recording missed the census's own process: ${starts.map(_._1)}")
+    val forked = starts.filter(_._2.exists(f =>
+      f.contains("streaming.checkpointing") || f.startsWith("graft.Tables")))
+    if (forked.nonEmpty) fail(s"${forked.size} processes started, the first:\n" +
+      forked.take(3).map { case (cmd, frames) =>
+        s"$cmd\n  ${frames.take(24).mkString("\n  ")}" }.mkString("\n"))
   }
 }
