@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Bench stdout emission, factored out of [[Bench.main]] so the
   * line-budget discipline is unit-testable (BenchEmitSpec) — the same
@@ -216,14 +215,7 @@ object Bench {
   private def measureInline(names: Seq[String], sfDir: String)
       : (Seq[(String, Double)], Seq[(String, (Long, Long))], Seq[String]) = {
     val selected = names.map(n => n -> SparkEntry.queries(n))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     def evaluate(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-replica generator for the sf1 bench study (ADVICE r13 item 3:
@@ -28,13 +28,8 @@ object GenScale {
     val src = args(0)
     val dst = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .appName("graft-genscale")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(shufflePartitions = 32,
+      confs = Map("spark.app.name" -> "graft-genscale"))
     val reps = broadcast(spark.range(copies).toDF("rep"))
     def load(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def save(df: DataFrame, t: String): Unit =

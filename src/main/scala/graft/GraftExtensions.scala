@@ -22,10 +22,11 @@ import graft.functions._
   *      // or
   *      SparkSession.builder().withExtensions(new GraftExtensions()(_))
   *    }}}
-  *  - through [[GraftExtensions.install]], which registers what a session
-  *    lacks. It runs where a vanilla session reaches graft code: in every
-  *    [[GraftQuery]]'s `fn`, before the plan is built, and in
-  *    [[graft.io.DelimitedWriter.renderLines]] on the export path.
+  *  - through [[GraftSession.install]], which registers what a session
+  *    lacks. It runs at the end of the [[GraftSession]] builder and where
+  *    any other session reaches graft code: in every [[GraftQuery]]'s
+  *    `fn`, before the plan is built, and in the
+  *    [[graft.io.DelimitedWriter]] sinks.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -39,11 +40,12 @@ object GraftExtensions {
     val info: ExpressionInfo = new ExpressionInfo("graft", null, name, usage, "")
   }
 
-  /** Registers every catalog function `spark` lacks. A present name is left
-    * alone: re-registering would log Spark's "replaced a previously
-    * registered function" warning on every query construction.
+  /** Registers every catalog function `spark` lacks ([[GraftSession.install]]
+    * calls it). A present name is left alone: re-registering would log
+    * Spark's "replaced a previously registered function" warning on every
+    * query construction.
     */
-  def install(spark: SparkSession): Unit = {
+  private[graft] def registerMissing(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     functions.foreach { f =>
       if (!registry.functionExists(f.id)) registry.registerFunction(f.id, f.info, f.builder)

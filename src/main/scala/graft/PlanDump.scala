@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` output for registered queries
   * to files — the evidence behind `plans/r18/<query>_{before,after}.txt`.
   *
@@ -18,10 +16,7 @@ object PlanDump {
     val outDir = Paths.get(a(0))
     Files.createDirectories(outDir)
     val suffix = a(1)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("local[4]", shufflePartitions = 8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     a.drop(2).foreach { q =>

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.StructType
 /** A named query over the driver's parquet tables, with an optional ANSI-SQL
   * oracle (runnable by DuckDB over the same tables). Queries without an
   * oracle get the driver's weaker rows-only check.
-  * The companion's constructors wrap `fn` so that it installs the
-  * [[GraftExtensions]] catalog on its session before it builds the plan.
+  * The companion's constructors wrap `fn` so that it runs
+  * [[GraftSession.install]] on its session before it builds the plan.
   */
 final case class GraftQuery(
     name: String,
@@ -25,10 +25,7 @@ object GraftQuery {
     GraftQuery(name, installing(fn), None)
 
   private def installing(fn: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame = { (s, d) =>
-    GraftExtensions.install(s)
-    fn(s, d)
-  }
+      : (SparkSession, String) => DataFrame = (s, d) => fn(GraftSession.install(s), d)
 }
 
 /** Loaders for the parquet tables described in TESTDATA.md.

@@ -80,11 +80,7 @@ object Main {
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
     spark.sparkContext.setLogLevel("WARN")
     val outcome = run(spark, args.toSeq)
     spark.stop()

@@ -44,11 +44,11 @@ object DelimitedWriter {
   }
 
   /** Whole rows rendered to single delimited lines (column `line`).
-    * Installs the [[graft.GraftExtensions]] catalog (for `double_plain`)
-    * on the frame's session.
+    * Runs [[graft.GraftSession.install]] on the frame's session: the
+    * catalog (for `double_plain`) and fork-free local file writes.
     */
   def renderLines(df: DataFrame, delimiter: String = ","): DataFrame = {
-    graft.GraftExtensions.install(df.sparkSession)
+    graft.GraftSession.install(df.sparkSession)
     val cells = df.schema.fields.map(f =>
       renderCell(col(f.name), f.dataType, delimiter))
     df.select(concat_ws(delimiter, cells: _*).as("line"))
@@ -80,9 +80,12 @@ object DelimitedWriter {
     head + (if (lines.isEmpty) "" else lines.mkString("", "\n", "\n"))
   }
 
-  /** JSON export (A10): JSONL via the native writer — the scalable form. */
-  def writeJson(df: DataFrame, path: String): Unit =
+  /** JSON export (A10): JSONL via the native writer — the scalable form.
+    * Installs the session as [[renderLines]] does. */
+  def writeJson(df: DataFrame, path: String): Unit = {
+    graft.GraftSession.install(df.sparkSession)
     df.write.mode("overwrite").json(path)
+  }
 
   /** Array-of-objects JSON string for small exports — the reference's
     * exact shape (`JSONEncoder().encode(elements)`,

@@ -777,24 +777,22 @@ object EventStreams {
     * DataFrame has resolved it, so the sink's rows live only as long as
     * that DataFrame.
     *
-    * Two confs are set for the stream and restored afterwards:
-    *  - `spark.sql.shuffle.partitions` = [[StatePartitions]]. The
-    *    stateful partition count is a per-query design parameter, not the
-    *    session's batch setting: each partition owns a state store that
-    *    commits a delta file every micro-batch, and the count is frozen
-    *    into the checkpoint at first start, so production jobs pin it.
-    *    Results do not depend on it (the oracle gate hashes them).
-    *  - the checkpoint file manager = [[LocalCheckpointFileManager]].
-    *    Every checkpoint, state-delta and `.crc` file goes through it;
-    *    without Hadoop's native library the default manager forks a
-    *    `readlink` or `chmod` process for each of them, and those forks,
-    *    not the file I/O, were the per-partition cost of a batch.
+    * `spark.sql.shuffle.partitions` = [[StatePartitions]] is set for the
+    * stream and restored afterwards. The stateful partition count is a
+    * per-query design parameter, not the session's batch setting: each
+    * partition owns a state store that commits a delta file every
+    * micro-batch, and the count is frozen into the checkpoint at first
+    * start, so production jobs pin it. Results do not depend on it (the
+    * oracle gate hashes them).
+    *
+    * Checkpoint and state files start no process on a session that ran
+    * [[graft.GraftSession.install]], as the registered queries do.
     */
   def runToMemory(spark: SparkSession, streamed: DataFrame,
       outputMode: String = "append"): DataFrame = {
     val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val prev = StreamConfs.keys.map(k => k -> spark.conf.getOption(k))
-    StreamConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val prev = spark.conf.getOption(PartitionsKey)
+    spark.conf.set(PartitionsKey, StatePartitions.toString)
     try {
       try streamed.writeStream
         .format("memory")
@@ -803,10 +801,7 @@ object EventStreams {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
         .awaitTermination()
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+      finally prev.fold(spark.conf.unset(PartitionsKey))(spark.conf.set(PartitionsKey, _))
       spark.table(name)
     } finally spark.catalog.dropTempView(name)
   }
@@ -1328,12 +1323,7 @@ object EventStreams {
 
   /** [[runToMemory]]'s stateful-operator partition count. */
   private final val StatePartitions = 8
-
-  /** The confs [[runToMemory]] sets for each stream. */
-  private val StreamConfs = Map(
-    "spark.sql.shuffle.partitions" -> StatePartitions.toString,
-    "spark.sql.streaming.checkpointFileManagerClass" ->
-      classOf[LocalCheckpointFileManager].getName)
+  private final val PartitionsKey = "spark.sql.shuffle.partitions"
 
   private val sinkId = new java.util.concurrent.atomic.AtomicLong()
 }

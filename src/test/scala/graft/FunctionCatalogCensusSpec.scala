@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `RegistrationCensusSpec`: a registration call or an undeclared name is
   * visible in the source before any query happens to run it. The same
   * scan keeps test scratch space on `SparkSuite.tempDir`, the one helper
-  * that deletes what it makes.
+  * that deletes what it makes, and sessions on [[GraftSession]], the one
+  * builder and the one place that picks the checkpoint file manager.
   */
 class FunctionCatalogCensusSpec extends AnyFunSuite {
 
@@ -24,14 +25,20 @@ class FunctionCatalogCensusSpec extends AnyFunSuite {
     finally s.close()
   }
 
-  test("no main source outside the catalog registers a function") {
-    val registerRe = """createOrReplaceTempFunction|registerFunction|\.register\(""".r
-    val offenders = for {
-      (p, text) <- sources("src/main/scala")
-      if !p.endsWith("GraftExtensions.scala")
+  /** `file:line: text` of each line under `root` that `re` matches,
+    * outside the files named `exempt`.
+    */
+  private def matching(root: String, re: scala.util.matching.Regex, exempt: String*) =
+    for {
+      (p, text) <- sources(root)
+      if !exempt.exists(p.endsWith)
       (line, i) <- text.linesIterator.zipWithIndex
-      if registerRe.findFirstIn(line).isDefined
+      if re.findFirstIn(line).isDefined
     } yield s"$p:${i + 1}: ${line.trim}"
+
+  test("no main source outside the catalog registers a function") {
+    val offenders = matching("src/main/scala",
+      """createOrReplaceTempFunction|registerFunction|\.register\(""".r, "GraftExtensions.scala")
     assert(offenders.isEmpty,
       s"register through GraftExtensions.functions instead:\n${offenders.mkString("\n")}")
   }
@@ -46,14 +53,22 @@ class FunctionCatalogCensusSpec extends AnyFunSuite {
     assert(undeclared.isEmpty, s"called but not in the catalog: ${undeclared.toSeq.sorted}")
   }
 
+  test("no main source outside GraftSession builds a session") {
+    // code lines only: GraftExtensions' scaladoc shows a cluster's builder
+    val offenders = matching("src/main/scala",
+      """^\s*[^\s*/].*SparkSession\s*\.\s*builder""".r, "GraftSession.scala")
+    assert(offenders.isEmpty,
+      s"build sessions through GraftSession instead:\n${offenders.mkString("\n")}")
+  }
+
+  test("main names the checkpoint file manager conf once") {
+    val named = matching("src/main/scala", "checkpointFileManagerClass".r)
+    assert(named.size == 1 && named.head.contains("GraftSession.scala"), named.mkString("\n"))
+  }
+
   test("no test source outside SparkTestBase makes a bare temp dir or file") {
-    val tempRe = """createTemp(Directory|File)\(""".r
-    val offenders = for {
-      (p, text) <- sources("src/test/scala")
-      if !p.endsWith("SparkTestBase.scala")
-      (line, i) <- text.linesIterator.zipWithIndex
-      if tempRe.findFirstIn(line).isDefined
-    } yield s"$p:${i + 1}: ${line.trim}"
+    val offenders = matching("src/test/scala",
+      """createTemp(Directory|File)\(""".r, "SparkTestBase.scala")
     assert(offenders.isEmpty,
       s"take scratch space from SparkSuite.tempDir instead:\n${offenders.mkString("\n")}")
   }

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The `spark.sql.extensions` entry point must make every catalog
   * function SQL-callable on a session that never ran
-  * `GraftExtensions.install` — this is how a cluster deployment gets the
+  * `GraftSession.install` — this is how a cluster deployment gets the
   * function surface.
   */
 class GraftExtensionsSpec extends AnyFunSuite {

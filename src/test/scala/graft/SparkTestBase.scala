@@ -9,22 +9,13 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for the test suite (one JVM-wide session — Spark
-  * startup dominates test wall-clock otherwise), with the function catalog
-  * installed for specs that call operator helpers outside a registered
-  * query.
+  * startup dominates test wall-clock otherwise), built and installed by
+  * [[GraftSession]] like every entry point's, so specs that call operator
+  * helpers outside a registered query find the function catalog.
   */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.install(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession("local[2]", shufflePartitions = 2,
+    confs = Map("spark.sql.warehouse.dir" -> warehouse.toString))
 
   /** The session outlives every suite, so its warehouse goes at JVM exit. */
   private lazy val warehouse: Path = {

@@ -755,14 +755,16 @@ class EventStreamsSpec extends SparkSuite {
   }
 
   /** Each process started while `body` ran, as its command and stack
-    * frames, from an in-process JFR `jdk.ProcessStart` recording.
+    * frames, from an in-process JFR `jdk.ProcessStart` recording. A
+    * guard process started after `body` must be seen, or the recorder
+    * missed it and the census fails.
     */
   private def processStarts(body: => Unit): Seq[(String, Seq[String])] = {
     val rec = new jdk.jfr.Recording()
-    try {
+    val starts = try {
       rec.enable("jdk.ProcessStart").withStackTrace()
       rec.start()
-      try body finally rec.stop()
+      try { body; new ProcessBuilder("true").start().waitFor() } finally rec.stop()
       val file = tempDir("graft_jfr").resolve("census.jfr")
       rec.dump(file)
       jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq
@@ -770,23 +772,48 @@ class EventStreamsSpec extends SparkSuite {
         .map(e => e.getString("command") -> e.getStackTrace.getFrames.asScala.toSeq
           .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}"))
     } finally rec.close()
-  }
-
-  test("q401 and a table read start no checkpoint or listing process") {
-    // without Hadoop's native library the local filesystem forks chmod,
-    // readlink or ls for file metadata unless the caller avoids it
-    val starts = processStarts {
-      graft.SparkEntry.queries("q401_stream_wash_sale")(spark, dir).collect()
-      graft.Tables.table(spark, dir, "lineitem")
-      // guards the recorder: a process started here must be seen
-      new ProcessBuilder("true").start().waitFor()
-    }
     assert(starts.exists(_._2.exists(_.startsWith(classOf[EventStreamsSpec].getName))),
       s"the recording missed the census's own process: ${starts.map(_._1)}")
-    val forked = starts.filter(_._2.exists(f =>
-      f.contains("streaming.checkpointing") || f.startsWith("graft.Tables")))
+    starts
+  }
+
+  /** Fails on each process `body` started from a frame containing one of
+    * `callers`. Without Hadoop's native library the local filesystem
+    * forks chmod, readlink or ls for file metadata unless the caller
+    * avoids it.
+    */
+  private def assertNoProcessFrom(callers: String*)(body: => Unit): Unit = {
+    val forked = processStarts(body)
+      .filter(_._2.exists(f => callers.exists(f.contains)))
     if (forked.nonEmpty) fail(s"${forked.size} processes started, the first:\n" +
       forked.take(3).map { case (cmd, frames) =>
         s"$cmd\n  ${frames.take(24).mkString("\n  ")}" }.mkString("\n"))
+  }
+
+  test("q401 and a table read start no checkpoint or listing process") {
+    assertNoProcessFrom("streaming.checkpointing", "graft.Tables") {
+      graft.SparkEntry.queries("q401_stream_wash_sale")(spark, dir).collect()
+      graft.Tables.table(spark, dir, "lineitem")
+    }
+  }
+
+  test("a decode and its CSV and JSONL exports start no file-write process") {
+    // the shared session's Hadoop filesystem cache already holds a local
+    // filesystem that forks chmod: only the installed session confs
+    // keep the writers off it
+    val spec = graft.schema.AllocRegistry.transaction
+    val out = tempDir("graft_export_census")
+    assertNoProcessFrom("CodecStreams", "HadoopMapReduceCommitProtocol",
+        "streaming.checkpointing") {
+      val decoded = graft.decode.Decoder.decode(graft.decode.Decoder.readRaw(
+        spark, "fixtures/mtransaction.csv", spec), spec)
+      try {
+        graft.io.DelimitedWriter.writeDelimited(decoded.good, s"$out/csv")
+        graft.io.DelimitedWriter.writeJson(decoded.good, s"$out/jsonl")
+        graft.io.DelimitedWriter.writeJson(decoded.rejects, s"$out/rejects")
+      } finally decoded.release()
+    }
+    assert(spark.read.text(s"$out/csv").count() == 12)
+    assert(spark.read.text(s"$out/rejects").count() == 4)
   }
 }
