@@ -19,7 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * DataFrame artifacts are eager checkpointed leaves ([[checkpointedDf]],
   * [[leafDf]]), never lazy `persist` caches: AQE's concurrent stage
   * submission races a lazy persist and re-runs its build once per
-  * consuming stage.
+  * consuming stage. (Only a per-call leaf whose first consumer is a
+  * single sink job, the decoder's, is lazy.)
   *
   * Assumptions (documented, test-pinned in ArtifactsSpec):
   *  - artifact inputs are immutable per (session, dir) — re-deriving after
@@ -108,12 +109,20 @@ object Artifacts {
   /** Materialize a DataFrame as a checkpointed leaf + its release hook —
     * the building block [[checkpointedDf]] and the tuple-valued index
     * artifacts share. Durability per [[ReliableArtifactsConf]].
+    *
+    * `eager = false` (local arm only) starts no job here: the first action
+    * on the leaf stores its blocks as it computes them, and Spark's
+    * `doCheckpoint` fills any partition that action skipped (a `take`).
+    * It is meant for a leaf whose first action reads it in one job (a
+    * sink): stages that AQE submits at once can each compute a partition
+    * no executor holds yet. The reliable arm is always eager, so its input
+    * is still read once.
     */
-  def leafDf(df: DataFrame): (DataFrame, () => Unit) = {
+  def leafDf(df: DataFrame, eager: Boolean = true): (DataFrame, () => Unit) = {
     val s = df.sparkSession
     if (s.conf.get(ReliableArtifactsConf, "false").toBoolean) reliableLeaf(df)
     else {
-      val chk = df.localCheckpoint(eager = true)
+      val chk = df.localCheckpoint(eager)
       val release = () => chk.queryExecution.analyzed match {
         case l: org.apache.spark.sql.execution.LogicalRDD =>
           l.rdd.unpersist(blocking = true); ()
@@ -136,9 +145,16 @@ object Artifacts {
     * ([[graft.operators.Similarity.writeIvfIndex]], the production form).
     * Sets a JVM-temp checkpoint dir if the session has none (local runs;
     * a cluster deployment points spark.checkpoint.dir at shared storage).
+    * RDD checkpoints write through the context's Hadoop conf, not the
+    * session's, so [[GraftSession.localFileSystemConfs]] the context lacks
+    * are set there first: `file:` checkpoint files then fork no `chmod`.
     */
   private def reliableLeaf(df: DataFrame): (DataFrame, () => Unit) = {
     val s = df.sparkSession
+    val hadoopConf = s.sparkContext.hadoopConfiguration
+    GraftSession.localFileSystemConfs.foreach { case (k, v) =>
+      if (hadoopConf.get(k) == null) hadoopConf.set(k, v)
+    }
     if (s.sparkContext.getCheckpointDir.isEmpty)
       s.sparkContext.setCheckpointDir(java.nio.file.Files
         .createTempDirectory("graft_reliable_chk").toString)

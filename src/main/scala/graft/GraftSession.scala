@@ -30,6 +30,13 @@ object GraftSession {
       .config(confs)
       .getOrCreate())
 
+  /** `fs.file.impl` = [[graft.io.NioLocalFileSystem]], uncached: the
+    * Hadoop confs under which `file:` writes fork no `chmod`.
+    */
+  val localFileSystemConfs: Seq[(String, String)] = Seq(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   /** Gives `spark` what it lacks of the following; idempotent. It runs at
     * the end of [[apply]], in every [[GraftQuery]]'s `fn` before the plan
     * is built, and in the [[graft.io.DelimitedWriter]] sinks.
@@ -48,9 +55,7 @@ object GraftSession {
     GraftExtensions.registerMissing(spark)
     val localDefault =
       FileSystem.getDefaultUri(spark.sessionState.newHadoopConf()).getScheme == "file"
-    val confs = Seq(
-      "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
-      "fs.file.impl.disable.cache" -> "true") ++
+    val confs = localFileSystemConfs ++
       Option.when(localDefault)("spark.sql.streaming.checkpointFileManagerClass" ->
         classOf[FileSystemBasedCheckpointFileManager].getName)
     confs.foreach { case (k, v) => if (spark.conf.getOption(k).isEmpty) spark.conf.set(k, v) }

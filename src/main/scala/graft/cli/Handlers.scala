@@ -17,8 +17,9 @@ import graft.schema.AllocRegistry
   *    report lines (A19,
   *    reference/Sources/Handlers/DetectHandler.swift:24-36)
   *
-  * Resolution and report formatting are driver-side (registry logic over
-  * a bounded prefix); decode and export execute distributed.
+  * Sniffing, resolution and report formatting are driver-side (registry
+  * logic over a bounded prefix read without a Spark job); decode and
+  * export execute distributed, in the export's job.
   */
 object Handlers {
 
@@ -27,21 +28,22 @@ object Handlers {
       schema: String,
       /** reference-parity export bytes (header + rows, driver-side) */
       output: String,
-      /** typed good rows (a projection of the decoded leaf, for at-scale sinks) */
+      /** typed good rows (a selection of the decoded leaf, for at-scale sinks) */
       good: DataFrame,
       /** reject channel: raw columns + first-failing-field reason */
       rejects: DataFrame,
       /** frees the decoded leaf behind `good` and `rejects` */
       release: () => Unit)
 
-  /** Sniff, resolve, then decode the input ONCE: [[Decoder.decode]]
-    * parses it over ordered size-aware splits into one leaf, eagerly, in
-    * this call. `output` is rendered from that leaf, and `good`/`rejects`
-    * are returned as projections of it, so further sinks read the same
-    * parse without rescanning the file. Every call parses its input anew;
-    * nothing is shared across calls. The caller frees the leaf with
-    * `release` when done with both frames (Spark's ContextCleaner frees it
-    * once they are dropped otherwise).
+  /** Sniff on the driver, resolve, then decode the input ONCE in one
+    * Spark job: rendering `output` is the first action on
+    * [[Decoder.decode]]'s lazy leaf, so that job parses the input over
+    * ordered size-aware splits, stores the typed leaf and renders from it.
+    * `good`/`rejects` are returned as selections of the leaf, so further
+    * sinks read the same parse without rescanning the file. Every call
+    * parses its input anew; nothing is shared across calls. The caller
+    * frees the leaf with `release` when done with both frames (Spark's
+    * ContextCleaner frees it once they are dropped otherwise).
     */
   @throws[FinError]
   def handleTransform(spark: SparkSession,

@@ -4,10 +4,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapreduce.{InputSplit, Job, JobContext, MRJobConfig}
+import org.apache.hadoop.mapreduce.{InputSplit, Job, JobContext, MRJobConfig, TaskAttemptID}
 import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit, TextInputFormat}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.rdd.NewHadoopRDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,17 +28,21 @@ import graft.schema.{EntitySpec, FieldKind, FieldSpec}
   *    row order is file order.
   *  - [[decode]] tags every raw row with `__reason` (a coalesce of
   *    per-field checks in declared field order, so the first failing field
-  *    wins, mirroring the reference's first-error-per-row behavior) and
-  *    materializes that tagged frame EAGERLY, at call time, as one
-  *    checkpointed leaf ([[graft.Artifacts.leafDf]]). `good` and `rejects`
-  *    are narrow projections of the leaf, so the CSV, JSONL and reject
-  *    sinks all read the one parse instead of rescanning the file.
+  *    wins, mirroring the reference's first-error-per-row behavior), types
+  *    it once, and declares that frame one lazy checkpointed leaf
+  *    ([[graft.Artifacts.leafDf]] with `eager = false`). It starts no job:
+  *    the first sink's job parses, tags, types and stores the leaf, and
+  *    the later sinks read its blocks. `good` and `rejects` are column
+  *    selections of the leaf, so the CSV, JSONL and reject sinks all read
+  *    the one parse and none of them casts again. (With
+  *    [[graft.Artifacts.ReliableArtifactsConf]] on, the leaf's files are
+  *    written in the call, as that arm is always eager.)
   *  - The leaf belongs to its call: it is never registered in
   *    [[graft.Artifacts]] or keyed by path, and a second call on the same
-  *    path reads and parses the input again. The caller frees it with
-  *    [[DecodeResult.release]] once done with both frames; Spark's
-  *    ContextCleaner frees the blocks of a leaf whose frames were dropped
-  *    without it.
+  *    path reads and parses the input again at its first sink. The caller
+  *    frees it with [[DecodeResult.release]] once done with both frames;
+  *    Spark's ContextCleaner frees the blocks of a leaf whose frames were
+  *    dropped without it.
   * Nothing is collected and nothing is thrown for bad rows.
   * Date-only sources are enriched with a default time-of-day and zone into
   * UTC timestamps (defTimeOfDay/timeZone decode params,
@@ -49,8 +54,8 @@ import graft.schema.{EntitySpec, FieldKind, FieldSpec}
   */
 object Decoder {
 
-  /** Typed good rows and raw rejects (+ `reason`), both projections of one
-    * materialized leaf; `release` drops that leaf's blocks or files (the
+  /** Typed good rows and raw rejects (+ `reason`), both selections of one
+    * checkpointed leaf; `release` drops that leaf's blocks or files (the
     * frames are unusable afterwards).
     */
   final case class DecodeResult(good: DataFrame, rejects: DataFrame,
@@ -74,18 +79,12 @@ object Decoder {
   def readRaw(spark: SparkSession, path: String, spec: EntitySpec,
       delimiter: String = ","): DataFrame = {
     val sc = spark.sparkContext
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    FileInputFormat.setInputPaths(job, new Path(path))
-    FileInputFormat.setMaxInputSplitSize(job,
-      spark.sessionState.conf.filesMaxPartitionBytes)
-    job.getConfiguration.setInt(MRJobConfig.NUM_MAPS, sc.defaultParallelism)
+    val job = OrderedTextInputFormat.job(spark, path)
     val lines = new NewHadoopRDD(sc, classOf[OrderedTextInputFormat],
         classOf[LongWritable], classOf[Text], job.getConfiguration)
       .setName(path)
       .mapPartitionsWithInputSplit { (split, records) =>
-        val text = records.map { case (_, t) =>
-          new String(t.getBytes, 0, t.getLength, UTF_8)
-        }
+        val text = records.map { case (_, t) => OrderedTextInputFormat.string(t) }
         if (split.asInstanceOf[FileSplit].getStart != 0) text
         else {
           val body = text.dropWhile(_.trim.isEmpty)
@@ -153,20 +152,29 @@ object Decoder {
     }
   }
 
-  /** Split a raw DataFrame into (typed good rows, raw rejects + reason):
-    * tags and materializes `raw` once, now, as the result's leaf. The leaf
-    * carries no size estimate, so a join that must broadcast a decoded
-    * side says so with a hint.
+  /** Split a raw DataFrame into (typed good rows, raw rejects + reason)
+    * over one leaf holding `__reason`, the typed columns, and for each
+    * typed field its raw string on reject rows only (`__raw_<name>`;
+    * string fields are their own raw form). No job starts here: the first
+    * action on either frame parses, types and stores the leaf, and later
+    * ones read its blocks. The leaf carries no size estimate, so a join
+    * that must broadcast a decoded side says so with a hint.
     */
   def decode(raw: DataFrame, spec: EntitySpec,
       defTimeOfDay: String = "13:00",
       zone: String = "America/New_York"): DecodeResult = {
-    val typed = decodedCols(spec, defTimeOfDay, zone)
-    val (tagged, release) =
-      Artifacts.leafDf(raw.withColumn("__reason", reasonCol(spec)))
-    val good = tagged.where(col("__reason").isNull).select(typed: _*)
-    val rejects = tagged.where(col("__reason").isNotNull)
-      .select(spec.fields.map(f => col(f.name)) :+ col("__reason").as("reason"): _*)
+    val reason = col("__reason")
+    val typedFields = spec.fields.filter(_.kind != FieldKind.Str)
+    def rawOf(f: FieldSpec) = s"__raw_${f.name}"
+    val (leaf, release) = Artifacts.leafDf(
+      raw.withColumn("__reason", reasonCol(spec)).select(
+        (reason +: decodedCols(spec, defTimeOfDay, zone)) ++
+          typedFields.map(f => when(reason.isNotNull, col(f.name)).as(rawOf(f))): _*),
+      eager = false)
+    val good = leaf.where(reason.isNull).select(spec.fields.map(f => col(f.name)): _*)
+    val rejects = leaf.where(reason.isNotNull).select(spec.fields.map { f =>
+      if (f.kind == FieldKind.Str) col(f.name) else col(rawOf(f)).as(f.name)
+    } :+ reason.as("reason"): _*)
     DecodeResult(good, rejects, release)
   }
 
@@ -225,9 +233,13 @@ class OrderedTextInputFormat extends TextInputFormat {
 
   private def ceilDiv(a: Long, b: Long): Long = if (a == 0) 0 else (a - 1) / b + 1
 
-  override def getSplits(job: JobContext): java.util.List[InputSplit] = {
-    val files = listStatus(job).asScala.toSeq
+  /** The input's files in read order: sorted by path, empty ones skipped. */
+  def orderedFiles(job: JobContext): Seq[FileStatus] =
+    listStatus(job).asScala.toSeq
       .filter(f => f.isFile && f.getLen > 0).sortBy(_.getPath.toString)
+
+  override def getSplits(job: JobContext): java.util.List[InputSplit] = {
+    val files = orderedFiles(job)
     val bytes = files.map(_.getLen).sum
     val ranges = math.max(
       job.getConfiguration.getInt(MRJobConfig.NUM_MAPS, 1).toLong,
@@ -242,5 +254,45 @@ class OrderedTextInputFormat extends TextInputFormat {
           Array.empty[String]): InputSplit
       }
     }.asJava
+  }
+}
+
+object OrderedTextInputFormat {
+
+  /** A job reading `path` (a file, a directory of files or a glob) on the
+    * session's Hadoop conf, split for the session's cores and
+    * `spark.sql.files.maxPartitionBytes`.
+    */
+  def job(spark: SparkSession, path: String): Job = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    FileInputFormat.setInputPaths(job, new Path(path))
+    FileInputFormat.setMaxInputSplitSize(job,
+      spark.sessionState.conf.filesMaxPartitionBytes)
+    job.getConfiguration.setInt(MRJobConfig.NUM_MAPS,
+      spark.sparkContext.defaultParallelism)
+    job
+  }
+
+  /** One line record as a string (Hadoop reuses the `Text`). */
+  def string(t: Text): String = new String(t.getBytes, 0, t.getLength, UTF_8)
+
+  /** The first `n` lines of the first non-empty file of `path` in read
+    * order, read on the calling thread by the same `LineRecordReader` as
+    * [[Decoder.readRaw]] (codecs, CR, LF and CRLF alike), with blank lines
+    * kept. Starts no Spark job; an input with no bytes gives no lines.
+    */
+  def headLines(spark: SparkSession, path: String, n: Int): Seq[String] = {
+    val j = job(spark, path)
+    val format = new OrderedTextInputFormat
+    format.orderedFiles(j).headOption.fold(Seq.empty[String]) { f =>
+      val split = new FileSplit(f.getPath, 0, f.getLen, Array.empty[String])
+      val ctx = new TaskAttemptContextImpl(j.getConfiguration, new TaskAttemptID())
+      val reader = format.createRecordReader(split, ctx)
+      try {
+        reader.initialize(split, ctx)
+        Iterator.continually(reader.nextKeyValue()).takeWhile(identity).take(n)
+          .map(_ => string(reader.getCurrentValue)).toList
+      } finally reader.close()
+    }
   }
 }

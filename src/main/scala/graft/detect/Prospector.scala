@@ -2,13 +2,14 @@ package graft.detect
 
 import org.apache.spark.sql.SparkSession
 
+import graft.decode.OrderedTextInputFormat
 import graft.schema.{AllocRegistry, EntitySpec}
 
 /** Format/schema detection and importer resolution — the reference's
   * prospect/resolve front end (A3-A5), driver-side by design: detection
-  * reads a bounded prefix (`limit(N)` text scan — LimitPushDown keeps the
-  * read bounded no matter how large the file), and resolution is pure
-  * registry logic with the reference's exactly-one rules
+  * reads the first N lines of the input on the driver, with no Spark job
+  * ([[Prospector.sniffPrefix]]), and resolution is pure registry logic
+  * with the reference's exactly-one rules
   * (reference/Sources/Handlers/TransformHandler.swift:57-108,
   * reference/Sources/Core/FINprospector.swift:33-60).
   */
@@ -109,12 +110,14 @@ final class Prospector(val importers: Seq[Importer]) {
     }.toMap
   }
 
-  /** Bounded prefix sniff: a `limit(n)` text scan — never reads the whole
-    * file (the reference's dataPrefix bound, FINporter.swift:35).
+  /** Bounded prefix sniff (the reference's dataPrefix bound,
+    * FINporter.swift:35): the first `maxLines` lines, blank ones kept, of
+    * the first non-empty file in [[graft.decode.Decoder.readRaw]]'s path
+    * order, read on the driver by readRaw's line reader. Starts no Spark
+    * job and reads only the start of that file; an empty input gives "".
     */
   def sniffPrefix(spark: SparkSession, path: String, maxLines: Int = 8): String =
-    spark.read.text(path).limit(maxLines).collect()
-      .map(_.getString(0)).mkString("\n")
+    OrderedTextInputFormat.headLines(spark, path, maxLines).mkString("\n")
 
   /** The exactly-one resolution rules (getPair,
     * TransformHandler.swift:57-108): explicit importer id else exactly one

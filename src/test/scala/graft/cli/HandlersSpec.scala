@@ -1,7 +1,10 @@
 package graft.cli
 
 import graft.SparkSuite
-import graft.detect.{AllocFormat, FinError}
+import graft.decode.Decoder
+import graft.detect.{AllocFormat, FinError, Prospector}
+import graft.io.DelimitedWriter
+import graft.schema.AllocRegistry
 
 /** End-to-end pipeline contract over the committed fixtures (EP1/EP2). */
 class HandlersSpec extends SparkSuite {
@@ -48,6 +51,39 @@ class HandlersSpec extends SparkSuite {
     val r = Handlers.handleTransform(spark, tsv.toString)
     assert(r.good.count() == 2 && r.rejects.count() == 0)
     assert(r.output.contains("buy,2021-03-01T18:00:00Z,ACC-1,BND,,100.0,85.62,,"))
+  }
+
+  // ---- job census: sniff on the driver, decode in the first export's job ----
+
+  // relative to the project root, the forked test JVM's working directory
+  private val txnFixture = "fixtures/mtransaction.csv"
+
+  private def assertJobs(expected: Int)(body: => Unit): Unit = {
+    val (_, jobs) = jobsDuring(body)
+    assert(jobs.size == expected, s"jobs started: ${jobs.mkString(", ")}")
+  }
+
+  test("handleDetect starts no Spark job") {
+    assertJobs(0) { assert(Handlers.handleDetect(spark, txnFixture) == Seq("transaction: CSV")) }
+  }
+
+  test("handleTransform starts one Spark job: its export's") {
+    assertJobs(1) { Handlers.handleTransform(spark, txnFixture).release() }
+  }
+
+  test("sniff, decode, a CSV export and two JSONL exports start three Spark jobs") {
+    val out = tempDir("graft_job_census")
+    assertJobs(3) {
+      val p = Prospector.default
+      val prefix = p.sniffPrefix(spark, txnFixture)
+      val (_, schema) = p.resolve(prefix)
+      val spec = AllocRegistry.entities(schema)
+      val decoded = Decoder.decode(Decoder.readRaw(spark, txnFixture, spec), spec)
+      DelimitedWriter.writeDelimited(decoded.good, s"$out/csv")
+      DelimitedWriter.writeJson(decoded.good, s"$out/jsonl")
+      DelimitedWriter.writeJson(decoded.rejects, s"$out/rejects")
+      decoded.release()
+    }
   }
 
   test("handleTransform surfaces resolution errors") {

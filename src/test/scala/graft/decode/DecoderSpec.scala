@@ -7,8 +7,6 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.SpanSugar._
 
 import graft.SparkSuite
 import graft.io.DelimitedWriter
@@ -259,18 +257,32 @@ class DecoderSpec extends SparkSuite {
   // relative to the project root, the forked test JVM's working directory
   private val txnFixture = "fixtures/mtransaction.csv"
 
-  test("good and rejects are projections of one checkpointed leaf, with no CSV scan") {
-    val res = Decoder.decode(Decoder.readRaw(spark, txnFixture, spec), spec)
+  /** The checkpointed RDD of the one leaf both frames read; fails on a
+    * file-source relation or a second leaf.
+    */
+  private def leafOf(res: Decoder.DecodeResult): org.apache.spark.rdd.RDD[_] = {
     val leaves = Seq(res.good, res.rejects).map { df =>
       val plan = df.queryExecution.optimizedPlan
       assert(plan.collect { case r: LogicalRelation => r }.isEmpty, plan.toString)
       val rdds = plan.collect { case l: LogicalRDD => l.rdd }
       assert(rdds.size == 1, plan.toString)
-      assert(rdds.head.isCheckpointed)
-      rdds.head.id
+      rdds.head
     }
-    assert(leaves.distinct.size == 1)
-    res.release()
+    assert(leaves.map(_.id).distinct.size == 1)
+    leaves.head
+  }
+
+  test("decode starts no job; after the first sink both frames read one checkpointed leaf") {
+    withScans(txnFixture) { scans =>
+      val (res, jobs) =
+        jobsDuring(Decoder.decode(Decoder.readRaw(spark, txnFixture, spec), spec))
+      assert(jobs.isEmpty, jobs.toString)
+      assert(scans.scans.isEmpty)
+      assert(!leafOf(res).isCheckpointed)
+      DelimitedWriter.writeDelimited(res.good, tempDir("graft_decode_leaf").resolve("csv").toString)
+      assert(leafOf(res).isCheckpointed)
+      res.release()
+    }
   }
 
   /** Input bytes of the completed stages that scan `path` (its read RDD
@@ -284,23 +296,82 @@ class DecoderSpec extends SparkSuite {
       }
   }
 
-  test("writing good and rejects reads the input once; a second decode reads it again") {
-    val path = txnFixture
-    val fileBytes = Files.size(java.nio.file.Paths.get(path))
+  /** Decodes `path`, writes the CSV, JSONL and reject sinks, frees the
+    * leaf, and returns the number of input scans `scans` has seen; `first`
+    * runs on the result before the sinks.
+    */
+  private def decodeAndSink(path: String, scans: InputScans)(
+      first: Decoder.DecodeResult => Unit = _ => ()): Int = {
     val out = tempDir("graft_decode_once").toString
+    val res = Decoder.decode(Decoder.readRaw(spark, path, spec), spec)
+    first(res)
+    DelimitedWriter.writeDelimited(res.good, s"$out/csv")
+    DelimitedWriter.writeJson(res.good, s"$out/jsonl")
+    DelimitedWriter.writeJson(res.rejects, s"$out/rejects")
+    res.release()
+    jobsDuring(()) // every stage before the fence has been reported
+    scans.scans.size
+  }
+
+  private def withScans[T](path: String)(body: InputScans => T): T = {
     val scans = new InputScans(path)
     spark.sparkContext.addSparkListener(scans)
-    try {
-      val res = Decoder.decode(Decoder.readRaw(spark, path, spec), spec)
-      DelimitedWriter.writeDelimited(res.good, s"$out/csv")
-      DelimitedWriter.writeJson(res.good, s"$out/jsonl")
-      DelimitedWriter.writeJson(res.rejects, s"$out/rejects")
-      eventually(timeout(10.seconds)) { assert(scans.scans.size == 1) }
+    try body(scans) finally spark.sparkContext.removeSparkListener(scans)
+  }
+
+  test("the three sinks read the input once; a second decode and its sinks read it again") {
+    val fileBytes = Files.size(java.nio.file.Paths.get(txnFixture))
+    withScans(txnFixture) { scans =>
+      assert(decodeAndSink(txnFixture, scans)() == 1)
       assert(scans.scans.head >= fileBytes)
-      res.release()
-      Decoder.decode(Decoder.readRaw(spark, path, spec), spec).release()
-      eventually(timeout(10.seconds)) { assert(scans.scans.size == 2) }
+      assert(decodeAndSink(txnFixture, scans)() == 2)
       assert(scans.scans(1) >= fileBytes)
-    } finally spark.sparkContext.removeSparkListener(scans)
+    }
+  }
+
+  test("a take as the first action still fills the whole leaf for the sinks") {
+    withScans(txnFixture) { scans =>
+      var leaf: org.apache.spark.rdd.RDD[_] = null
+      decodeAndSink(txnFixture, scans) { res =>
+        assert(res.good.take(1).length == 1)
+        leaf = leafOf(res)
+        assert(leaf.isCheckpointed)
+      }
+      assert(leaf.getNumPartitions > 1)
+      // the take and doCheckpoint's job for the partitions it skipped
+      // read every byte range once; the three sinks read none
+      assert(scans.scans.sum >= Files.size(java.nio.file.Paths.get(txnFixture)))
+      assert(scans.scans.size <= leaf.getNumPartitions)
+    }
+  }
+
+  test("with reliable artifacts the leaf is eager and the sinks still read the input once") {
+    withConf(graft.Artifacts.ReliableArtifactsConf, "true") {
+      withScans(txnFixture) { scans =>
+        val total = decodeAndSink(txnFixture, scans) { _ =>
+          jobsDuring(())
+          assert(scans.scans.size == 1) // the checkpoint's own job, in decode
+        }
+        assert(total == 1)
+      }
+    }
+  }
+
+  test("good and rejects keep their names, types and nullability for every entity") {
+    val path = tmpCsv("")
+    for (spec <- AllocRegistry.entities.values) {
+      val raw = Decoder.readRaw(spark, path, spec)
+      // the frames as plain projections of the tagged raw rows, no leaf
+      val tagged = raw.withColumn("__reason", Decoder.reasonCol(spec))
+      val good = tagged.where(col("__reason").isNull)
+        .select(Decoder.decodedCols(spec, "13:00", "America/New_York"): _*)
+      val rejects = tagged.where(col("__reason").isNotNull)
+        .select(spec.fields.map(f => col(f.name)) :+ col("__reason").as("reason"): _*)
+      val res = Decoder.decode(raw, spec)
+      assert(res.good.schema == good.schema, spec.entity)
+      assert(res.rejects.schema == rejects.schema, spec.entity)
+      assert(res.good.columns.toSeq == spec.fields.map(_.name))
+      res.release()
+    }
   }
 }

@@ -1,6 +1,8 @@
 package graft.detect
 
 import graft.SparkSuite
+import graft.decode.Decoder
+import graft.schema.AllocRegistry
 
 /** Contract tests for detection/prospect/resolution and the error
   * taxonomy (A3-A5/A17,
@@ -33,6 +35,53 @@ class ProspectorSpec extends SparkSuite {
     val hits = p.prospect(prefix)
     assert(hits.keySet.map(_.id) == Set("alloc_asset"))
     assert(hits.values.head == Map("asset" -> Seq(AllocFormat.CSV)))
+  }
+
+  // ---- the driver-side sniff against Spark's text source ----
+
+  private def textSourceHead(path: String): String =
+    spark.read.text(path).limit(8).collect().map(_.getString(0)).mkString("\n")
+
+  private def write(path: java.nio.file.Path, body: String): String = {
+    java.nio.file.Files.writeString(path, body)
+    path.toString
+  }
+
+  private val header = AllocRegistry.transaction.fields.map(_.name).mkString(",")
+  private val rows = (1 to 12).map(i => s"buy,2021-03-${"%02d".format(i)},ACC-$i,BND,,$i,85.62,,")
+
+  test("sniffPrefix gives the text source's first 8 lines") {
+    val dir = tempDir("graft_sniff")
+    val gz = dir.resolve("txn.csv.gz")
+    val gzOut = new java.util.zip.GZIPOutputStream(java.nio.file.Files.newOutputStream(gz))
+    try gzOut.write((header +: rows).mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally gzOut.close()
+    val fixtures = Option(new java.io.File("fixtures").listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".csv")).map(_.getPath).sorted
+    assert(fixtures.size >= 2)
+    val inputs = fixtures ++ Seq(
+      write(dir.resolve("crlf.csv"), (header +: rows).mkString("", "\r\n", "\r\n")),
+      write(dir.resolve("blank.csv"), ("" +: "  " +: "" +: header +: rows).mkString("\n")),
+      gz.toString,
+      write(dir.resolve("empty.csv"), ""))
+    val p = Prospector.default
+    for (in <- inputs) assert(p.sniffPrefix(spark, in) == textSourceHead(in), in)
+    assert(p.sniffPrefix(spark, gz.toString) == (header +: rows.take(7)).mkString("\n"))
+    assert(p.sniffPrefix(spark, dir.resolve("empty.csv").toString) == "")
+  }
+
+  test("sniffPrefix of a directory reads its first file in path order, as readRaw does") {
+    val dir = tempDir("graft_sniff_dir")
+    // b.csv is the larger file, so the text source's size-ordered packing
+    // reads it first; readRaw and the sniff read a.csv first
+    write(dir.resolve("a.csv"), (header +: rows.take(2)).mkString("", "\n", "\n"))
+    write(dir.resolve("b.csv"), (header +: rows.drop(2)).mkString("", "\n", "\n"))
+    write(dir.resolve("_SUCCESS"), "")
+    val (prefix, jobs) = jobsDuring(Prospector.default.sniffPrefix(spark, dir.toString))
+    assert(prefix == (header +: rows.take(2)).mkString("\n"))
+    assert(jobs.isEmpty)
+    val spec = AllocRegistry.transaction
+    assert(Decoder.readRaw(spark, dir.toString, spec).head().getString(2) == "ACC-1")
   }
 
   test("unrecognized prefix raises sourceFormatNotRecognized") {

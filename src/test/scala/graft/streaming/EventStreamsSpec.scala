@@ -816,4 +816,17 @@ class EventStreamsSpec extends SparkSuite {
     assert(spark.read.text(s"$out/csv").count() == 12)
     assert(spark.read.text(s"$out/rejects").count() == 4)
   }
+
+  test("a decode into reliable checkpoint files starts no process") {
+    // RDD checkpoints write through the context's Hadoop conf, which the
+    // installed session confs do not reach
+    val spec = graft.schema.AllocRegistry.transaction
+    val session = spark.newSession()
+    session.conf.set(graft.Artifacts.ReliableArtifactsConf, "true")
+    assertNoProcessFrom("ReliableCheckpointRDD", "setCheckpointDir") {
+      val decoded = graft.decode.Decoder.decode(graft.decode.Decoder.readRaw(
+        session, "fixtures/mtransaction.csv", spec), spec)
+      try assert(decoded.good.count() == 12) finally decoded.release()
+    }
+  }
 }
