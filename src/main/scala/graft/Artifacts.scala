@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-lifetime artifact registry with EXPLICIT release.
@@ -21,6 +22,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * submission races a lazy persist and re-runs its build once per
   * consuming stage. (Only a per-call leaf whose first consumer is a
   * single sink job, the decoder's, is lazy.)
+  *
+  * Placement and lifetime of every written store ([[writtenDir]]): one
+  * fresh directory per (session, key) under the context's checkpoint dir,
+  * which is `spark.checkpoint.dir` where the deployment sets it (storage
+  * a cluster can reach) and otherwise one directory inside the driver
+  * scratch dir (`SparkFiles.getRootDirectory`) that Spark deletes at
+  * context stop and JVM exit. [[release]] deletes each store; nothing
+  * here writes to `java.io.tmpdir`.
   *
   * Assumptions (documented, test-pinned in ArtifactsSpec):
   *  - artifact inputs are immutable per (session, dir) — re-deriving after
@@ -143,32 +152,55 @@ object Artifacts {
     * FILES, so executor churn cannot lose it — the halfway point between
     * an in-memory leaf and a full table write
     * ([[graft.operators.Similarity.writeIvfIndex]], the production form).
-    * Sets a JVM-temp checkpoint dir if the session has none (local runs;
-    * a cluster deployment points spark.checkpoint.dir at shared storage).
-    * RDD checkpoints write through the context's Hadoop conf, not the
-    * session's, so [[GraftSession.localFileSystemConfs]] the context lacks
-    * are set there first: `file:` checkpoint files then fork no `chmod`.
+    * The files go under [[checkpointDir]].
     */
   private def reliableLeaf(df: DataFrame): (DataFrame, () => Unit) = {
     val s = df.sparkSession
-    val hadoopConf = s.sparkContext.hadoopConfiguration
-    GraftSession.localFileSystemConfs.foreach { case (k, v) =>
-      if (hadoopConf.get(k) == null) hadoopConf.set(k, v)
-    }
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(java.nio.file.Files
-        .createTempDirectory("graft_reliable_chk").toString)
+    checkpointDir(s)
     val chk = df.checkpoint(eager = true)
     val release = () => chk.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-        }
+        l.rdd.getCheckpointFile.foreach(delete(s, _))
       case _ => ()
     }
     (chk, release)
+  }
+
+  /** A WRITTEN store: `write` fills a fresh directory under
+    * [[checkpointDir]] at most once per (session, key), and [[release]]
+    * deletes that directory. Returns the directory, which `write` need
+    * not create.
+    */
+  def writtenDir(s: SparkSession, key: String)(write: String => Unit): String =
+    cached[String](s, key) {
+      val dir = s"${checkpointDir(s)}/graft_${key.takeWhile(_ != ':')}_" +
+        java.util.UUID.randomUUID
+      write(dir)
+      (dir, () => delete(s, dir))
+    }
+
+  /** The context's checkpoint dir, set on first use to one directory
+    * inside the driver scratch dir when the deployment left
+    * `spark.checkpoint.dir` unset. RDD checkpoints, the dir's `mkdirs`
+    * and [[delete]] go through the context's Hadoop conf, not the
+    * session's, so [[GraftSession.localFileSystemConfs]] the context
+    * lacks are set there first: `file:` paths then fork no `chmod`.
+    */
+  private def checkpointDir(s: SparkSession): String = {
+    val sc = s.sparkContext
+    GraftSession.localFileSystemConfs.foreach { case (k, v) =>
+      if (sc.hadoopConfiguration.get(k) == null) sc.hadoopConfiguration.set(k, v)
+    }
+    if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(
+      new java.io.File(SparkFiles.getRootDirectory(), "graft_checkpoints").getPath)
+    sc.getCheckpointDir.get
+  }
+
+  /** Recursively deletes `path` through the Hadoop `FileSystem`. */
+  private def delete(s: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
   }
 
   /** Release every artifact registered for `s`: run each release hook

@@ -227,7 +227,7 @@ object Bench {
       // The warmup pass exists for JIT + codegen + parquet-footer
       // caching, but it also builds EVERY session artifact keyed to
       // warmDir (trained indexes, minhash signatures, postings,
-      // broadcast blocklists, written-index temp dirs) — none of which
+      // broadcast blocklists, written-index stores) — none of which
       // the timed pass can reuse (artifacts are keyed by (session,
       // dir)). Left in place they sit as dead executor storage and
       // broadcast handles under the whole timed suite — measured as

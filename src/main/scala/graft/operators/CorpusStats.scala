@@ -623,9 +623,8 @@ object CorpusStats {
     * process answers any query batch from these files alone.
     */
   private[operators] def writtenBm25Index(s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"written_bm25:$d") {
+    graft.Artifacts.writtenDir(s, s"written_bm25:$d") { base =>
       val (postings, dl, stats) = bm25Index(s, d)
-      val base = java.nio.file.Files.createTempDirectory("graft_bm25_index")
       postings.repartitionByRange(8, col("term"))
         .sortWithinPartitions("term")
         .write.mode("overwrite").parquet(s"$base/postings")
@@ -633,9 +632,6 @@ object CorpusStats {
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite").parquet(s"$base/lengths")
       stats.write.mode("overwrite").parquet(s"$base/stats")
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
     }
 
   /** q122: COLD-START BM25 serving — q90's retrieval answered reading
@@ -684,8 +680,7 @@ object CorpusStats {
     * document text.
     */
   private[operators] def versionedBm25(s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"bm25_versions:$d") {
-      val base = java.nio.file.Files.createTempDirectory("graft_bm25_versions")
+    graft.Artifacts.writtenDir(s, s"bm25_versions:$d") { base =>
       val docs = Tables.documents(s, d)
       def writeSeg(part: DataFrame, seg: String): Unit = {
         part.select(col("doc_id"),
@@ -720,9 +715,6 @@ object CorpusStats {
           (3, "segment", "segments/compacted")))
         .toDF("version", "kind", "path")
         .coalesce(1).write.mode("overwrite").parquet(s"$base/manifest")
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
     }
 
   /** Resolve a BM25 snapshot version into serving frames: postings and

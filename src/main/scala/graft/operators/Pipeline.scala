@@ -731,16 +731,12 @@ object Pipeline {
     */
   private[operators] def writtenChunkStore(
       s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"chunkStore:$d") {
-      val base = java.nio.file.Files.createTempDirectory("graft_chunk_store")
+    graft.Artifacts.writtenDir(s, s"chunkStore:$d") { base =>
       cdcChunks(Tables.documents(s, d).where(col("doc_id") % 4 =!= 0))
         .select(col("chunk_fp")).distinct()
         .repartitionByRange(4, col("chunk_fp"))
         .sortWithinPartitions("chunk_fp")
         .write.mode("overwrite").parquet(s"$base/fingerprints")
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
     }
 
   /** q129: COLD-START ingest dedup — an arriving document shard is CDC-
@@ -837,9 +833,8 @@ object Pipeline {
     * base, so the per-segment probe stays a sorted one-column scan).
     */
   private[graft] def versionedChunkStore(s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"chunkStoreVersions:$d") {
+    graft.Artifacts.writtenDir(s, s"chunkStoreVersions:$d") { base =>
       val baseSeg = s"${writtenChunkStore(s, d)}/fingerprints"
-      val base = java.nio.file.Files.createTempDirectory("graft_chunk_versions")
       cdcChunks(Tables.documents(s, d).where(col("doc_id") % 4 === 0))
         .select(col("chunk_fp")).distinct()
         .join(s.read.parquet(baseSeg), Seq("chunk_fp"), "left_anti")
@@ -884,10 +879,12 @@ object Pipeline {
         (v, k, if (lbl == "fingerprints") baseSeg else s"segments/$lbl")
       }).toDF("version", "kind", "path")
       mf.coalesce(1).write.mode("overwrite").parquet(s"$base/manifest")
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
     }
+
+  /** A chunk-store manifest path: absolute (qualified or not) as it is,
+    * relative under the store dir `base`. */
+  private def storePath(base: String, p: String): String =
+    if (new org.apache.hadoop.fs.Path(p).isAbsolute) p else s"$base/$p"
 
   /** Resolve a chunk-store snapshot version from its manifest into the
     * union of segment fingerprint frames (metadata-sized read, like
@@ -903,8 +900,7 @@ object Pipeline {
     val segs = rows.collect { case ("segment", p) => p }
     val tombs = rows.collect { case ("tombstone", p) => p }
     require(segs.nonEmpty, s"no chunk-store segments for version $version")
-    def read(p: String) =
-      s.read.parquet(if (p.startsWith("/")) p else s"$base/$p")
+    def read(p: String) = s.read.parquet(storePath(base, p))
     val live = segs.map(read).reduce(_.unionByName(_))
     // tombstones mask at serve time (broadcast anti: the tombstone side
     // is erased-docs-sized, never store-sized); compaction removes them
@@ -1125,8 +1121,7 @@ object Pipeline {
     // same contract as chunkStoreResolve; one pruned count per file
     val paths = mf.select("path").distinct().collect().map(_.getString(0))
     val counts = paths.toSeq.map { p =>
-      val abs = if (p.startsWith("/")) p else s"$base/$p"
-      (p, s.read.parquet(abs).count())
+      (p, s.read.parquet(storePath(base, p)).count())
     }
     mf.groupBy("path", "kind")
       .agg(min(col("version")).as("first_version"),
@@ -1200,14 +1195,10 @@ object Pipeline {
     * once per (session, dir); release deletes the files.
     */
   private[operators] def writtenDigestStore(s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"digestStore:$d") {
-      val base = java.nio.file.Files.createTempDirectory("graft_digest_store")
+    graft.Artifacts.writtenDir(s, s"digestStore:$d") { base =>
       digestOf(Tables.documents(s, d).where(col("doc_id") % 4 =!= 0))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$base/state")
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
     }
 
   /** q253: INCREMENTAL digest maintenance — q137's IVM invariant applied
@@ -1242,8 +1233,7 @@ object Pipeline {
     * Built once per (session, dir); release deletes the files.
     */
   private[operators] def evolvedLayout(s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"evolvedLayout:$d") {
-      val base = java.nio.file.Files.createTempDirectory("graft_evolved")
+    graft.Artifacts.writtenDir(s, s"evolvedLayout:$d") { base =>
       val docs = Tables.documents(s, d)
       docs.where(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"), col("source"))
@@ -1251,9 +1241,6 @@ object Pipeline {
       docs.where(col("doc_id") % 2 === 1)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .write.mode("overwrite").parquet(s"$base/gen2")
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
     }
 
   /** q165: SCHEMA-EVOLUTION read — one query over both file generations
@@ -1471,38 +1458,37 @@ object Pipeline {
     * scale; 8 keeps the fixture readable).
     *
     * Built once per (session, dir) through [[graft.Artifacts]]: external
-    * datasource tables (explicit path under a temp dir, in-memory
-    * catalog), released by DROP TABLE + recursive delete. Table names
-    * carry a dir hash so warmup (sf0.001) and timed (sf0.1) corpora in
-    * one session never alias each other's catalog entries.
+    * datasource tables (explicit path under an [[graft.Artifacts.writtenDir]]
+    * store, in-memory catalog), released by DROP TABLE and the store's
+    * delete. Table names carry a dir hash so warmup (sf0.001) and timed
+    * (sf0.1) corpora in one session never alias each other's catalog
+    * entries.
     */
   private val BucketedN = 8
   private[operators] def bucketedTables(
       s: SparkSession, d: String): (String, String) =
     graft.Artifacts.cached[(String, String)](s, s"bucketedTables:$d") {
-      // MD5 of the absolute path (the stagedWithFlush discipline): a
+      // MD5 of the absolute path (as the stream stagings key theirs): a
       // 32-bit hashCode collision between two corpus dirs in one session
       // would alias the catalog tables and serve the wrong corpus.
       val suffix = java.security.MessageDigest.getInstance("MD5")
         .digest(new java.io.File(d).getAbsolutePath.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString.take(16)
       val (docsT, embsT) = (s"graft_docs_b_$suffix", s"graft_embs_b_$suffix")
-      val dir = java.nio.file.Files.createTempDirectory("graft_bucketed")
-      Tables.documents(s, d).write.mode("overwrite")
-        .bucketBy(BucketedN, "doc_id").sortBy("doc_id")
-        .option("path", s"$dir/docs").saveAsTable(docsT)
-      Tables.embeddings(s, d).select("vec_id", "label")
-        .write.mode("overwrite")
-        .bucketBy(BucketedN, "vec_id").sortBy("vec_id")
-        .option("path", s"$dir/embs").saveAsTable(embsT)
-      val rel = () => {
+      graft.Artifacts.writtenDir(s, s"bucketedFiles:$d") { dir =>
+        Tables.documents(s, d).write.mode("overwrite")
+          .bucketBy(BucketedN, "doc_id").sortBy("doc_id")
+          .option("path", s"$dir/docs").saveAsTable(docsT)
+        Tables.embeddings(s, d).select("vec_id", "label")
+          .write.mode("overwrite")
+          .bucketBy(BucketedN, "vec_id").sortBy("vec_id")
+          .option("path", s"$dir/embs").saveAsTable(embsT)
+      }
+      ((docsT, embsT), () => {
         s.sql(s"DROP TABLE IF EXISTS $docsT")
         s.sql(s"DROP TABLE IF EXISTS $embsT")
-        val p = new org.apache.hadoop.fs.Path(dir.toString)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         ()
-      }
-      ((docsT, embsT), rel)
+      })
     }
 
   /** q125: exchange-free co-located join over the bucketed layout —
@@ -1608,8 +1594,7 @@ object Pipeline {
     * ~boxes worth of data and touching the whole corpus.
     */
   private[operators] def writtenZLayout(s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"zLayout:$d") {
-      val base = java.nio.file.Files.createTempDirectory("graft_zorder")
+    graft.Artifacts.writtenDir(s, s"zLayout:$d") { base =>
       Tables.documents(s, d)
         .withColumn("src_idx",
           substring(col("source"), 4, 8).cast("int"))
@@ -1618,9 +1603,6 @@ object Pipeline {
         .repartitionByRange(16, col("z"))
         .sortWithinPartitions("z")
         .write.mode("overwrite").parquet(s"$base/z")
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
     }
 
   /** q138: 2-dimensional box query served from the Z-ordered layout —

@@ -1368,21 +1368,18 @@ object Similarity {
       .parquet(s"$outDir/pq_residual_codebooks")
   }
 
-  /** The complete written serving artifact as a session-memoized temp
-    * directory: [[writeIvfIndex]] under `<base>/index` plus
-    * [[writeIndexSidecar]] tables under `<base>` — one write shared by
-    * every cold-start consumer in the session (Verify + Bench warmup and
-    * timed runs), deleted by `Artifacts.release`. Each session writes its
-    * own directory, so concurrent sessions never clobber each other.
+  /** The complete written serving artifact as a session-memoized
+    * [[graft.Artifacts.writtenDir]] store: [[writeIvfIndex]] under
+    * `<base>/index` plus [[writeIndexSidecar]] tables under `<base>` —
+    * one write shared by every cold-start consumer in the session
+    * (Verify + Bench warmup and timed runs), deleted by
+    * `Artifacts.release`. Each session writes its own directory, so
+    * concurrent sessions never clobber each other.
     */
   private[operators] def writtenIndex(s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"written_index:$d") {
-      val base = java.nio.file.Files.createTempDirectory("graft_served_index")
-      writeIvfIndex(s, d, base.toString + "/index")
-      writeIndexSidecar(s, d, base.toString)
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
+    graft.Artifacts.writtenDir(s, s"written_index:$d") { base =>
+      writeIvfIndex(s, d, base + "/index")
+      writeIndexSidecar(s, d, base)
     }
 
   private val kmOracleTrain: String =
@@ -3823,19 +3820,15 @@ object Similarity {
     * Session-memoized like [[writtenIndex]]; released with the registry.
     */
   private[operators] def compactedIndex(s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"compacted_index:$d") {
+    graft.Artifacts.writtenDir(s, s"compacted_index:$d") { base =>
       val src = writtenIndex(s, d)
-      val base = java.nio.file.Files.createTempDirectory("graft_compacted_index")
       val idx = s.read.parquet(s"$src/index")
       val tomb = idx.select("vec_id").where(tombstoned(col("vec_id")))
       idx.join(broadcast(tomb), Seq("vec_id"), "left_anti")
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(base.toString + "/index")
+        .parquet(base + "/index")
       s.read.parquet(s"$src/coarse_centroids").write.mode("overwrite")
-        .parquet(base.toString + "/coarse_centroids")
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
+        .parquet(base + "/coarse_centroids")
     }
 
   /** q114: serving from the COMPACTED index — the last stage of the
@@ -4115,9 +4108,8 @@ object Similarity {
     * probed-cell pruning works per segment.
     */
   private[graft] def versionedIndex(s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"versioned_index:$d") {
+    graft.Artifacts.writtenDir(s, s"versioned_index:$d") { base =>
       val src = writtenIndex(s, d)
-      val base = java.nio.file.Files.createTempDirectory("graft_versioned_index")
       val idx = s.read.parquet(s"$src/index")
       idx.where(shardBucket(col("vec_id")) < 8)
         .write.mode("overwrite").partitionBy("cell")
@@ -4136,9 +4128,6 @@ object Similarity {
         (3, "delete", "deletes/d1")))
         .toDF("version", "kind", "path")
       mf.coalesce(1).write.mode("overwrite").parquet(s"$base/manifest")
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
     }
 
   /** Serve a QUERY at a snapshot version: resolve the manifest (a

@@ -298,8 +298,7 @@ object Temporal {
     * contract as the chunk-fingerprint and vector-index stores.
     */
   private[operators] def writtenAggState(s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"ivmAggState:$d") {
-      val base = java.nio.file.Files.createTempDirectory("graft_ivm_state")
+    graft.Artifacts.writtenDir(s, s"ivmAggState:$d") { base =>
       Tables.events(s, d)
         .where(col("ts") < timestamp_micros(lit(IvmCutUs)))
         .select(col("user_id"), col("event_type"),
@@ -310,9 +309,6 @@ object Temporal {
           min(col("us")).as("first_us"), max(col("us")).as("last_us"))
         .repartition(4, col("user_id"))
         .write.mode("overwrite").parquet(s"$base/state")
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
     }
 
   /** q137: incremental view maintenance — refresh a per-(user, type)
@@ -374,8 +370,7 @@ object Temporal {
     * (≤ 5·3 rows), not history length.
     */
   private[operators] def writtenJoinState(s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"ivmJoinState:$d") {
-      val base = java.nio.file.Files.createTempDirectory("graft_ivm_join_state")
+    graft.Artifacts.writtenDir(s, s"ivmJoinState:$d") { base =>
       Tables.lineitem(s, d)
         .where(col("l_shipdate") < lit(IvmJoinCut).cast("timestamp"))
         .join(Tables.orders(s, d),
@@ -386,9 +381,6 @@ object Temporal {
             + " * (100 - CAST(round(l_discount * 100) AS BIGINT))")).as("rev_u"))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$base/state")
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
     }
 
   /** q170: incremental JOIN-view maintenance — q137's discipline lifted
@@ -1375,8 +1367,7 @@ object Temporal {
     * did. Cached per (session, dir); cleaned with the registry.
     */
   private[operators] def writtenScd2State(s: SparkSession, d: String): String =
-    graft.Artifacts.cached[String](s, s"scd2State:$d") {
-      val base = java.nio.file.Files.createTempDirectory("graft_scd2_state")
+    graft.Artifacts.writtenDir(s, s"scd2State:$d") { base =>
       val w = Window.partitionBy("user_id").orderBy("t_us", "event_id")
       Tables.events(s, d)
         .where(col("ts") < timestamp_micros(lit(IvmCutUs)))
@@ -1390,9 +1381,6 @@ object Temporal {
           col("to_us"))
         .repartition(4, col("user_id"))
         .write.mode("overwrite").parquet(s"$base/dim")
-      (base.toString, () => {
-        org.apache.commons.io.FileUtils.deleteDirectory(base.toFile); ()
-      })
     }
 
   /** q220: SCD2 incremental UPSERT — apply a day's delta of events to

@@ -23,7 +23,9 @@ object EventStreams {
 
   /** Stage a single parquet FILE as a directory a file-stream source will
     * accept (shared by every table's streaming reader; at scale tables
-    * are directories already and this is a no-op).
+    * are directories already and this is a no-op). The staging lives in
+    * the driver scratch dir (`SparkFiles.getRootDirectory`), which Spark
+    * deletes at context stop without following the link.
     *
     * STALENESS CONTRACT (the class behind the r15 flush-gate bug): this
     * staging is keyed on the source PATH only, which is safe if and only
@@ -35,7 +37,7 @@ object EventStreams {
     * copying the file, resolving the symlink to a versioned target, or
     * keying consumers on the first-read content. If this staging ever
     * needs to materialize content, switch the key to part-file identity
-    * + footer hash like [[StreamingQueries.stagedWithFlush]] does.
+    * + footer hash like [[StreamingQueries.stagedWithSentinel]] does.
     */
   private def stageAsDir(src: java.io.File, prefix: String): String =
     if (!src.isFile) src.getPath
@@ -46,7 +48,7 @@ object EventStreams {
       val digest = java.security.MessageDigest.getInstance("MD5")
         .digest(src.getAbsolutePath.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString
-      val staged = new java.io.File(System.getProperty("java.io.tmpdir"),
+      val staged = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(),
         s"${prefix}_$digest")
       staged.mkdirs()
       val link = new java.io.File(staged, src.getName)

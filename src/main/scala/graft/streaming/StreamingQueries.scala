@@ -63,10 +63,12 @@ object StreamingQueries {
   }
 
   /** Stage the parquet `src` (file or directory) plus the one-row
-    * `sentinel` into a stream-source directory under java.io.tmpdir:
-    * symlinks to the source's part files beside `sentinel.parquet`.
-    * Idempotent per source CONTENT, marked complete by a `_STAGED` file,
-    * so repeated runs (warmup + timed, Verify + Bench) reuse one staging.
+    * `sentinel` into a stream-source directory in the driver scratch dir
+    * (`SparkFiles.getRootDirectory`, deleted at context stop without
+    * following links): symlinks to the source's part files beside
+    * `sentinel.parquet`. Idempotent per source CONTENT, marked complete
+    * by a `_STAGED` file, so repeated runs in one context (warmup +
+    * timed) reuse one staging; each new context stages afresh.
     *
     * The key digests the part-file IDENTITY (name, size, mtime, footer
     * bytes), not just the source path: a source directory REWRITTEN in
@@ -104,28 +106,10 @@ object StreamingQueries {
       files.map(f =>
         s"${f.getName}:${f.length}:${f.lastModified}:${footerHash(f)}"))
       .mkString("|")
-    val staged = new java.io.File(System.getProperty("java.io.tmpdir"),
+    val staged = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(),
       s"${prefix}_${md5(identity.getBytes("UTF-8"))}")
     val marker = new java.io.File(staged, "_STAGED")
     if (!marker.exists()) {
-      // a fresh key means prior content-keyed stagings under this prefix
-      // are abandoned garbage; sweep AGED siblings (marker older than
-      // 24 h) so rewrite-heavy hosts don't accumulate them indefinitely.
-      // The age bound keeps a concurrently-running session's freshly
-      // staged sibling (a DIFFERENT corpus dir, e.g. Verify at another
-      // sf) untouched — best-effort, failures ignored.
-      val cutoff = System.currentTimeMillis - 24L * 3600 * 1000
-      Option(staged.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f != staged
-          && f.getName.startsWith(s"${prefix}_"))
-        .filter { f =>
-          val m = new java.io.File(f, "_STAGED")
-          m.exists() && m.lastModified < cutoff
-        }
-        .foreach { f =>
-          try org.apache.commons.io.FileUtils.deleteDirectory(f)
-          catch { case _: java.io.IOException => () }
-        }
       staged.mkdirs()
       files.zipWithIndex.foreach { case (f, i) =>
         val link = new java.io.File(staged, s"orig_$i.parquet")

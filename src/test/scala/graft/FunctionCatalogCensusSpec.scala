@@ -13,8 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `RegistrationCensusSpec`: a registration call or an undeclared name is
   * visible in the source before any query happens to run it. The same
   * scan keeps test scratch space on `SparkSuite.tempDir`, the one helper
-  * that deletes what it makes, and sessions on [[GraftSession]], the one
-  * builder and the one place that picks the checkpoint file manager.
+  * that deletes what it makes, main's stores on [[Artifacts]], the one
+  * place that places and deletes them, and sessions on [[GraftSession]],
+  * the one builder and the one place that picks the checkpoint file
+  * manager.
   */
 class FunctionCatalogCensusSpec extends AnyFunSuite {
 
@@ -64,6 +66,16 @@ class FunctionCatalogCensusSpec extends AnyFunSuite {
   test("main names the checkpoint file manager conf once") {
     val named = matching("src/main/scala", "checkpointFileManagerClass".r)
     assert(named.size == 1 && named.head.contains("GraftSession.scala"), named.mkString("\n"))
+  }
+
+  test("no main source outside Artifacts makes or deletes a scratch directory") {
+    // Bench's shard record is a file its parent process reads and
+    // deletes, not a store
+    val offenders = matching("src/main/scala",
+      """createTemp(Directory|File)|java\.io\.tmpdir|FileUtils\.deleteDirectory""".r,
+      "Artifacts.scala").filterNot(_.contains("\"graft_bench_shard\""))
+    assert(offenders.isEmpty,
+      s"place stores through Artifacts.writtenDir instead:\n${offenders.mkString("\n")}")
   }
 
   test("no test source outside SparkTestBase makes a bare temp dir or file") {

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import graft.{Artifacts, SparkSuite}
 import graft.functions.BloomFilterFunctions
 
@@ -199,5 +201,81 @@ class ArtifactsSpec extends SparkSuite {
       assert(labels.contains("caller"), s"the serving jobs lost the caller's label: $labels")
     } finally sc.setLocalProperty("spark.job.description", caller)
     Artifacts.release(spark)
+  }
+
+  test("every written store lives under the checkpoint dir until release deletes it") {
+    Artifacts.release(spark)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def exists(dir: String) = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(conf).exists(p)
+    }
+    val (docsT, embsT) = Pipeline.bucketedTables(spark, dir)
+    val tableDirs = Seq(docsT, embsT).map(t => spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t)).location.toString)
+    val stores = Seq(
+      Similarity.writtenIndex(spark, dir), Similarity.compactedIndex(spark, dir),
+      Similarity.versionedIndex(spark, dir),
+      CorpusStats.writtenBm25Index(spark, dir), CorpusStats.versionedBm25(spark, dir),
+      Temporal.writtenAggState(spark, dir), Temporal.writtenJoinState(spark, dir),
+      Temporal.writtenScd2State(spark, dir),
+      Pipeline.writtenChunkStore(spark, dir), Pipeline.versionedChunkStore(spark, dir),
+      Pipeline.writtenDigestStore(spark, dir), Pipeline.evolvedLayout(spark, dir),
+      Pipeline.writtenZLayout(spark, dir)) ++ tableDirs
+    val chk = spark.sparkContext.getCheckpointDir
+    assert(chk.isDefined, "a written store left the checkpoint dir unset")
+    stores.foreach { d =>
+      assert(d.startsWith(chk.get + "/"), s"$d is not under ${chk.get}")
+      assert(exists(d), s"$d was not written")
+    }
+    assert(stores.distinct.size == stores.size, stores)
+
+    Artifacts.release(spark)
+    assert(stores.forall(!exists(_)), s"release left ${stores.filter(exists)}")
+    assert(!spark.catalog.tableExists(docsT) && !spark.catalog.tableExists(embsT))
+
+    val rebuilt = Pipeline.writtenDigestStore(spark, dir)
+    assert(exists(rebuilt) && !stores.contains(rebuilt),
+      s"the rebuild reused a released directory: $rebuilt")
+    Artifacts.release(spark)
+  }
+
+  test("a finished run leaves no graft scratch entry and follows no link") {
+    // a child JVM whose java.io.tmpdir and spark.local.dir are one fresh
+    // directory runs a bucketed layout, two written stores and three stream
+    // stagings (links into the test data), then stops its context
+    val scratch = tempDir("lifecycle_scratch")
+    val out = tempDir("lifecycle_out")
+    def filesUnder(root: java.nio.file.Path) = {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator.asScala.toVector finally s.close()
+    }
+    val sources = filesUnder(java.nio.file.Paths.get(dir))
+      .filter(java.nio.file.Files.isRegularFile(_))
+    assert(sources.nonEmpty)
+    val queries = Seq("q125_bucketed_join", "q129_cold_ingest_dedup", "q253_digest_ivm",
+      "q284_stream_compaction_plan", "q47_stream_tumbling")
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++
+      org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray() ++
+      Seq("-Xmx1g", s"-Djava.io.tmpdir=$scratch", s"-Dspark.local.dir=$scratch",
+        "-Dspark.sql.session.timeZone=UTC",
+        "-cp", System.getProperty("java.class.path"), "graft.Verify", dir, s"$out/verify") ++
+      queries
+    val pb = new ProcessBuilder(cmd.asJava)
+    // SPARK_LOCAL_DIRS would override spark.local.dir
+    pb.environment().remove("SPARK_LOCAL_DIRS")
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    pb.redirectErrorStream(true).redirectOutput(out.resolve("child.log").toFile)
+    val child = pb.start()
+    if (!child.waitFor(150, java.util.concurrent.TimeUnit.SECONDS)) {
+      child.destroyForcibly()
+      fail("graft.Verify did not finish in 150 s")
+    }
+    assert(child.exitValue == 0, s"graft.Verify failed; see ${out.resolve("child.log")}")
+    queries.foreach(q => assert(java.nio.file.Files.isDirectory(out.resolve(s"verify/$q")), q))
+    val left = filesUnder(scratch).filter(_.getFileName.toString.startsWith("graft_"))
+    assert(left.isEmpty, s"the run left ${left.mkString(", ")}")
+    val gone = sources.filterNot(java.nio.file.Files.exists(_))
+    assert(gone.isEmpty, s"a staging link was followed: ${gone.mkString(", ")} deleted")
   }
 }

@@ -17,8 +17,7 @@ class LayoutSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def boxFiles(layout: String): (Int, Int) = {
-    val files = new java.io.File(layout).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted
+    val files = spark.read.parquet(layout).inputFiles.sorted
     val hit = files.count { f =>
       val r = spark.read.parquet(f)
         .agg(min("src_idx"), max("src_idx"), min("n_chars"), max("n_chars"))

@@ -757,7 +757,8 @@ class PlanSpec extends SparkSuite {
 
   test("q170 join-view refresh reads the state artifact and prunes pre-cut lineitem") {
     val p = plan("q170_ivm_join_refresh")
-    assert(p.contains("graft_ivm_join_state"), s"state artifact not read:\n$p")
+    assert(p.contains(s"${Temporal.writtenJoinState(spark, dir)}/state"),
+      s"state artifact not read:\n$p")
     // the delta cut reaches the 100 TB-side scan as a pushed predicate,
     // so a refresh never re-reads folded-history row groups
     assert(p.contains("GreaterThanOrEqual(l_shipdate"),
@@ -766,7 +767,8 @@ class PlanSpec extends SparkSuite {
 
   test("q220 SCD2 upsert reads the written dimension and prunes pre-cut events") {
     val p = plan("q220_scd2_upsert")
-    assert(p.contains("graft_scd2_state"), s"dimension artifact not read:\n$p")
+    assert(p.contains(s"${Temporal.writtenScd2State(spark, dir)}/dim"),
+      s"dimension artifact not read:\n$p")
     // every events scan in the refresh is the DELTA read — the cut
     // reaches the scan as a pushed predicate, so folded history row
     // groups are never re-read
@@ -855,7 +857,8 @@ class PlanSpec extends SparkSuite {
   test("q137 refresh reads the state artifact and prunes history at the scan") {
     val p = plan("q137_ivm_refresh")
     // the merge's state side comes from the written artifact files…
-    assert(p.contains("graft_ivm_state"), s"state artifact not read:\n$p")
+    assert(p.contains(s"${Temporal.writtenAggState(spark, dir)}/state"),
+      s"state artifact not read:\n$p")
     // …and the delta side's cut reaches the events scan as a pushed
     // filter, so a refresh never re-reads pre-cut history row groups
     assert(p.contains("GreaterThanOrEqual(ts"),
